@@ -33,17 +33,23 @@ import scala.jdk.CollectionConverters._
   *
   * Validation mirrors the Pydantic contract (`routes.py:27-51`): a
   * malformed body — invalid JSON, empty/missing question, top_k outside
-  * [1, 20] or non-integral, malformed chat_history — is 422
+  * [1, 20] or non-integral, malformed chat_history, a filter naming an
+  * unknown field or comparing it with a wrongly typed operand — is 422
   * `{detail}` (FastAPI's RequestValidationError status), not 400.
   * Unknown paths → 404; wrong method on a known path → 405; handler
   * exceptions → 500 `{detail}` (the reference's error contract).
   * Request bodies are capped at [[GraftHttpServer.MaxBodyBytes]] → 413.
   *
   * Serving is driver-side by design, like every query engine's
-  * coordinator endpoint: a request fans out to the cluster as a Spark
-  * job and only the ≤ top_k result rows pass through this process.
-  * Handlers run on a small fixed thread pool, so a long-running query
-  * cannot block `/health`; Spark's scheduler serializes the actual jobs.
+  * coordinator endpoint: a request fans out to the cluster as one Spark
+  * job over the index's materialized live snapshot and only the ≤ top_k
+  * result rows pass through this process. The snapshot is rebuilt on
+  * the first request after the log changes — an upload here, which
+  * writes through its own index handle, or any other writer — so the
+  * requests between writes skip the log's listing, footers and dedup
+  * shuffle. Handlers run on a small fixed thread pool, so a
+  * long-running query cannot block `/health`; Spark's scheduler
+  * serializes the actual jobs.
   */
 final class GraftHttpServer(api: GraftApi, uploadDir: String, port: Int = 0) {
   import GraftHttpServer.MaxBodyBytes

@@ -127,16 +127,17 @@ final class VectorCatalog(spark: SparkSession, root: String) {
   def stats(name: String): Option[IndexStats] = get(name).map { m =>
     val p = new Path(dataPath(name))
     val hasData = fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    val n =
-      if (!hasData) 0L
-      else {
-        // live count: the merge-on-read log keeps superseded versions per
-        // id until compaction, so count distinct ids, not raw rows.
-        val df = spark.read.parquet(dataPath(name))
-        if (df.columns.contains("id")) df.select("id").distinct().count()
-        else df.count()
-      }
-    IndexStats(n, m.dimension)
+    IndexStats(if (hasData) countLive(name) else 0L, m.dimension)
+  }
+
+  /** Live count of an index with data: the merge-on-read log keeps
+    * superseded versions per id until compaction, so count distinct ids,
+    * not raw rows.
+    */
+  private[catalog] def countLive(name: String): Long = {
+    val df = spark.read.parquet(dataPath(name))
+    if (df.columns.contains("id")) df.select("id").distinct().count()
+    else df.count()
   }
 
   /** Ingest-side resolution (`ingest_documents.py:175-195`): if `base`

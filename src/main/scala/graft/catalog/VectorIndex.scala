@@ -1,7 +1,6 @@
 package graft.catalog
 
-import graft.operators.Knn
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,10 +10,27 @@ import org.apache.spark.sql.functions._
   * (`pinecone_service.py:148-182`).
   *
   * Write path is merge-on-read: each upsert appends a new `_version`
-  * batch; reads keep the newest row per id via a window. `compact()`
+  * batch; [[readAt]] keeps the newest row per id via a window. `compact()`
   * rewrites to a single deduped version. At scale this is the standard
   * log-structured layout (append cheap + periodic compaction), and the
   * dedup window shuffles only on `id` — AQE-coalesced and skew-safe.
+  *
+  * Read path is a live snapshot: [[read]], [[knn]] and [[stats]] serve
+  * the deduped live view materialized once per state of the log, keyed
+  * by a fingerprint of its part files (sorted name + length, one
+  * directory listing). Any writer — this handle, another handle on the
+  * same path, streaming ingest, [[compact]] — changes the listing, so
+  * the next read rebuilds; between writes a query is a single job over
+  * the snapshot with no listing of its own, no footer reads and no
+  * dedup shuffle. The snapshot is a `localCheckpoint`, not a `persist`:
+  * a persisted plan would register with Spark's `CacheManager`, which
+  * hands it to any later reader of the same plan (stale rows) and never
+  * frees it when the handle is dropped; the checkpoint's blocks are
+  * freed by the `ContextCleaner` once the snapshot is unreachable. The
+  * trade at scale: a local checkpoint has no lineage, so losing an
+  * executor that holds snapshot blocks fails the queries over it until
+  * it is rebuilt — [[knn]] drops a snapshot whose query failed, so the
+  * next call rebuilds from the log.
   */
 final class VectorIndex(
     spark: SparkSession,
@@ -116,55 +132,97 @@ final class VectorIndex(
           }
         }
       val dataMax =
-        if (markerMax >= 0L || !hasData) markerMax
+        if (markerMax >= 0L || liveFiles().isEmpty) markerMax
         else spark.read.parquet(path).agg(max("_version")).head().getLong(0)
       lastVersion = math.max(markerMax, dataMax)
     }
     fs.mkdirs(markersDir)
     var candidate = math.max(lastVersion + 1L, System.currentTimeMillis())
-    while (!fs.createNewFile(
+    while (!VectorIndex.createExclusive(fs,
         new org.apache.hadoop.fs.Path(markersDir, s"_v$candidate.commit")))
       candidate += 1L
     lastVersion = candidate
     candidate
   }
 
-  private def hasData: Boolean = {
+
+  /** The log's live part files as sorted `(name, length)` — the
+    * fingerprint of its state. Staging dirs and `_commits` are hidden
+    * and never match; a dir moved aside mid-[[compact]] lists as empty.
+    */
+  private def liveFiles(): Seq[(String, Long)] = {
     val p  = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      st.getPath.getName.endsWith(".parquet") || st.getPath.getName.startsWith("part-")
-    }
+    val fs = fileSystem
+    try
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map(st => st.getPath.getName -> st.getLen).sorted
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
-  /** Live view: newest version per id. */
-  def read: DataFrame = readAt(Long.MaxValue)
+  /** One state of the log: its fingerprint, the live view materialized
+    * on first use, and the live-id count computed on first use. The
+    * count runs its own distinct-id aggregate rather than forcing the
+    * snapshot, so a writer polling [[stats]] never pays for a build.
+    */
+  private final class Snapshot(val files: Seq[(String, Long)]) {
+    lazy val frame: DataFrame =
+      if (files.isEmpty) emptyLike()
+      else merged(Long.MaxValue).localCheckpoint(eager = true)
+    lazy val liveCount: Long =
+      if (files.isEmpty) 0L else catalog.countLive(meta.name)
+  }
+
+  private var cached: Snapshot = _
+
+  /** The snapshot for the log as listed now. The listing comes BEFORE
+    * any read, so a write landing mid-build is picked up early (and
+    * rebuilt over on the next call), never missed. A query already
+    * running keeps its reference to the snapshot it started with.
+    */
+  private def snapshot(): Snapshot = synchronized {
+    val files = liveFiles()
+    if (cached == null || cached.files != files) cached = new Snapshot(files)
+    cached
+  }
+
+  private def drop(s: Snapshot): Unit = synchronized {
+    if (cached eq s) cached = null
+  }
+
+  /** Live view: newest version per id, as the materialized snapshot of
+    * the log's current state (rebuilt only when the log has changed).
+    */
+  def read: DataFrame = snapshot().frame
 
   /** Point-in-time view: newest version per id among upsert batches with
     * `_version <= asOf` — the merge-on-read log IS a history, so time
     * travel is one filter pushed below the same dedup window (parquet
     * row groups whose `_version` min exceeds `asOf` are skipped by their
-    * footer stats). [[versions]] lists the valid as-of points. NOTE
+    * footer stats). Lazy: each action re-reads the log. [[versions]]
+    * lists the valid as-of points. NOTE
     * [[compact]] rewrites the log to a single version 0 and therefore
     * TRUNCATES history — the standard retention trade (Delta/Iceberg
     * vacuum semantics): compact when the audit window has passed.
     */
   def readAt(asOf: Long): DataFrame =
-    if (!hasData) emptyLike()
-    else {
-      val w = Window.partitionBy("id").orderBy(col("_version").desc)
-      spark.read.parquet(path)
-        .filter(col("_version") <= asOf)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .drop("_rn", "_version")
-    }
+    if (liveFiles().isEmpty) emptyLike() else merged(asOf)
+
+  private def merged(asOf: Long): DataFrame = {
+    val w = Window.partitionBy("id").orderBy(col("_version").desc)
+    spark.read.parquet(path)
+      .filter(col("_version") <= asOf)
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_rn", "_version")
+  }
 
   /** The distinct upsert-batch versions present in the log, ascending —
     * the valid [[readAt]] points. Bounded by batch count, not rows.
     */
   def versions: Seq[Long] =
-    if (!hasData) Seq.empty
+    if (liveFiles().isEmpty) Seq.empty
     else spark.read.parquet(path).select("_version").distinct()
       .orderBy("_version").collect().map(_.getLong(0)).toSeq
 
@@ -197,9 +255,9 @@ final class VectorIndex(
     // to _version = 0 — it seeds the synthesized marker for marker-less
     // legacy logs
     val maxVersion =
-      if (hasData) spark.read.parquet(path).agg(max("_version")).head().getLong(0)
+      if (liveFiles().nonEmpty) spark.read.parquet(path).agg(max("_version")).head().getLong(0)
       else 0L
-    val deduped = read.withColumn("_version", lit(0L))
+    val deduped = readAt(Long.MaxValue).withColumn("_version", lit(0L))
     val tmp     = s"$path._compact"
     deduped.write.mode("overwrite").parquet(tmp)
     val conf  = spark.sparkContext.hadoopConfiguration
@@ -227,21 +285,58 @@ final class VectorIndex(
 
   /** Top-k cosine query with optional metadata filter — the reference's
     * `index.query(vector, top_k, filter)` (`pinecone_service.py:148-182`).
+    * Scores the live snapshot in one job and returns the ≤ k rows as a
+    * local frame. A filter naming a column the index lacks, or comparing
+    * a column with an operand of the wrong type, is the caller's error:
+    * `IllegalArgumentException`, not Spark's `AnalysisException`.
     */
   def knn(queryVec: Seq[Float], k: Int, filter: Option[Column] = None): DataFrame = {
     require(queryVec.length == meta.dimension,
       s"query dimension ${queryVec.length} != index dimension ${meta.dimension}")
-    val base   = filter.map(read.filter).getOrElse(read)
-    val scored = base.withColumn("score",
-      round(graft.functions.VectorFunctions.cosineSimilarity(
-        col("embedding"), typedlit(queryVec)), 6))
-    scored.orderBy(col("score").desc, col("id")).limit(k)
+    val snap = snapshot()
+    try {
+      val live = snap.frame
+      val base = filter.fold(live) { f =>
+        try live.filter(f)
+        catch {
+          case e: AnalysisException =>
+            throw new IllegalArgumentException(s"invalid filter: ${e.getMessage}", e)
+        }
+      }
+      val topK = base.withColumn("score",
+          round(graft.functions.VectorFunctions.cosineSimilarity(
+            col("embedding"), typedlit(queryVec)), 6))
+        .orderBy(col("score").desc, col("id")).limit(k)
+      spark.createDataFrame(java.util.Arrays.asList(topK.collect(): _*), topK.schema)
+    } catch {
+      case e: IllegalArgumentException => throw e
+      case e: Exception => drop(snap); throw e
+    }
   }
 
-  def stats: IndexStats = catalog.stats(meta.name).get
+  /** `{total_vector_count, dimension}`: the live-id count, memoized for
+    * the log's current state.
+    */
+  def stats: IndexStats = IndexStats(snapshot().liveCount, meta.dimension)
 }
 
 object VectorIndex {
+  /** Atomic create-exclusive: true for exactly one of several racing
+    * creators. Hadoop's `createNewFile` is exists-then-create, which on
+    * the local filesystem two writers can both win (both then stage the
+    * same version, and one's overwrite deletes the other's files); there
+    * NIO's `createFile` (`O_CREAT | O_EXCL`) decides. On HDFS
+    * `createNewFile` is already atomic.
+    */
+  private[graft] def createExclusive(
+      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): Boolean =
+    if (fs.getScheme != "file") fs.createNewFile(p)
+    else
+      try {
+        java.nio.file.Files.createFile(java.nio.file.Paths.get(fs.makeQualified(p).toUri))
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+
   /** Create-or-connect (`pinecone_service.py:33-68`). */
   def createOrConnect(
       spark: SparkSession, catalog: VectorCatalog, meta: IndexMeta): VectorIndex =

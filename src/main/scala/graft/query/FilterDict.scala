@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   *  - boolean composition: `{"$and": [f1, f2]}`, `{"$or": [f1, f2]}`
   *  - multiple keys in one map AND together (Pinecone semantics)
   *
-  * The output is a plain predicate, so Catalyst pushes it into the
-  * parquet scan before KNN scoring — same pushdown the reference gets
-  * from Pinecone's engine.
+  * The output is a plain predicate. [[graft.catalog.VectorIndex.knn]]
+  * applies it over the index's materialized live snapshot before
+  * scoring, and resolves it against the snapshot's schema there: an
+  * unknown field or a wrongly typed operand is an
+  * `IllegalArgumentException` (a 422 over HTTP).
   */
 object FilterDict {
 
@@ -33,19 +35,28 @@ object FilterDict {
       value match {
         case ops: Map[_, _] =>
           ops.asInstanceOf[Map[String, Any]].map {
-            case ("$eq", v)  => col(field) === lit(v)
-            case ("$ne", v)  => col(field) =!= lit(v)
-            case ("$gt", v)  => col(field) > lit(v)
-            case ("$gte", v) => col(field) >= lit(v)
-            case ("$lt", v)  => col(field) < lit(v)
-            case ("$lte", v) => col(field) <= lit(v)
+            case ("$eq", v)  => col(field) === scalar(v, "$eq")
+            case ("$ne", v)  => col(field) =!= scalar(v, "$ne")
+            case ("$gt", v)  => col(field) > scalar(v, "$gt")
+            case ("$gte", v) => col(field) >= scalar(v, "$gte")
+            case ("$lt", v)  => col(field) < scalar(v, "$lt")
+            case ("$lte", v) => col(field) <= scalar(v, "$lte")
             case ("$in", vs) => col(field).isin(values(vs, "$in"): _*)
             case ("$nin", vs) => !col(field).isin(values(vs, "$nin"): _*)
             case (op, _) =>
               throw new IllegalArgumentException(s"unsupported filter operator $op")
           }.reduce(_ && _)
-        case v => col(field) === lit(v)
+        case v => col(field) === scalar(v, field)
       }
+  }
+
+  /** Operands are scalars (Pinecone: string, number, boolean); a list
+    * or object where a scalar belongs is the caller's error.
+    */
+  private def scalar(v: Any, op: String): Column = v match {
+    case _: Seq[_] | _: Map[_, _] =>
+      throw new IllegalArgumentException(s"$op expects a string, number or boolean, got $v")
+    case x => lit(x)
   }
 
   private def subFilters(value: Any, op: String): Seq[Map[String, Any]] =
@@ -59,8 +70,8 @@ object FilterDict {
       case _ => throw new IllegalArgumentException(s"$op expects a non-empty list")
     }
 
-  private def values(vs: Any, op: String): Seq[Any] = vs match {
-    case s: Seq[_] if s.nonEmpty => s
+  private def values(vs: Any, op: String): Seq[Column] = vs match {
+    case s: Seq[_] if s.nonEmpty => s.map(scalar(_, op))
     case _ => throw new IllegalArgumentException(s"$op expects a non-empty list")
   }
 }

@@ -42,8 +42,9 @@ final case class RagAnswer(
 )
 
 /** End-to-end RAG engine (reference `app/rag/chain.py:71-154` +
-  * `app/rag/retriever.py:35-95`), Spark-first: retrieval is a single
-  * lazy plan (scan → filter → cosine → TakeOrderedAndProject(k)); only
+  * `app/rag/retriever.py:35-95`), Spark-first: retrieval is one job over
+  * the index's materialized live snapshot (filter → cosine →
+  * TakeOrderedAndProject(k)), see [[graft.catalog.VectorIndex]]; only
   * the ≤20 result rows ever reach the driver.
   */
 final class Rag(
@@ -88,26 +89,21 @@ final class Rag(
       poolSize: Int = 50, lambda: Double = 0.5): Seq[RetrievedDoc] = {
     require(topK >= 1 && topK <= 20, "top_k must be in [1, 20]")
     val qvec = embedder.embedOne(question).toSeq
-    // cache the snapshot: both the MMR pool scan and the <=k metadata
-    // fetch read it, and index.read repeats a full scan + version-dedup
-    // window shuffle per action otherwise
-    val snap = index.read.persist()
-    try {
-      val picked = graft.operators.Knn
-        .mmrRerank(snap, "id", "embedding", qvec, topK, poolSize, lambda)
-        .collect()
-        .map(r => (r.getAs[String]("id"), r.getAs[Double]("score"),
-          r.getAs[Int]("rank")))
-      if (picked.isEmpty) return Seq.empty
-      val meta = snap
-        .filter(org.apache.spark.sql.functions.col("id")
-          .isin(picked.map(_._1).toSeq: _*))
-        .collect()
-        .map(r => r.getAs[String]("id") -> r).toMap
-      picked.sortBy(_._3).toSeq.map { case (id, score, _) =>
-        rowToDoc(meta(id), id, score)
-      }
-    } finally { snap.unpersist(); () }
+    val snap = index.read
+    val picked = graft.operators.Knn
+      .mmrRerank(snap, "id", "embedding", qvec, topK, poolSize, lambda)
+      .collect()
+      .map(r => (r.getAs[String]("id"), r.getAs[Double]("score"),
+        r.getAs[Int]("rank")))
+    if (picked.isEmpty) return Seq.empty
+    val meta = snap
+      .filter(org.apache.spark.sql.functions.col("id")
+        .isin(picked.map(_._1).toSeq: _*))
+      .collect()
+      .map(r => r.getAs[String]("id") -> r).toMap
+    picked.sortBy(_._3).toSeq.map { case (id, score, _) =>
+      rowToDoc(meta(id), id, score)
+    }
   }
 
   /** Context block (`retriever.py:75-95`):

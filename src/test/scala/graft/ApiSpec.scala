@@ -54,6 +54,15 @@ class ApiSpec extends GraftSpec {
     assert(q.retrieved.nonEmpty)
     assert(q.retrieved.exists(_.text.contains("$450 million")))
     intercept[IllegalArgumentException](api.query("  "))
+    // filter errors are the caller's: an unknown field, a wrongly typed
+    // operand, a list where a scalar belongs
+    for (f <- Seq[Map[String, Any]](
+        Map("nosuch" -> "x"),
+        Map("source" -> Map("$gt" -> 1)),
+        Map("chunk_index" -> Map("$lt" -> "abc")),
+        Map("source" -> Map("$gt" -> Seq(1))),
+        Map("source" -> Map("$in" -> Seq(Seq(1))))))
+      intercept[IllegalArgumentException](api.query("what was the revenue?", 3, Some(f)))
 
     // chat
     val c = api.chat("and the quarter?", Seq(("what was revenue?", "$450M")))
@@ -109,7 +118,10 @@ class ApiSpec extends GraftSpec {
       val st = get("/api/v1/stats")
       assert(st.statusCode() == 200)
       assert(st.body().contains("\"dimension\":32"))
-      assert(st.body().contains("\"total_vector_count\""))
+      def vectorCount(body: String): Long =
+        """"total_vector_count":(\d+)""".r.findFirstMatchIn(body).get.group(1).toLong
+      val countBefore = vectorCount(st.body())
+      assert(countBefore == 1L)
 
       // query happy path: answer + retrieved_docs with the known fact
       val q = post("/api/v1/query", """{"question":"what was the revenue?","top_k":3}""")
@@ -133,6 +145,11 @@ class ApiSpec extends GraftSpec {
       assert(post("/api/v1/query", """{"question":"x","top_k":21}""").statusCode() == 422)
       assert(post("/api/v1/query", """{"question":"x","top_k":3.7}""").statusCode() == 422)
       assert(post("/api/v1/query", """not json""").statusCode() == 422)
+      // a filter the index cannot evaluate is a client error, not a 500
+      for (f <- Seq("""{"nosuch":"x"}""", """{"source":{"$gt":[1]}}""",
+          """{"chunk_index":{"$lt":"abc"}}"""))
+        assert(post("/api/v1/query",
+          s"""{"question":"what was the revenue?","filter":$f}""").statusCode() == 422, f)
       // integral double coerces like Pydantic's lenient int
       assert(post("/api/v1/query",
         """{"question":"what was the revenue?","top_k":3.0}""").statusCode() == 200)
@@ -149,6 +166,9 @@ class ApiSpec extends GraftSpec {
       assert(up.statusCode() == 200 && up.body().contains("\"success\":true"))
       val q2 = post("/api/v1/query", """{"question":"how many employees?"}""")
       assert(q2.body().contains("9,000"))
+      // the upload wrote through an index handle of its own: the served
+      // handle's count and top-k both reflect it
+      assert(vectorCount(get("/api/v1/stats").body()) == countBefore + 1L)
       // reference contract: upload errors are HTTP 200 with success=false
       val bad = post("/api/v1/upload",
         """{"files":[{"name":"../evil.txt","content":"x"}]}""")

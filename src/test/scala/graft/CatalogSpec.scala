@@ -4,6 +4,8 @@ import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import scala.util.Random
 
 class CatalogSpec extends GraftSpec {
   import spark.implicits._
@@ -104,6 +106,27 @@ class CatalogSpec extends GraftSpec {
     assert(got.size == perWriter) // k0..k7, each from SOME writer's last batch
   }
 
+  test("commit-marker claim: exactly one of two racing creators wins") {
+    // Hadoop's local createNewFile (exists-then-create) lets both win on
+    // nearly every round of this race; both writers would then stage
+    // and publish under the same version
+    val dir = new org.apache.hadoop.fs.Path(Files.createTempDirectory("graft-claim").toString)
+    val fs  = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val doubleWins = (0 until 200).count { i =>
+      val marker  = new org.apache.hadoop.fs.Path(dir, s"_v$i.commit")
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val wins    = new java.util.concurrent.atomic.AtomicInteger(0)
+      val racers  = (0 until 2).map(_ => new Thread(() => {
+        barrier.await()
+        if (VectorIndex.createExclusive(fs, marker)) { wins.incrementAndGet(); () }
+      }))
+      racers.foreach(_.start()); racers.foreach(_.join())
+      assert(wins.get() >= 1, s"round $i: nobody claimed the marker")
+      wins.get() > 1
+    }
+    assert(doubleWins == 0, s"$doubleWins of 200 rounds had two winners")
+  }
+
   test("readAt time-travels the merge-on-read log; compact truncates history") {
     val idx = VectorIndex.createOrConnect(spark, cat, IndexMeta("idx-tt", 2))
     idx.upsert(Seq(("a", Seq(1f, 0f)), ("b", Seq(0f, 1f))).toDF("id", "embedding"))
@@ -150,5 +173,153 @@ class CatalogSpec extends GraftSpec {
     val big = VectorIndex.createOrConnect(spark, cat, IndexMeta("probe-768", 2))
     big.upsert(Seq(("y", Seq(1f, 0f)), ("z", Seq(0f, 1f))).toDF("id", "embedding"))
     assert(cat.bestIndex("probe").map(_.name).contains("probe-768"))
+  }
+
+  test("live snapshot: writes through another handle and compact() reach read, knn and stats") {
+    val meta   = IndexMeta("snap-handles", 2)
+    val reader = VectorIndex.createOrConnect(spark, cat, meta)
+    val writer = VectorIndex.createOrConnect(spark, cat, meta)
+    def ids   = reader.read.select("id").as[String].collect().toSet
+    def top2(q: Seq[Float]) = reader.knn(q, 2).select("id").as[String].collect().toSeq
+    assert(ids.isEmpty && reader.stats.totalVectorCount == 0L)
+
+    reader.upsert(Seq(("a", Seq(1f, 0f)), ("b", Seq(0f, 1f))).toDF("id", "embedding"))
+    assert(ids == Set("a", "b") && reader.stats.totalVectorCount == 2L)
+    assert(top2(Seq(1f, 0.1f)) == Seq("a", "b"))
+
+    // another handle (the shape of an API upload or a streaming batch)
+    // adds c and moves b onto the first axis
+    writer.upsert(Seq(("b", Seq(1f, 0.1f)), ("c", Seq(-1f, 0f))).toDF("id", "embedding"))
+    assert(ids == Set("a", "b", "c"))
+    assert(reader.stats.totalVectorCount == 3L)
+    assert(top2(Seq(1f, 0.1f)) == Seq("b", "a"))
+    assert(top2(Seq(-1f, 0f)).head == "c")
+
+    // compaction through the other handle replaces every part file; the
+    // live view survives it and later writes still show up
+    writer.compact()
+    assert(writer.versions == Seq(0L))
+    assert(ids == Set("a", "b", "c") && reader.stats.totalVectorCount == 3L)
+    writer.upsert(Seq(("d", Seq(0f, -1f))).toDF("id", "embedding"))
+    assert(ids == Set("a", "b", "c", "d") && reader.stats.totalVectorCount == 4L)
+    assert(top2(Seq(0f, -1f)).head == "d")
+    val bRow = reader.read.filter(col("id") === "b")
+      .select("embedding").as[Seq[Float]].head()
+    assert(bRow == Seq(1f, 0.1f))
+  }
+
+  test("live snapshot: a repeated knn on an unchanged log is one job with no shuffle") {
+    val idx = VectorIndex.createOrConnect(spark, cat, IndexMeta("snap-jobs", 3))
+    // two versions, so the log's own read would need the dedup window
+    idx.upsert(Seq(("a", Seq(1f, 0f, 0f)), ("b", Seq(0f, 1f, 0f))).toDF("id", "embedding"))
+    idx.upsert(Seq(("b", Seq(0f, 0f, 1f)), ("c", Seq(1f, 1f, 0f))).toDF("id", "embedding"))
+    val q = Seq(1f, 0.5f, 0f)
+    assert(idx.knn(q, 2).select("id").as[String].collect().toSeq == Seq("c", "a"))
+
+    val sc     = spark.sparkContext
+    val group  = s"snap-jobs-${System.nanoTime()}"
+    val jobs   = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended  = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id")) {
+          jobs.add(js.jobId)
+          js.stageIds.foreach(id => stages.add(id))
+        }
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (jobs.contains(je.jobId)) { ended.incrementAndGet(); () }
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskMetrics != null) {
+          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten +
+            te.taskMetrics.shuffleReadMetrics.totalBytesRead)
+          ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "repeated knn")
+      val hits = idx.knn(q, 2).collect()
+      assert(hits.map(_.getAs[String]("id")).toSeq == Seq("c", "a"))
+      // listener events are async; a job's task ends precede its end
+      val deadline = System.nanoTime() + 10000000000L
+      while ((jobs.isEmpty || ended.get() < jobs.size) && System.nanoTime() < deadline)
+        Thread.sleep(20L)
+      assert(jobs.size == 1, s"repeated knn ran ${jobs.size} jobs, expected 1")
+      assert(ended.get() == 1, "the knn job never ended on the listener bus")
+      assert(shuffleBytes.get() == 0L, s"repeated knn shuffled ${shuffleBytes.get()} bytes")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("live snapshot: concurrent knn during another handle's upsert answers old or new top-k") {
+    val dim  = 8
+    val meta = IndexMeta("snap-conc", dim)
+    val rnd  = new Random(42)
+    def vec(): Seq[Float] = Seq.fill(dim)(rnd.nextGaussian().toFloat)
+    val old     = (0 until 200).map(i => f"v$i%03d" -> vec())
+    val queries = Seq.fill(12)(vec())
+    // the new batch overwrites 20 old ids and puts a near-duplicate of
+    // every query in, so each query's new top-k differs from its old one
+    val fresh = (0 until 20).map(i => f"v$i%03d" -> vec()) ++
+      queries.zipWithIndex.map { case (q, i) => f"n$i%02d" -> q.map(_ + 0.01f) }
+    val reader = VectorIndex.createOrConnect(spark, cat, meta)
+    val writer = VectorIndex.createOrConnect(spark, cat, meta)
+    reader.upsert(old.toDF("id", "embedding"))
+
+    val k = 5
+    def cosine(a: Seq[Float], b: Seq[Float]): Double = {
+      val d  = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
+      val na = math.sqrt(a.map(x => x.toDouble * x).sum)
+      val nb = math.sqrt(b.map(x => x.toDouble * x).sum)
+      d / (na * nb)
+    }
+    def bruteForce(rows: Map[String, Seq[Float]], q: Seq[Float]): Seq[String] =
+      rows.toSeq.map { case (id, v) => id -> cosine(q, v) }
+        .sortBy { case (id, s) => (-s, id) }.take(k).map(_._1)
+    val oldRows = old.toMap
+    val newRows = oldRows ++ fresh
+    val expected = queries.map(q => (bruteForce(oldRows, q), bruteForce(newRows, q)))
+    assert(expected.forall { case (o, n) => o != n })
+
+    // one partition → one part file: a multi-file batch is published
+    // file by file, a window `upsert` documents, so only a single-file
+    // batch lands in one step for the readers racing it
+    val batch = fresh.toDF("id", "embedding").coalesce(1)
+    val done  = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errs  = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sawNew = new java.util.concurrent.atomic.AtomicInteger(0)
+    val readers = (0 until 4).map { t =>
+      new Thread(() => {
+        var round = 0
+        // keep querying until the upsert is done, then one more round
+        var last = false
+        while (!last) {
+          last = done.get()
+          queries.indices.foreach { i =>
+            try {
+              val got = reader.knn(queries(i), k).select("id").as[String].collect().toSeq
+              val (o, n) = expected(i)
+              if (got == n) sawNew.incrementAndGet()
+              else if (got != o) errs.add(s"thread $t round $round query $i: $got is neither $o nor $n")
+            } catch { case e: Throwable => errs.add(s"thread $t query $i threw $e") }
+          }
+          round += 1
+        }
+      })
+    }
+    readers.foreach(_.start())
+    try {
+      Thread.sleep(200L)
+      writer.upsert(batch)
+    } finally done.set(true)
+    readers.foreach(_.join(120000))
+    assert(errs.isEmpty, errs.asScala.take(3).mkString("; "))
+    // every thread's last round started after the upsert returned
+    assert(sawNew.get() >= 4 * queries.size)
   }
 }
