@@ -2,6 +2,7 @@ package graft.api
 
 import graft.catalog.{IndexStats, VectorCatalog, VectorIndex}
 import graft.embed.Embedder
+import graft.ingest.Readers
 import graft.query.FilterDict
 import graft.rag.{Ingest, LlmClient, Rag, RagAnswer}
 import org.apache.spark.sql.SparkSession
@@ -52,20 +53,29 @@ final class GraftApi(
   def stats: IndexStats = index.stats
 
   /** POST /api/v1/upload (`routes.py:314-334`): save payloads to a
-    * landing dir, re-ingest into the index. (The reference crashes here
-    * on a missing import — behavior reimplemented from intent, bug not
-    * replicated; SURVEY §4 "known reference bugs".)
+    * landing dir and ingest them into the index. (The reference crashes
+    * here on a missing import — behavior reimplemented from intent, bug
+    * not replicated; SURVEY §4 "known reference bugs".)
+    *
+    * Only this request's files are read — with the `*.txt` / `*.pdf`
+    * selection of a directory ingest, and the same `source` and chunk
+    * ids — so each upload appends just its own chunks to the index's
+    * log. A file left in the landing dir by an earlier failed upload is
+    * therefore not picked up by the next one; upload it again.
     */
   def upload(files: Seq[(String, String)], landingDir: String): UploadResponse = {
     val dir = Paths.get(landingDir)
     Files.createDirectories(dir)
-    files.foreach { case (name, content) =>
+    val written = files.map { case (name, content) =>
       require(!name.contains("/") && !name.contains(".."), s"unsafe filename $name")
-      Files.write(dir.resolve(name), content.getBytes(StandardCharsets.UTF_8))
+      Files.write(dir.resolve(name), content.getBytes(StandardCharsets.UTF_8)).toString
+    }.distinct
+    if (written.isEmpty) UploadResponse(0, 0L)
+    else {
+      val before = index.stats.totalVectorCount
+      Ingest.ingestDf(spark, catalog, Readers.documents(spark, written),
+        index.meta.name, embedder)
+      UploadResponse(files.size, index.stats.totalVectorCount - before)
     }
-    val before = index.stats.totalVectorCount
-    Ingest.run(spark, catalog, landingDir, index.meta.name, embedder)
-    val after = index.stats.totalVectorCount
-    UploadResponse(files.size, after - before)
   }
 }

@@ -1,8 +1,16 @@
 package graft.catalog
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import graft.functions.CosineSimilarityExpr
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
+  GenericInternalRow, InterpretedOrdering, JoinedRow, Literal, Round, SortOrder, UnsafeArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
 
 /** A named vector index: parquet data dir + catalog meta, with
   * upsert-by-id last-wins semantics (Pinecone upsert,
@@ -31,6 +39,18 @@ import org.apache.spark.sql.functions._
   * executor that holds snapshot blocks fails the queries over it until
   * it is rebuilt — [[knn]] drops a snapshot whose query failed, so the
   * next call rebuilds from the log.
+  *
+  * [[knn]] bypasses Catalyst: one `SparkContext.runJob` over the
+  * snapshot's physical rows (`queryExecution.toRdd`, planned once per
+  * snapshot) with [[VectorIndex.TopK]] as the task — cosine score,
+  * `round(…, 6)` and a bounded k-heap per partition, a ≤ k-row merge on
+  * the driver. The `withColumn(score) → orderBy → limit` plan it
+  * replaces ran the same single job, but on a 2.5k-row index with
+  * `local[4]` on a 4-core host a request spent ~6 ms in analysis,
+  * optimization and planning, ~4 ms closure-cleaning the job's lambda
+  * and ~25 ms in the SQL-execution bookkeeping of its two Dataset
+  * actions, around a ~6 ms task. A metadata filter still goes through the planner (analysis
+  * and planning of `filter`, no Dataset action); the scoring does not.
   */
 final class VectorIndex(
     spark: SparkSession,
@@ -170,6 +190,8 @@ final class VectorIndex(
     lazy val frame: DataFrame =
       if (files.isEmpty) emptyLike()
       else merged(Long.MaxValue).localCheckpoint(eager = true)
+    /** The frame's physical rows, planned once. */
+    lazy val rows: RDD[InternalRow] = frame.queryExecution.toRdd
     lazy val liveCount: Long =
       if (files.isEmpty) 0L else catalog.countLive(meta.name)
   }
@@ -285,29 +307,42 @@ final class VectorIndex(
 
   /** Top-k cosine query with optional metadata filter — the reference's
     * `index.query(vector, top_k, filter)` (`pinecone_service.py:148-182`).
-    * Scores the live snapshot in one job and returns the ≤ k rows as a
-    * local frame. A filter naming a column the index lacks, or comparing
-    * a column with an operand of the wrong type, is the caller's error:
+    * The live snapshot's columns plus `score` = `round(cosine, 6)`,
+    * ordered by score desc nulls last, then id, as a local frame. A filter
+    * naming a column the index lacks, or comparing a column with an
+    * operand of the wrong type, is the caller's error:
     * `IllegalArgumentException`, not Spark's `AnalysisException`.
     */
   def knn(queryVec: Seq[Float], k: Int, filter: Option[Column] = None): DataFrame = {
+    val (schema, rows) = topK(queryVec, k, filter)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** [[knn]]'s rows, without the local frame around them. */
+  def knnRows(queryVec: Seq[Float], k: Int, filter: Option[Column] = None): Seq[Row] =
+    topK(queryVec, k, filter)._2.toSeq
+
+  private def topK(queryVec: Seq[Float], k: Int,
+      filter: Option[Column]): (StructType, Array[Row]) = {
     require(queryVec.length == meta.dimension,
       s"query dimension ${queryVec.length} != index dimension ${meta.dimension}")
+    require(k >= 0, s"k must be >= 0, got $k")
     val snap = snapshot()
     try {
-      val live = snap.frame
-      val base = filter.fold(live) { f =>
-        try live.filter(f)
-        catch {
-          case e: AnalysisException =>
-            throw new IllegalArgumentException(s"invalid filter: ${e.getMessage}", e)
-        }
+      val (schema, rows) = filter.fold((snap.frame.schema, snap.rows)) { f =>
+        val base =
+          try snap.frame.filter(f)
+          catch {
+            case e: AnalysisException =>
+              throw new IllegalArgumentException(s"invalid filter: ${e.getMessage}", e)
+          }
+        (base.schema, base.queryExecution.toRdd)
       }
-      val topK = base.withColumn("score",
-          round(graft.functions.VectorFunctions.cosineSimilarity(
-            col("embedding"), typedlit(queryVec)), 6))
-        .orderBy(col("score").desc, col("id")).limit(k)
-      spark.createDataFrame(java.util.Arrays.asList(topK.collect(): _*), topK.schema)
+      val task  = new VectorIndex.TopK(queryVec.toArray, k, schema)
+      val parts = new Array[Array[InternalRow]](rows.getNumPartitions)
+      spark.sparkContext.runJob(rows, task, parts.indices,
+        (i: Int, best: Array[InternalRow]) => parts(i) = best)
+      (task.outputSchema, task.merge(parts))
     } catch {
       case e: IllegalArgumentException => throw e
       case e: Exception => drop(snap); throw e
@@ -321,6 +356,75 @@ final class VectorIndex(
 }
 
 object VectorIndex {
+  /** The fused operator behind [[VectorIndex.knn]], over rows of
+    * `schema` (the snapshot's columns, which include `id` and
+    * `embedding`). Per partition it scores each row with
+    * `round(cosine_similarity(embedding, query), 6)` — the same
+    * expressions, evaluated interpreted — and keeps a bounded heap of the
+    * k best copied rows, each followed by its score; on the driver
+    * [[merge]] orders the ≤ k rows of every partition and keeps k. One
+    * ordering serves both: score desc nulls last, then id asc, Spark's
+    * own comparison for each type.
+    *
+    * A named class, not a lambda: `SparkContext.runJob` closure-cleans a
+    * lambda on every job (~4 ms of reading class bytes out of the Spark
+    * jars) and passes any other function object through as it is.
+    */
+  private[catalog] final class TopK(query: Array[Float], k: Int, schema: StructType)
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    private val width = schema.length
+    // where withColumn("score", …) puts the score: in place of a
+    // same-named column, else last
+    private val scoreAt = {
+      val resolver = SQLConf.get.resolver
+      val at = schema.fieldNames.indexWhere(resolver(_, "score"))
+      if (at < 0) width else at
+    }
+
+    private def withScore[T: scala.reflect.ClassTag](fields: Array[T], score: T): Array[T] =
+      if (scoreAt == width) fields :+ score else fields.updated(scoreAt, score)
+
+    def outputSchema: StructType =
+      StructType(withScore(schema.fields, StructField("score", DoubleType)))
+
+    private def column(name: String) =
+      BoundReference(schema.fieldIndex(name), schema(name).dataType, nullable = true)
+
+    /** Over a row joined with a one-field row holding its score. */
+    private def ordering = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(width, DoubleType, nullable = true), Descending),
+      SortOrder(column("id"), Ascending)))
+
+    def apply(context: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+      if (k == 0) Array.empty
+      else {
+        val score = Round(CosineSimilarityExpr(column("embedding"),
+          Literal(UnsafeArrayData.fromPrimitiveArray(query),
+            ArrayType(FloatType, containsNull = false))), Literal(6))
+        val order  = ordering
+        val heap   = new java.util.PriorityQueue[InternalRow](k, order.reverse) // worst first
+        val scored = new GenericInternalRow(1)
+        val probe  = new JoinedRow(null, scored)
+        rows.foreach { row =>
+          scored.update(0, score.eval(row))
+          if (heap.size < k || order.compare(probe.withLeft(row), heap.peek) < 0) {
+            if (heap.size == k) heap.poll()
+            heap.add(new JoinedRow(row.copy(), scored.copy()))
+          }
+        }
+        heap.toArray(Array.empty[InternalRow])
+      }
+
+    /** The k best of every partition's best, as rows of [[outputSchema]]. */
+    def merge(parts: Array[Array[InternalRow]]): Array[Row] = {
+      val toRow = CatalystTypeConverters.createToScalaConverter(outputSchema)
+      parts.flatten.sorted(ordering).take(k).map { hit =>
+        val values = Array.tabulate[Any](width)(i => hit.get(i, schema(i).dataType))
+        toRow(new GenericInternalRow(withScore(values, hit.get(width, DoubleType)))).asInstanceOf[Row]
+      }
+    }
+  }
+
   /** Atomic create-exclusive: true for exactly one of several racing
     * creators. Hadoop's `createNewFile` is exists-then-create, which on
     * the local filesystem two writers can both win (both then stage the

@@ -15,11 +15,14 @@ object Readers {
     * just needs enough files.
     */
   def textDirectory(spark: SparkSession, dir: String): DataFrame =
+    textFiles(spark, Seq(dir))
+
+  private def textFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read
       .option("wholetext", "true")
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.txt")
-      .text(dir)
+      .text(paths: _*)
       .select(col("value").as("text"), input_file_name().as("source"))
 
   /** Pluggable page extractor for binary documents; returns one string
@@ -53,12 +56,15 @@ object Readers {
   def pdfDirectory(
       spark: SparkSession, dir: String,
       parser: BinaryDocParser = new PdfParser
-  ): DataFrame = {
+  ): DataFrame = pdfFiles(spark, Seq(dir), parser)
+
+  private def pdfFiles(
+      spark: SparkSession, paths: Seq[String], parser: BinaryDocParser): DataFrame = {
     import spark.implicits._
     spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.pdf")
-      .load(dir)
+      .load(paths: _*)
       .select(col("content"), col("path"))
       .as[(Array[Byte], String)]
       .flatMap { case (bytes, path) =>
@@ -70,7 +76,13 @@ object Readers {
 
   /** S3: txt ∪ pdf (`scripts/ingest_documents.py:61-64`). */
   def documents(spark: SparkSession, dir: String): DataFrame =
-    textDirectory(spark, dir).unionByName(pdfDirectory(spark, dir))
+    documents(spark, Seq(dir))
+
+  /** S3 over several files or directories: the same `*.txt` / `*.pdf`
+    * selection, applied to each named file and under each directory.
+    */
+  def documents(spark: SparkSession, paths: Seq[String]): DataFrame =
+    textFiles(spark, paths).unionByName(pdfFiles(spark, paths, new PdfParser))
 
   /** Compressed text-corpus scan: `*.txt.gz`, one document per file.
     * Hadoop's codec factory decompresses by extension inside the SAME

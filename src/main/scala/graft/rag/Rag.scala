@@ -43,9 +43,10 @@ final case class RagAnswer(
 
 /** End-to-end RAG engine (reference `app/rag/chain.py:71-154` +
   * `app/rag/retriever.py:35-95`), Spark-first: retrieval is one job over
-  * the index's materialized live snapshot (filter → cosine →
-  * TakeOrderedAndProject(k)), see [[graft.catalog.VectorIndex]]; only
-  * the ≤20 result rows ever reach the driver.
+  * the index's materialized live snapshot — filter, then per partition a
+  * fused cosine score and bounded top-k heap, merged on the driver (see
+  * [[graft.catalog.VectorIndex]]); only the ≤20 result rows ever reach
+  * the driver, and they are read as rows, with no Dataset around them.
   */
 final class Rag(
     spark: SparkSession,
@@ -73,7 +74,7 @@ final class Rag(
       filter: Option[Column] = None): Seq[RetrievedDoc] = {
     require(topK >= 1 && topK <= 20, "top_k must be in [1, 20]") // routes.py:31
     val qvec = embedder.embedOne(question).toSeq
-    index.knn(qvec, topK, filter).collect().toSeq.map { r =>
+    index.knnRows(qvec, topK, filter).map { r =>
       rowToDoc(r,
         r.getAs[String]("id"),
         Option(r.getAs[Any]("score")).fold(0.0)(_.asInstanceOf[Double]))

@@ -1,8 +1,9 @@
 package graft
 
 import graft.api.GraftApi
-import graft.catalog.VectorCatalog
+import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
 import graft.embed.DeterministicEmbedder
+import graft.ingest.Chunker
 import graft.query.FilterDict
 import graft.rag.Ingest
 import org.apache.spark.sql.functions._
@@ -196,7 +197,7 @@ class ApiSpec extends GraftSpec {
       assert(get("/static/../app.js").statusCode() == 404)
 
       // multipart/form-data upload (the reference's UploadFile contract):
-      // a real browser-shaped body round-trips through re-ingest
+      // a real browser-shaped body round-trips through ingest
       val boundary = "graftTestBoundary42"
       val multipart =
         s"""--$boundary\r
@@ -223,6 +224,67 @@ class ApiSpec extends GraftSpec {
       assert(q3.body().contains("61 percent"))
       val q4 = post("/api/v1/query", """{"question":"what about the dividend?"}""")
       assert(q4.body().contains("suspended"))
+    } finally srv.stop()
+  }
+
+  test("upload ingests only the request's files: the log grows by exactly their chunks") {
+    val docsDir = Files.createTempDirectory("graft-upload-docs")
+    Files.writeString(docsDir.resolve("doc1.txt"),
+      "The quarterly revenue was $450 million in Q1 2024.")
+    val catalog  = new VectorCatalog(spark,
+      Files.createTempDirectory("graft-upload-cat").toString)
+    val embedder = new DeterministicEmbedder(32)
+    val index    = Ingest.run(spark, catalog, docsDir.toString, "upload-idx", embedder)
+    val api      = new GraftApi(spark, catalog, index, embedder)
+    val landing  = Files.createTempDirectory("graft-upload-landing").toString
+    def logRows: Long = spark.read.parquet(catalog.dataPath(index.meta.name)).count()
+    val long = (1 to 40).map(i =>
+      s"Paragraph $i reports segment revenue of ${i * 7} million dollars.").mkString("\n\n")
+
+    api.upload(Seq("a.txt" -> "Headcount grew to 9,000 employees by December.",
+      "b.txt" -> long), landing)
+    val before = logRows
+    // a file outside the *.txt / *.pdf selection is stored, not ingested
+    val second = Seq("c.txt" -> "The dividend was suspended in March.",
+      "d.txt" -> long.replace("revenue", "income"), "notes.md" -> "not a document")
+    val chunks = second.collect {
+      case (name, text) if name.endsWith(".txt") => new Chunker(500, 50).split(text).size
+    }.sum
+    assert(chunks > 2)
+    val up = api.upload(second, landing)
+    assert(up.filesReceived == 3 && up.chunksIndexed == chunks)
+    assert(logRows - before == chunks)
+    // the uploads assigned the source strings and chunk ids a directory
+    // ingest of the landing dir does: re-ingesting it adds no live row
+    val live = index.stats.totalVectorCount
+    Ingest.run(spark, catalog, landing, index.meta.name, embedder)
+    assert(index.stats.totalVectorCount == live)
+  }
+
+  test("http server: a health round trip does not stall on Nagle's algorithm") {
+    import graft.api.GraftHttpServer
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+
+    val catalog  = new VectorCatalog(spark,
+      Files.createTempDirectory("graft-nodelay-cat").toString)
+    val index    = VectorIndex.createOrConnect(spark, catalog, IndexMeta("nodelay-idx", 8))
+    val srv      = new GraftHttpServer(
+      new GraftApi(spark, catalog, index, new DeterministicEmbedder(8)),
+      Files.createTempDirectory("graft-nodelay-landing").toString)
+    val port     = srv.start()
+    val client   = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val health   = HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:$port/api/v1/health")).GET().build()
+    try {
+      // with TCP_NODELAY off each round trip waits ~10 ms or more for
+      // the delayed ACK of the header segment
+      val ms = (0 until 25).map { _ =>
+        val t0 = System.nanoTime()
+        assert(client.send(health, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(ms.size / 2) < 5.0, s"median health round trip ${ms(ms.size / 2)} ms of $ms")
     } finally srv.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
+import graft.functions.VectorFunctions
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -321,5 +323,122 @@ class CatalogSpec extends GraftSpec {
     assert(errs.isEmpty, errs.asScala.take(3).mkString("; "))
     // every thread's last round started after the upsert returned
     assert(sawNew.get() >= 4 * queries.size)
+  }
+
+  /** The Catalyst formulation `knn` ran before its fused operator: the
+    * oracle the fused scorer must match row for row.
+    */
+  private def catalystTopK(live: DataFrame, q: Seq[Float], k: Int,
+      filter: Option[Column]): DataFrame =
+    filter.fold(live)(live.filter)
+      .withColumn("score",
+        round(VectorFunctions.cosineSimilarity(col("embedding"), typedlit(q)), 6))
+      .orderBy(col("score").desc, col("id")).limit(k)
+
+  /** A seeded 8-dim index whose snapshot has several partitions, with
+    * zero vectors (NULL score), a NaN vector, exact duplicates (score
+    * ties broken by id) and near-duplicates (ties after rounding).
+    */
+  private lazy val topKIndex: VectorIndex = {
+    val dim = 8
+    val rnd = new Random(11)
+    def vec(): Seq[Float] = Seq.fill(dim)(rnd.nextGaussian().toFloat)
+    val random  = (0 until 400).map(i => f"r$i%03d" -> vec())
+    val twin    = random(7)._2
+    val special = Seq("z0" -> Seq.fill(dim)(0f), "z1" -> Seq.fill(dim)(0f),
+      "nan" -> (Float.NaN +: Seq.fill(dim - 1)(1f))) ++
+      (0 until 4).map(i => s"d$i" -> twin) ++
+      (0 until 3).map(i => s"e$i" -> twin.map(_ + 1e-7f * (i + 1)))
+    val rows = (random ++ special).zipWithIndex.map { case ((id, v), i) =>
+      (id, v, s"text $i", if (i % 3 == 0) "a.txt" else "b.txt", i)
+    }
+    val idx = VectorIndex.createOrConnect(spark, cat, IndexMeta("topk-eq", dim))
+    idx.upsert(rows.toDF("id", "embedding", "text", "source", "chunk_index").repartition(4))
+    // build the snapshot with one partition per shuffle partition, so the
+    // driver-side merge of several partitions' heaps runs
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try idx.read
+    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    idx
+  }
+
+  private lazy val topKQueries: Seq[Seq[Float]] = {
+    val rnd = new Random(5)
+    val twin = topKIndex.read.filter(col("id") === "d0").select("embedding")
+      .as[Seq[Float]].head()
+    Seq.fill(4)(Seq.fill(8)(rnd.nextGaussian().toFloat)) ++
+      Seq(twin, Seq.fill(8)(0f)) // exact ties at 1.0; every score NULL
+  }
+
+  // rows as text: a NaN inside an embedding never equals itself under ==
+  private def shown(rows: Seq[org.apache.spark.sql.Row]): Seq[String] = rows.map(_.toString)
+
+  private val topKFilters: Seq[Option[Column]] = Seq(None,
+    Some(col("source") === "a.txt"), Some(col("chunk_index") < 50))
+
+  test("fused knn matches the Catalyst top-k: rows, scores, column order and schema") {
+    val idx  = topKIndex
+    val live = idx.read
+    assert(live.queryExecution.toRdd.getNumPartitions > 1,
+      "the snapshot must span several partitions")
+    val n = live.count().toInt
+    for (q <- topKQueries; k <- Seq(0, 1, 5, 17, n + 10); f <- topKFilters) {
+      val want = catalystTopK(live, q, k, f)
+      val got  = idx.knn(q, k, f)
+      val what = s"k=$k filter=$f query=${q.take(2)}"
+      assert(got.schema == want.schema, what)
+      assert(shown(got.collect().toSeq) == shown(want.collect().toSeq), what)
+      assert(shown(idx.knnRows(q, k, f)) == shown(got.collect().toSeq), what)
+    }
+    // the NULL scores sort last, the NaN score first (Spark's ordering)
+    val all = idx.knn(topKQueries.head, n).collect()
+    assert(all.head.getAs[String]("id") == "nan")
+    assert(all.takeRight(2).map(_.getAs[String]("id")).toSeq == Seq("z0", "z1"))
+    assert(all.takeRight(2).forall(_.isNullAt(all.head.fieldIndex("score"))))
+  }
+
+  test("fused knn: an empty index, and a metadata column named score") {
+    val empty = VectorIndex.createOrConnect(spark, cat, IndexMeta("topk-empty", 3))
+    val q = Seq(1f, 0f, 0f)
+    val want = catalystTopK(empty.read, q, 5, None)
+    val got  = empty.knn(q, 5)
+    assert(got.schema == want.schema && got.columns.toSeq == Seq("id", "embedding", "score"))
+    assert(got.collect().isEmpty && empty.knnRows(q, 5).isEmpty)
+    intercept[IllegalArgumentException](empty.knn(q, 5, Some(col("source") === "x")))
+
+    // withColumn replaces a same-named column in place; so does knn
+    val scored = VectorIndex.createOrConnect(spark, cat, IndexMeta("topk-score-col", 3))
+    scored.upsert(Seq(("a", Seq(1f, 0f, 0f), "x", "t1"), ("b", Seq(0f, 1f, 0f), "y", "t2"),
+      ("c", Seq(1f, 1f, 0f), "z", "t3")).toDF("id", "embedding", "score", "text"))
+    for (k <- Seq(1, 2, 5)) {
+      val w = catalystTopK(scored.read, q, k, None)
+      val g = scored.knn(q, k)
+      assert(g.schema == w.schema && shown(g.collect().toSeq) == shown(w.collect().toSeq))
+    }
+    assert(scored.knn(q, 1).columns.toSeq == Seq("id", "embedding", "score", "text"))
+  }
+
+  test("fused knn: concurrent calls on an unchanged index answer as a single thread does") {
+    val idx = topKIndex
+    val ks  = Seq(1, 3, 10, 20)
+    val calls = for (q <- topKQueries; k <- ks; f <- topKFilters) yield (q, k, f)
+    val expected = calls.map { case (q, k, f) => shown(idx.knn(q, k, f).collect().toSeq) }
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = (0 until 4).map { t =>
+      new Thread(() => {
+        val order = new Random(t).shuffle(calls.indices.toList).take(30)
+        order.foreach { i =>
+          val (q, k, f) = calls(i)
+          try {
+            val got = shown(idx.knn(q, k, f).collect().toSeq)
+            if (got != expected(i)) errs.add(s"thread $t call $i (k=$k filter=$f): $got")
+          } catch { case e: Throwable => errs.add(s"thread $t call $i threw $e") }
+        }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join(120000))
+    assert(errs.isEmpty, errs.asScala.take(3).mkString("; "))
   }
 }
