@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     // ambient-load telemetry, read BEFORE any work so it reflects the
     // machine, not this bench: identical plans measure up to 10x slower
     // under contention on this box (PERF.md round-3 case study), and the
@@ -27,23 +27,12 @@ object Bench {
       } catch { case _: Exception => 0L }
     val stealStart = stealJiffies()
     val wallStart  = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Encoding.repairMojibake needs REPLACE (not throw) semantics for
-      // malformed/unmappable bytes; its guards inspect the replacements
-      .config("spark.sql.legacy.codingErrorAction", "true")
-      // bench-only: keep the state-store maintenance thread out of the
-      // timed reps (provider unloading is explicit between streaming
-      // queries — see the per-query cleanup below); correctness paths
-      // (Verify, specs) keep Spark's default cadence
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "300s")
-      .getOrCreate()
+    val spark = Session.local(cpus, "graft-bench")
+    // bench-only: keep the state-store maintenance thread out of the
+    // timed reps (provider unloading is explicit between streaming
+    // queries — see the per-query cleanup below); correctness paths
+    // (Verify, specs) keep Spark's default cadence
+    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "300s")
     // ERROR, not WARN: the bench contract is one bare JSON line on
     // stdout, and stray WARNs in the captured output make the run
     // harder to parse downstream.
@@ -200,7 +189,7 @@ object Bench {
           "-Xlog:gc:file=/tmp/graft_bench_child_gc.log",
           "-cp", sys.props("java.class.path"), "graft.Bench")
         pb.environment.put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment.put("SPARK_GRAFT_CPUS", cpus)
+        pb.environment.put("SPARK_GRAFT_CPUS", cpus.toString)
         pb.environment.put("SPARK_GRAFT_REPS", reps.toString)
         pb.environment.put("SPARK_GRAFT_ONLY", streamingNames.mkString(","))
         pb.environment.put("SPARK_GRAFT_CHILD", "1")

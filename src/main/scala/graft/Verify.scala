@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, converted
-      // to a us timestamp in Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Naive (no-tz) parquet timestamps read as TIMESTAMP, not NTZ —
-      // the session is pinned to UTC so instants are unchanged, and
-      // event-time streaming / unix_micros require TIMESTAMP.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Encoding.repairMojibake needs REPLACE (not throw) semantics for
-      // malformed/unmappable bytes; its guards inspect the replacements
-      .config("spark.sql.legacy.codingErrorAction", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter, mirroring Bench: SPARK_GRAFT_ONLY=q74,...
     // (the driver never sets it; oracle_sql.json is still written whole)

@@ -86,8 +86,10 @@ final class GraftHttpServer(api: GraftApi, uploadDir: String, port: Int = 0) {
     }
     route("/api/v1/query", "POST") { body =>
       val (question, topK) = questionAndTopK(body)
-      val filter = Option(body.get("filter")).map(f =>
-        toScala(f).asInstanceOf[Map[String, Any]])
+      val filter = Option(body.get("filter")).map {
+        case f: java.util.Map[_, _] => toScala(f).asInstanceOf[Map[String, Any]]
+        case other => invalid(s"filter must be an object, got: $other")
+      }
       answerJson(api.query(question, topK, filter))
     }
     route("/api/v1/chat", "POST") { body =>
@@ -330,13 +332,13 @@ final class GraftHttpServer(api: GraftApi, uploadDir: String, port: Int = 0) {
       case n: Number =>
         // Pydantic rejects fractional floats for int fields; integral
         // doubles (3.0) coerce
-        if (n.doubleValue() != math.rint(n.doubleValue()))
-          invalid(s"top_k must be an integer, got: $n")
-        n.intValue()
+        val d = n.doubleValue()
+        if (d != math.rint(d)) invalid(s"top_k must be an integer, got: $n")
+        // range-check before narrowing: intValue() wraps 2^32 + 1 to 1
+        if (d < 1 || d > 20) invalid("top_k must be between 1 and 20")
+        d.toInt
       case other     => invalid(s"top_k must be an integer, got: $other")
     }
-    if (topK < 1 || topK > 20)
-      invalid("top_k must be between 1 and 20")
     (question, topK)
   }
 

@@ -1,9 +1,9 @@
 package graft.api
 
+import graft.Session
 import graft.catalog.VectorCatalog
 import graft.embed.DeterministicEmbedder
 import graft.rag.Ingest
-import org.apache.spark.sql.SparkSession
 
 /** Runnable server — the reference's `uvicorn app.main:app` equivalent
   * (`app/main.py:76-89`): ingest a document directory into a vector
@@ -23,16 +23,7 @@ object GraftServerMain {
     val catDir  = if (args.length > 2) args(2)
       else java.nio.file.Files.createTempDirectory("graft-catalog").toString
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus, "graft-server")
 
     val catalog  = new VectorCatalog(spark, catDir)
     val embedder = new DeterministicEmbedder(64)

@@ -34,6 +34,7 @@ object FilterDict {
     case field =>
       value match {
         case ops: Map[_, _] =>
+          require(ops.nonEmpty, s"empty operator object for $field")
           ops.asInstanceOf[Map[String, Any]].map {
             case ("$eq", v)  => col(field) === scalar(v, "$eq")
             case ("$ne", v)  => col(field) =!= scalar(v, "$ne")

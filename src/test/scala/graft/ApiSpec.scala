@@ -30,6 +30,8 @@ class ApiSpec extends GraftSpec {
     intercept[IllegalArgumentException](FilterDict.toColumn(Map.empty))
     intercept[IllegalArgumentException](
       FilterDict.toColumn(Map("x" -> Map("$regex" -> "a"))))
+    intercept[IllegalArgumentException](
+      FilterDict.toColumn(Map("source" -> Map.empty[String, Any])))
   }
 
   test("api mirrors the five endpoints end-to-end") {
@@ -145,10 +147,12 @@ class ApiSpec extends GraftSpec {
       assert(post("/api/v1/query", """{"question":"x","top_k":0}""").statusCode() == 422)
       assert(post("/api/v1/query", """{"question":"x","top_k":21}""").statusCode() == 422)
       assert(post("/api/v1/query", """{"question":"x","top_k":3.7}""").statusCode() == 422)
+      assert(post("/api/v1/query", """{"question":"x","top_k":4294967297}""").statusCode() == 422)
       assert(post("/api/v1/query", """not json""").statusCode() == 422)
       // a filter the index cannot evaluate is a client error, not a 500
       for (f <- Seq("""{"nosuch":"x"}""", """{"source":{"$gt":[1]}}""",
-          """{"chunk_index":{"$lt":"abc"}}"""))
+          """{"chunk_index":{"$lt":"abc"}}""", "5", "\"x\"", "[1]",
+          """{"source":{}}"""))
         assert(post("/api/v1/query",
           s"""{"question":"what was the revenue?","filter":$f}""").statusCode() == 422, f)
       // integral double coerces like Pydantic's lenient int

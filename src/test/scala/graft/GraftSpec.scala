@@ -5,23 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, one session). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Encoding.repairMojibake needs REPLACE (not throw) semantics for
-      // malformed/unmappable bytes; its guards inspect the replacements
-      .config("spark.sql.legacy.codingErrorAction", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4, "graft-test")
   val sfDir = "/root/testdata/sf0.001"
 }
 

@@ -42,7 +42,7 @@ class RegistrySpec extends AnyFunSuite {
     val missing = SparkEntry.queries.keySet.filterNot(src.contains)
     assert(missing.isEmpty,
       s"PLANS.md lacks entries for: ${missing.toSeq.sorted.mkString(", ")}" +
-        " — regenerate with sbt \"runMain graft.DumpPlans\"")
+        " — regenerate with sbt \"runMain graft.ExplainOne\"")
   }
 
   test("README.md registry and streaming counts match SparkEntry.queries") {
