@@ -122,23 +122,18 @@ final class VectorCatalog(spark: SparkSession, root: String) {
   }
 
   /** `{total_vector_count, dimension, index_fullness}`
-    * (`pinecone_service.py:193-204`).
+    * (`pinecone_service.py:193-204`), through an index handle.
     */
-  def stats(name: String): Option[IndexStats] = get(name).map { m =>
-    val p = new Path(dataPath(name))
-    val hasData = fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    IndexStats(if (hasData) countLive(name) else 0L, m.dimension)
-  }
+  def stats(name: String): Option[IndexStats] =
+    get(name).map(new VectorIndex(spark, this, _).stats)
 
   /** Live count of an index with data: the merge-on-read log keeps
     * superseded versions per id until compaction, so count distinct ids,
-    * not raw rows.
+    * not raw rows. Only `id` is read, under a declared schema: no
+    * schema-inference job.
     */
-  private[catalog] def countLive(name: String): Long = {
-    val df = spark.read.parquet(dataPath(name))
-    if (df.columns.contains("id")) df.select("id").distinct().count()
-    else df.count()
-  }
+  private[catalog] def countLive(name: String): Long =
+    spark.read.schema("id STRING").parquet(dataPath(name)).distinct().count()
 
   /** Ingest-side resolution (`ingest_documents.py:175-195`): if `base`
     * exists with a different dimension, route to `base-{dim}`.

@@ -1,12 +1,15 @@
 package graft.catalog
 
 import graft.functions.CosineSimilarityExpr
-import org.apache.spark.TaskContext
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
-  GenericInternalRow, InterpretedOrdering, JoinedRow, Literal, Round, SortOrder, UnsafeArrayData}
+  GenericInternalRow, InterpretedOrdering, JoinedRow, KnownNotNull, Literal, Round, SortOrder,
+  UnsafeArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -60,58 +63,69 @@ final class VectorIndex(
   private val path = catalog.dataPath(meta.name)
 
   /** Schema contract for upserts: `id STRING` + `embedding ARRAY<FLOAT>`
-    * (+ arbitrary metadata columns). Dimension is validated row-wise at
-    * write time — the invariant the reference enforces
-    * (`pinecone_service.py:126-133`, SURVEY §1.2).
+    * (+ arbitrary metadata columns). Dimension is validated row-wise
+    * inside the one write job — the invariant the reference enforces
+    * (`pinecone_service.py:126-133`, SURVEY §1.2): a null or
+    * wrong-length embedding fails the write with an
+    * `IllegalArgumentException`, publishes nothing, and burns the
+    * batch's claimed version. Returns the rows written, read off the
+    * staged part files' footers.
     */
   def upsert(df: DataFrame): Long = {
     require(df.columns.contains("id") && df.columns.contains("embedding"),
       "upsert requires id + embedding columns")
-    // One pass over the (potentially expensive: chunk+embed) input:
-    // persist the batch, validate + write + count from the materialized
-    // data instead of recomputing the upstream pipeline three times.
-    val batch = df.persist()
-    try {
-      // null-safe: size(NULL) is NULL and would slip through a plain
-      // =!= filter — null embeddings are invalid, not ignorable
-      val bad = batch.filter(col("embedding").isNull ||
-          size(col("embedding")) =!= meta.dimension)
-        .limit(1).count()
-      require(bad == 0,
-        s"embedding dimension mismatch or null embedding: index ${meta.name} expects ${meta.dimension}")
-      val version = claimVersion()
-      // stage-then-move: the batch is written to a dot-prefixed dir
-      // (invisible to readers — FileInputFormat's hidden-file filter),
-      // then its part files rename into the live dir. A crash before
-      // the move leaves only ignored staging garbage; the claimed
-      // version is burnt (a harmless gap). A crash MID-loop leaves a
-      // TORN batch: some part files of the claimed version visible,
-      // the rest still staged — readers see a partial upsert until
-      // recovery (delete every live part with this _version, or finish
-      // the moves from the surviving .staged dir; both are listable by
-      // the burnt version number). A single-directory-rename publish
-      // would close the window but forces one subdirectory per version,
-      // turning every read into an O(versions) directory walk — this
-      // log keeps reads flat and accepts the torn window as the
-      // documented crash cost.
-      val staged = s"$path/.staged_v$version"
-      batch.withColumn("_version", lit(version))
-        .write.mode("overwrite").parquet(staged)
-      val stagedPath = new org.apache.hadoop.fs.Path(staged)
-      val livePath   = new org.apache.hadoop.fs.Path(path)
-      fileSystem.listStatus(stagedPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .foreach { f =>
-          require(fileSystem.rename(f.getPath,
-            new org.apache.hadoop.fs.Path(livePath, f.getPath.getName)),
-            s"failed to publish ${f.getPath} into $path")
-        }
-      fileSystem.delete(stagedPath, true)
-      batch.count()
-    } finally {
-      batch.unpersist()
-      ()
+    val rejected =
+      s"embedding dimension mismatch or null embedding: index ${meta.name} expects ${meta.dimension}"
+    // null-safe: size(NULL) is NULL, so a null embedding fails it too
+    val embedding = col("embedding")
+    val checked = df.withColumn("embedding",
+      when(embedding.isNotNull && size(embedding) === meta.dimension, embedding)
+        .otherwise(raise_error(lit(rejected))))
+    // the file keeps the input's declared nullability, which the
+    // optimizer would widen (raise_error, a dropDuplicates' first())
+    val declared = checked.queryExecution.analyzed.output.zip(df.schema).map {
+      case (a, f) => GraftBridge.column(if (f.nullable) a else KnownNotNull(a)).as(f.name)
     }
+    val version = claimVersion()
+    // stage-then-move: the batch is written to a dot-prefixed dir
+    // (invisible to readers — FileInputFormat's hidden-file filter),
+    // then its part files rename into the live dir. A failed write or a
+    // crash before the move leaves only ignored staging garbage; the
+    // claimed version is burnt (a harmless gap). A crash or a failed
+    // rename MID-loop leaves a TORN batch: some part files of the
+    // claimed version visible, the rest still staged — readers see a
+    // partial upsert until recovery (delete every live part with this
+    // _version, or finish the moves from the surviving .staged dir; both
+    // are listable by the burnt version number). A single-directory-
+    // rename publish would close the window but forces one subdirectory
+    // per version, turning every read into an O(versions) directory
+    // walk — this log keeps reads flat and accepts the torn window as
+    // the documented crash cost.
+    val fs     = fileSystem
+    val staged = new org.apache.hadoop.fs.Path(s"$path/.staged_v$version")
+    try checked.select(declared :+ lit(version).as("_version"): _*)
+      .write.mode("overwrite").parquet(staged.toString)
+    catch {
+      case e: Exception =>
+        fs.delete(staged, true)
+        val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists {
+          case t: SparkThrowable => t.getCondition == "USER_RAISED_EXCEPTION"
+          case _                 => false
+        }
+        throw if (raised) new IllegalArgumentException(rejected, e) else e
+    }
+    val parts = fs.listStatus(staged).filter(_.getPath.getName.endsWith(".parquet"))
+    val rows = parts.map { st =>
+      val footer = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+      try footer.getRecordCount finally footer.close()
+    }.sum
+    parts.foreach { st =>
+      require(fs.rename(st.getPath, new org.apache.hadoop.fs.Path(path, st.getPath.getName)),
+        s"failed to publish ${st.getPath} into $path")
+    }
+    fs.delete(staged, true)
+    rows
   }
 
   /** Optimistic commit protocol for the next batch version: a candidate

@@ -89,22 +89,12 @@ object CurationQueries {
   // q6T sub-buckets per decile for the two-phase rank: parallelism is
   // 10 × this and per-task sort state corpus/(10 × this). 128 gives
   // 1,280-way rank parallelism at any corpus size from one extra set
-  // of quantile specs on the SAME scan; raise it for bigger clusters
-  // (env-tunable — the output is B-invariant by the Ranks bit-equality
-  // contract, and the bucket_of assignment is O(log B) per row with a
-  // B-independent projection, so raising it costs one longer sketch
-  // array broadcast and nothing else).
-  private val CurriculumRankBuckets =
-    sys.env.get("GRAFT_CURRICULUM_BUCKETS").map { raw =>
-      // a bare .toInt here would throw inside this object's static
-      // init and take the WHOLE registry down with an opaque
-      // ExceptionInInitializerError that never names the knob
-      val n = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"GRAFT_CURRICULUM_BUCKETS must be a positive integer, got '$raw'"))
-      require(n > 0,
-        s"GRAFT_CURRICULUM_BUCKETS must be a positive integer, got '$raw'")
-      n
-    }.getOrElse(128)
+  // of quantile specs on the SAME scan (the output is B-invariant by the
+  // Ranks bit-equality contract, and the bucket_of assignment is
+  // O(log B) per row with a B-independent projection, so a bigger
+  // cluster's larger B costs one longer sketch array broadcast and
+  // nothing else).
+  private val CurriculumRankBuckets = 128
 
   /** The messy URL as a Spark column (mirrored by [[duckMessyUrl]]).
     * Shared with streaming q7U. */

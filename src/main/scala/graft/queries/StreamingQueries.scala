@@ -363,13 +363,11 @@ object StreamingQueries {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val docs = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
-      // r13: conf-gated stream fan-out (Scans.streamFanOut) replaces the
-      // r12 unconditional repartition (VERDICT r12 #3 / ADVICE r12).
-      // Measured both ways at local[32] under a clean canary: WITH the
-      // per-batch exchange 2.5 s, WITHOUT 5.7 s — the row-local
-      // canonicalize + robots fold over an unsplittable-file micro-batch
-      // is single-task without it. The exchange carries doc_id ONLY; an
-      // at-scale deployment sets spark.graft.stream.fanOut=false.
+      // stream fan-out (Scans.streamFanOut). Measured both ways at
+      // local[32] under a clean canary: WITH the per-batch exchange
+      // 2.5 s, WITHOUT 5.7 s — the row-local canonicalize + robots fold
+      // over an unsplittable-file micro-batch is single-task without it.
+      // The exchange carries doc_id ONLY.
       StreamRunner.runToBatch(
           CurationQueries.robotsGate(
             graft.util.Scans.streamFanOut(
@@ -409,10 +407,8 @@ object StreamingQueries {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val docs = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
-      // r13: conf-gated stream fan-out (the q7W note — measured 3.0 s
-      // with vs 5.0 s without at local[32]); doc_id only, and
-      // spark.graft.stream.fanOut=false removes the per-batch exchange
-      // at scale.
+      // stream fan-out (the q7W note — measured 3.0 s with vs 5.0 s
+      // without at local[32]); doc_id only.
       val gated = CurationQueries.hostPath(
         graft.util.Scans.streamFanOut(
             docs.select(col("doc_id")), col("doc_id"))
@@ -1276,7 +1272,7 @@ object StreamingQueries {
 
     // Batch mirror of the streamed ingest: q50's recursive chunk walk +
     // q51's trigram-murmur embed, with source/id derived from the
-    // landing file name (<doc_id>.txt) exactly as Ingest.chunkId mints
+    // landing file name (<doc_id>.txt) exactly as Ingest mints
     // them: doc_<chunk_index>_<md5(md5(source)||md5(chunk_text))[:16]>.
     "q79_stream_ingest" ->
       s"""WITH RECURSIVE ${PipelineQueries.duckChunkWalk},

@@ -161,6 +161,8 @@ final class Rag(
 
 /** Batch ingestion job (reference `scripts/ingest_documents.py:108-233`):
   * scan → chunk → embed → id/metadata → upsert, as one Spark pipeline.
+  * [[Ingest.upsertDocs]] is that pipeline, shared by the batch entry
+  * points and every micro-batch of [[graft.streaming.StreamingIngest]].
   */
 object Ingest {
 
@@ -171,8 +173,8 @@ object Ingest {
     *    delimiter ambiguity (source="a|b",text="c" vs source="a",
     *    text="b|c" must not collide — file paths can contain any char);
     *  - 16 hex chars (64 bits) keeps birthday collisions negligible.
-    * Shared by the batch and streaming ingest paths so their id spaces
-    * never fork.
+    * Minted only in [[upsertDocs]], the one pipeline of batch and
+    * streaming ingest, so their id spaces never fork.
     */
   def chunkId(source: org.apache.spark.sql.Column,
       chunkIndex: org.apache.spark.sql.Column,
@@ -207,17 +209,22 @@ object Ingest {
       chunkSize: Int = 500,
       chunkOverlap: Int = 50
   ): VectorIndex = {
-    val chunked = new Chunker(chunkSize, chunkOverlap).chunk(docs, "text")
-      .withColumnRenamed("chunk_text", "text")
-    val embedded = EmbedOps.embedText(chunked, "text", embedder)
-    val withIds = embedded
-      .withColumn("id",
-        Ingest.chunkId(col("source"), col("chunk_index"), col("text")))
-      .dropDuplicates("id")
     val name  = catalog.resolveForDimension(indexBase, embedder.dimension)
     val index = VectorIndex.createOrConnect(spark, catalog,
       IndexMeta(name, embedder.dimension))
-    index.upsert(withIds.select("id", "embedding", "text", "source", "chunk_index"))
+    upsertDocs(docs, index, embedder, new Chunker(chunkSize, chunkOverlap))
     index
+  }
+
+  /** The ingest pipeline, `(text, source)` docs → chunk → embed → id →
+    * id dedup → upsert into `index`; returns the rows written. */
+  private[graft] def upsertDocs(
+      docs: DataFrame, index: VectorIndex, embedder: Embedder,
+      chunker: Chunker): Long = {
+    val chunked = chunker.chunk(docs, "text").withColumnRenamed("chunk_text", "text")
+    val withIds = EmbedOps.embedText(chunked, "text", embedder)
+      .withColumn("id", chunkId(col("source"), col("chunk_index"), col("text")))
+      .dropDuplicates("id")
+    index.upsert(withIds.select("id", "embedding", "text", "source", "chunk_index"))
   }
 }

@@ -76,24 +76,18 @@ object Scans {
     * heavy row-local stage (canonicalize + robots fold, tokenize+md5).
     * A stream's logical plan has no usable size estimate at
     * construction time (StreamingRelation reports the sentinel), so the
-    * batch probe of [[fanOut]] cannot apply; instead the shuffle is
-    * gated on `spark.graft.stream.fanOut` (default TRUE — right for
-    * bounded replays over unsplittable fixture files, where the
-    * micro-batch otherwise runs its whole per-row stage in ONE task;
-    * measured r13: q7W 2.5 s with the fan-out vs 5.7 s without at
-    * local[32]). An at-scale deployment whose micro-batch file sets
-    * already split into enough tasks sets it FALSE and no per-batch
-    * exchange is ever added (ADVICE r12: gate the stream-side shuffle
-    * on a config so at-scale deployments skip it). Callers must
-    * project to the needed columns FIRST — the exchange must never
-    * carry payload text a downstream aggregate would have reduced.
+    * batch probe of [[fanOut]] cannot apply and the stream always fans
+    * out — right for bounded replays over unsplittable fixture files,
+    * where the micro-batch otherwise runs its whole per-row stage in ONE
+    * task (measured r13: q7W 2.5 s with the fan-out vs 5.7 s without at
+    * local[32]). At scale, where micro-batch file sets already split into
+    * enough tasks, the exchange is one narrow shuffle of the key columns.
+    * Callers must project to the needed columns FIRST — the exchange
+    * must never carry payload text a downstream aggregate would have
+    * reduced.
     */
   def streamFanOut(df: DataFrame, key: Column*): DataFrame = {
     require(key.nonEmpty, "streamFanOut needs a deterministic partitioning key")
-    val spark = df.sparkSession
-    val on = spark.conf.getOption("spark.graft.stream.fanOut")
-      .forall(_.toBoolean)
-    if (on) df.repartition(spark.sparkContext.defaultParallelism, key: _*)
-    else df
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, key: _*)
   }
 }

@@ -53,9 +53,19 @@ class CatalogSpec extends GraftSpec {
     assert(idx.stats.totalVectorCount == 2)
     assert(idx.stats.dimension == 3)
 
-    // wrong dimension rejected
-    val bad = Seq(("c", Seq(1f, 2f), "t")).toDF("id", "embedding", "text")
-    intercept[IllegalArgumentException](idx.upsert(bad))
+    // wrong-dimension and null embeddings are rejected, and a rejected
+    // batch leaves the log as it was, with no staging dir behind
+    val versions = idx.versions
+    Seq(
+      Seq(("c", Seq(1f, 2f), "t")).toDF("id", "embedding", "text"),
+      Seq(("c", Option.empty[Seq[Float]], "t")).toDF("id", "embedding", "text")
+    ).foreach { bad =>
+      intercept[IllegalArgumentException](idx.upsert(bad))
+      assert(idx.versions == versions)
+      assert(idx.read.count() == 2)
+      assert(idx.stats.totalVectorCount == 2)
+      assert(!new java.io.File(cat.dataPath("idx-c")).list().exists(_.startsWith(".staged_v")))
+    }
 
     // knn over the live view
     val hits = idx.knn(Seq(0f, 0f, 1f), 1).collect()
@@ -218,8 +228,25 @@ class CatalogSpec extends GraftSpec {
     val q = Seq(1f, 0.5f, 0f)
     assert(idx.knn(q, 2).select("id").as[String].collect().toSeq == Seq("c", "a"))
 
+    val (knnJobs, knnShuffle) = jobsOf("repeated knn") {
+      val hits = idx.knn(q, 2).collect()
+      assert(hits.map(_.getAs[String]("id")).toSeq == Seq("c", "a"))
+    }
+    assert(knnJobs == 1, s"repeated knn ran $knnJobs jobs, expected 1")
+    assert(knnShuffle == 0L, s"repeated knn shuffled $knnShuffle bytes")
+
+    // the upsert of a local frame is its write job alone: the dimension
+    // check rides in the write, the row count comes off the footers
+    val (upsertJobs, _) = jobsOf("upsert") {
+      assert(idx.upsert(Seq(("d", Seq(0f, 1f, 1f))).toDF("id", "embedding")) == 1L)
+    }
+    assert(upsertJobs == 1, s"upsert of a local frame ran $upsertJobs jobs, expected 1")
+  }
+
+  /** Runs `body` in a fresh job group; its jobs and their shuffle bytes. */
+  private def jobsOf(label: String)(body: => Unit): (Int, Long) = {
     val sc     = spark.sparkContext
-    val group  = s"snap-jobs-${System.nanoTime()}"
+    val group  = s"$label-${System.nanoTime()}"
     val jobs   = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val ended  = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -242,16 +269,14 @@ class CatalogSpec extends GraftSpec {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "repeated knn")
-      val hits = idx.knn(q, 2).collect()
-      assert(hits.map(_.getAs[String]("id")).toSeq == Seq("c", "a"))
+      sc.setJobGroup(group, label)
+      body
       // listener events are async; a job's task ends precede its end
       val deadline = System.nanoTime() + 10000000000L
       while ((jobs.isEmpty || ended.get() < jobs.size) && System.nanoTime() < deadline)
         Thread.sleep(20L)
-      assert(jobs.size == 1, s"repeated knn ran ${jobs.size} jobs, expected 1")
-      assert(ended.get() == 1, "the knn job never ended on the listener bus")
-      assert(shuffleBytes.get() == 0L, s"repeated knn shuffled ${shuffleBytes.get()} bytes")
+      assert(ended.get() == jobs.size, s"$label: a job never ended on the listener bus")
+      (jobs.size, shuffleBytes.get())
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
