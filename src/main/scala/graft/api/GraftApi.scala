@@ -2,7 +2,6 @@ package graft.api
 
 import graft.catalog.{IndexStats, VectorCatalog, VectorIndex}
 import graft.embed.Embedder
-import graft.ingest.Readers
 import graft.query.FilterDict
 import graft.rag.{Ingest, LlmClient, Rag, RagAnswer}
 import org.apache.spark.sql.SparkSession
@@ -62,6 +61,15 @@ final class GraftApi(
     * ids — so each upload appends just its own chunks to the index's
     * log. A file left in the landing dir by an earlier failed upload is
     * therefore not picked up by the next one; upload it again.
+    *
+    * The request's files are already in this process, so they are
+    * ingested on the driver (`Ingest.upsertFiles`): reading, chunking
+    * and the embedder all run here, not on executors. An upload is at
+    * most two Spark jobs with no shuffle — a probe of the log for the
+    * request's chunk ids, then one write of one part file — and never
+    * counts the index. `chunksIndexed` is the number of chunks newly
+    * live: the request's distinct chunk ids that the log did not hold,
+    * so re-uploading the same files reports 0.
     */
   def upload(files: Seq[(String, String)], landingDir: String): UploadResponse = {
     val dir = Paths.get(landingDir)
@@ -71,11 +79,7 @@ final class GraftApi(
       Files.write(dir.resolve(name), content.getBytes(StandardCharsets.UTF_8)).toString
     }.distinct
     if (written.isEmpty) UploadResponse(0, 0L)
-    else {
-      val before = index.stats.totalVectorCount
-      Ingest.ingestDf(spark, catalog, Readers.documents(spark, written),
-        index.meta.name, embedder)
-      UploadResponse(files.size, index.stats.totalVectorCount - before)
-    }
+    else UploadResponse(files.size,
+      Ingest.upsertFiles(spark, catalog, written, index.meta.name, embedder))
   }
 }

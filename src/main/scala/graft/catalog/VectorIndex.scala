@@ -367,6 +367,16 @@ final class VectorIndex(
     * the log's current state.
     */
   def stats: IndexStats = IndexStats(snapshot().liveCount, meta.dimension)
+
+  /** The ids among `ids` that the log holds, all of them live: no write
+    * removes an id. One job reading `id` alone, under a declared schema
+    * and filtered on the set, with no shuffle; none on an empty log.
+    */
+  private[graft] def liveAmong(ids: Set[String]): Set[String] =
+    if (ids.isEmpty || liveFiles().isEmpty) Set.empty
+    else spark.read.schema("id STRING").parquet(path)
+      .filter(col("id").isin(ids.toSeq: _*))
+      .collect().map(_.getString(0)).toSet
 }
 
 object VectorIndex {

@@ -1,7 +1,11 @@
 package graft.ingest
 
+import org.apache.commons.io.IOUtils
+import org.apache.hadoop.fs.{GlobFilter, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Document source scans (SURVEY §2 S1-S4): text directory, PDF
   * directory (parse stubbed — no PDF lib ships in this environment),
@@ -9,20 +13,21 @@ import org.apache.spark.sql.functions._
   */
 object Readers {
 
+  /** The file names [[documents]] reads, as `pathGlobFilter` globs. */
+  private val TextGlob = "*.txt"
+  private val PdfGlob  = "*.pdf"
+
   /** S1: recursive `*.txt` scan, one Document per file, `source` = path
     * (`scripts/ingest_documents.py:42-49`). `wholetext` keeps each file a
     * single row; Spark parallelizes across files, so a 100 TB corpus
     * just needs enough files.
     */
   def textDirectory(spark: SparkSession, dir: String): DataFrame =
-    textFiles(spark, Seq(dir))
-
-  private def textFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read
       .option("wholetext", "true")
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.txt")
-      .text(paths: _*)
+      .option("pathGlobFilter", TextGlob)
+      .text(dir)
       .select(col("value").as("text"), input_file_name().as("source"))
 
   /** Pluggable page extractor for binary documents; returns one string
@@ -56,15 +61,12 @@ object Readers {
   def pdfDirectory(
       spark: SparkSession, dir: String,
       parser: BinaryDocParser = new PdfParser
-  ): DataFrame = pdfFiles(spark, Seq(dir), parser)
-
-  private def pdfFiles(
-      spark: SparkSession, paths: Seq[String], parser: BinaryDocParser): DataFrame = {
+  ): DataFrame = {
     import spark.implicits._
     spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.pdf")
-      .load(paths: _*)
+      .option("pathGlobFilter", PdfGlob)
+      .load(dir)
       .select(col("content"), col("path"))
       .as[(Array[Byte], String)]
       .flatMap { case (bytes, path) =>
@@ -76,13 +78,37 @@ object Readers {
 
   /** S3: txt ∪ pdf (`scripts/ingest_documents.py:61-64`). */
   def documents(spark: SparkSession, dir: String): DataFrame =
-    documents(spark, Seq(dir))
+    textDirectory(spark, dir).unionByName(pdfDirectory(spark, dir))
 
-  /** S3 over several files or directories: the same `*.txt` / `*.pdf`
-    * selection, applied to each named file and under each directory.
+  /** [[documents]]' rows for request-sized input: the named files, read
+    * on the driver with no Spark job. The selection is the scan's — the
+    * `*.txt` / `*.pdf` globs and Spark's data-file rule (its file index
+    * skips a name starting `.`, or `_` without a `=`) — the PDF parser is
+    * [[PdfParser]], and `source` is the string each scan yields: the
+    * text scan's `input_file_name()` is the file's URI
+    * (`file:///d/a%20b.txt`), the binary scan's `path` the Hadoop path
+    * (`file:/d/a b.pdf`). A directory among `files` is not listed.
     */
-  def documents(spark: SparkSession, paths: Seq[String]): DataFrame =
-    textFiles(spark, paths).unionByName(pdfFiles(spark, paths, new PdfParser))
+  private[graft] def localDocuments(spark: SparkSession, files: Seq[String]): Seq[(String, String)] = {
+    val conf   = spark.sparkContext.hadoopConfiguration
+    val text   = new GlobFilter(TextGlob)
+    val pdf    = new GlobFilter(PdfGlob)
+    val parser = new PdfParser
+    files.flatMap { f =>
+      val p    = new Path(f)
+      val fs   = p.getFileSystem(conf)
+      val path = fs.makeQualified(p)
+      val name = path.getName
+      def bytes: Array[Byte] = {
+        val in = fs.open(path)
+        try IOUtils.toByteArray(in) finally in.close()
+      }
+      if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) Nil
+      else if (text.accept(path)) Seq(new String(bytes, UTF_8) -> path.toUri.toString)
+      else if (pdf.accept(path)) parser.pages(bytes).map(_ -> path.toString)
+      else Nil
+    }
+  }
 
   /** Compressed text-corpus scan: `*.txt.gz`, one document per file.
     * Hadoop's codec factory decompresses by extension inside the SAME

@@ -5,6 +5,10 @@ import graft.embed.{EmbedOps, Embedder}
 import graft.ingest.{Chunker, Readers}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
 
 /** Pluggable generation client (reference `app/rag/chain.py:39-44`:
   * ChatOpenAI, temperature 0.7, max_tokens 500). Offline default is a
@@ -160,9 +164,18 @@ final class Rag(
 }
 
 /** Batch ingestion job (reference `scripts/ingest_documents.py:108-233`):
-  * scan → chunk → embed → id/metadata → upsert, as one Spark pipeline.
-  * [[Ingest.upsertDocs]] is that pipeline, shared by the batch entry
-  * points and every micro-batch of [[graft.streaming.StreamingIngest]].
+  * scan → chunk → embed → id/metadata → upsert. Two paths run it:
+  *  - [[Ingest.upsertDocs]], one Spark pipeline over a DataFrame of
+  *    documents, shared by the batch entry points and every micro-batch
+  *    of [[graft.streaming.StreamingIngest]];
+  *  - [[Ingest.upsertFiles]], the request path of an upload, which reads,
+  *    chunks and embeds a request's files on the driver and writes one
+  *    local frame.
+  * They share the document selection and `source` strings
+  * ([[graft.ingest.Readers]]), the chunker kernel (`Chunker.split`, which
+  * `ChunkSplitExpr` evaluates), the embedding batches
+  * (`EmbedOps.embedBatches`), the id column and the row layout, so the
+  * same files give the same index rows either way.
   */
 object Ingest {
 
@@ -173,8 +186,8 @@ object Ingest {
     *    delimiter ambiguity (source="a|b",text="c" vs source="a",
     *    text="b|c" must not collide — file paths can contain any char);
     *  - 16 hex chars (64 bits) keeps birthday collisions negligible.
-    * Minted only in [[upsertDocs]], the one pipeline of batch and
-    * streaming ingest, so their id spaces never fork.
+    * Minted only in [[withId]], which both ingest paths call, so their id
+    * spaces never fork.
     */
   def chunkId(source: org.apache.spark.sql.Column,
       chunkIndex: org.apache.spark.sql.Column,
@@ -209,11 +222,15 @@ object Ingest {
       chunkSize: Int = 500,
       chunkOverlap: Int = 50
   ): VectorIndex = {
-    val name  = catalog.resolveForDimension(indexBase, embedder.dimension)
-    val index = VectorIndex.createOrConnect(spark, catalog,
-      IndexMeta(name, embedder.dimension))
+    val index = connect(spark, catalog, indexBase, embedder)
     upsertDocs(docs, index, embedder, new Chunker(chunkSize, chunkOverlap))
     index
+  }
+
+  private def connect(spark: SparkSession, catalog: VectorCatalog,
+      indexBase: String, embedder: Embedder): VectorIndex = {
+    val name = catalog.resolveForDimension(indexBase, embedder.dimension)
+    VectorIndex.createOrConnect(spark, catalog, IndexMeta(name, embedder.dimension))
   }
 
   /** The ingest pipeline, `(text, source)` docs → chunk → embed → id →
@@ -222,9 +239,57 @@ object Ingest {
       docs: DataFrame, index: VectorIndex, embedder: Embedder,
       chunker: Chunker): Long = {
     val chunked = chunker.chunk(docs, "text").withColumnRenamed("chunk_text", "text")
-    val withIds = EmbedOps.embedText(chunked, "text", embedder)
-      .withColumn("id", chunkId(col("source"), col("chunk_index"), col("text")))
-      .dropDuplicates("id")
-    index.upsert(withIds.select("id", "embedding", "text", "source", "chunk_index"))
+    index.upsert(withId(EmbedOps.embedText(chunked, "text", embedder)).dropDuplicates("id"))
   }
+
+  /** The request path: [[upsertDocs]]' pipeline over the named files at
+    * the default chunk size, run on the driver for input a request
+    * already holds. The files are read with
+    * `Readers.localDocuments`, chunked with `Chunker.split` and embedded
+    * in batches here; repeated `(source, chunk_index, text)` triples —
+    * two identical PDF pages — are dropped before embedding, which is
+    * the id dedup without its shuffle. Two jobs at most: one probe of
+    * the log for the request's ids, then the upsert of one local frame
+    * as one part file. Returns the chunks newly live in the index, the
+    * request's ids less those the log already held.
+    */
+  private[graft] def upsertFiles(
+      spark: SparkSession,
+      catalog: VectorCatalog,
+      files: Seq[String],
+      indexBase: String,
+      embedder: Embedder
+  ): Long = {
+    val index   = connect(spark, catalog, indexBase, embedder)
+    val chunker = new Chunker()
+    val chunks = Readers.localDocuments(spark, files).flatMap { case (text, source) =>
+      chunker.split(text).zipWithIndex.map { case (chunk, i) => (chunk, source, i) }
+    }.distinct
+    if (chunks.isEmpty) 0L
+    else {
+      val rows = EmbedOps.embedBatches(chunks.iterator, embedder)(_._1).map {
+        case ((text, source, i), vec) => Row(text, source, i, ArraySeq.unsafeWrapArray(vec))
+      }.toSeq
+      val withIds = withId(spark.createDataFrame(rows.asJava, LocalChunks))
+      // over a local relation the optimizer computes the ids: no job
+      val ids   = withIds.select("id").collect().map(_.getString(0)).toSet
+      val known = index.liveAmong(ids)
+      index.upsert(withIds.coalesce(1))
+      (ids -- known).size.toLong
+    }
+  }
+
+  /** [[upsertDocs]]' chunk rows before the id, as its plan declares them:
+    * a chunk is never null, the scans' `source` may be.
+    */
+  private val LocalChunks = StructType(Seq(
+    StructField("text", StringType, nullable = false),
+    StructField("source", StringType),
+    StructField("chunk_index", IntegerType, nullable = false),
+    StructField("embedding", ArrayType(FloatType, containsNull = false))))
+
+  /** The id, and the columns of an index row. */
+  private def withId(chunks: DataFrame): DataFrame =
+    chunks.withColumn("id", chunkId(col("source"), col("chunk_index"), col("text")))
+      .select("id", "embedding", "text", "source", "chunk_index")
 }

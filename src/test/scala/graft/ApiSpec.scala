@@ -3,12 +3,15 @@ package graft
 import graft.api.GraftApi
 import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
 import graft.embed.DeterministicEmbedder
-import graft.ingest.Chunker
+import graft.ingest.{Chunker, PdfWriter}
 import graft.query.FilterDict
 import graft.rag.Ingest
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class ApiSpec extends GraftSpec {
 
@@ -263,6 +266,94 @@ class ApiSpec extends GraftSpec {
     val live = index.stats.totalVectorCount
     Ingest.run(spark, catalog, landing, index.meta.name, embedder)
     assert(index.stats.totalVectorCount == live)
+  }
+
+  test("upload writes the rows and schema a directory ingest of the same files writes") {
+    val embedder   = new DeterministicEmbedder(32)
+    val chunker    = new Chunker(500, 50)
+    val paragraphs = (1 to 40).map(i =>
+      s"Paragraph $i reports segment revenue of ${i * 7 + 100} million dollars.")
+    val report = paragraphs.mkString("\n\n")
+    val texts = Seq(
+      "report.txt"  -> report,
+      "unicode.txt" -> "Der Umsatz stieg um 12 % \u2014 Caf\u00e9 in Z\u00fcrich, \u6771\u4eac, \ud83d\ude80.",
+      "empty.txt"   -> "",
+      "_hidden.txt" -> "A hidden file is stored, not ingested.",
+      "notes.md"    -> "Not a document either.")
+    val landing   = Files.createTempDirectory("graft-equiv-landing")
+    val upCatalog = new VectorCatalog(spark, Files.createTempDirectory("graft-equiv-up").toString)
+    val api = new GraftApi(spark, upCatalog,
+      VectorIndex.createOrConnect(spark, upCatalog, IndexMeta("equiv", 32)), embedder)
+    val expected = Seq(report, texts(1)._2).map(chunker.split(_).size).sum
+    assert(expected > 2)
+    assert(api.upload(texts, landing.toString).chunksIndexed == expected)
+    // the upload API carries text, and a PDF is binary: it goes through
+    // the request path the upload calls. Its two identical pages chunk
+    // to one repeated (source, chunk_index, text) triple, one row.
+    val page = "The board approved the merger on both identical pages."
+    val pdf  = landing.resolve("two pages.pdf")
+    Files.write(pdf, PdfWriter.typ0Pdf(Seq(page, page)))
+    assert(Ingest.upsertFiles(spark, upCatalog, Seq(pdf.toString), "equiv", embedder) == 1L)
+
+    val dirCatalog = new VectorCatalog(spark, Files.createTempDirectory("graft-equiv-dir").toString)
+    Ingest.run(spark, dirCatalog, landing.toString, "equiv", embedder)
+    def rows(c: VectorCatalog) = spark.read.parquet(c.dataPath("equiv")).drop("_version")
+    val (up, dir) = (rows(upCatalog), rows(dirCatalog))
+    assert(up.count() == expected + 1)
+    assert(up.exceptAll(dir).isEmpty && dir.exceptAll(up).isEmpty)
+    // Spark reads parquet as all-nullable, so the footers are compared:
+    // the parquet schema and the Spark schema written next to it
+    def schemas(c: VectorCatalog): Set[(String, String)] =
+      Files.list(Paths.get(c.dataPath("equiv"))).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).map { f =>
+          val footer = ParquetFileReader.open(HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+          try {
+            val meta = footer.getFooter.getFileMetaData
+            meta.getSchema.toString ->
+              meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")
+          } finally footer.close()
+        }.toSet
+    assert(schemas(upCatalog).size == 1)
+    assert(schemas(upCatalog) == schemas(dirCatalog))
+
+    // chunksIndexed counts chunks newly live: none on a repeat, and only
+    // the chunks of a changed paragraph
+    assert(api.upload(texts, landing.toString).chunksIndexed == 0L)
+    val changed = paragraphs.updated(20, paragraphs(20).replace("247", "742")).mkString("\n\n")
+    val fresh = (chunker.split(changed).zipWithIndex.toSet --
+      chunker.split(report).zipWithIndex).size
+    assert(fresh >= 1 && fresh < chunker.split(report).size)
+    assert(api.upload(Seq("report.txt" -> changed), landing.toString).chunksIndexed == fresh)
+  }
+
+  test("upload runs at most two jobs, shuffles nothing and adds one part file, at 200 shuffle partitions") {
+    val docsDir = Files.createTempDirectory("graft-upjobs-docs")
+    Files.writeString(docsDir.resolve("doc1.txt"),
+      "The quarterly revenue was $450 million in Q1 2024.")
+    val catalog  = new VectorCatalog(spark,
+      Files.createTempDirectory("graft-upjobs-cat").toString)
+    val embedder = new DeterministicEmbedder(32)
+    val index    = Ingest.run(spark, catalog, docsDir.toString, "upjobs-idx", embedder)
+    val api      = new GraftApi(spark, catalog, index, embedder)
+    val landing  = Files.createTempDirectory("graft-upjobs-landing").toString
+    val files = (0 until 10).map(i => f"f$i%02d.txt" -> (1 to 12).map(j =>
+      s"File $i, paragraph $j: the segment booked ${i * 100 + j} million in orders.")
+      .mkString("\n\n"))
+    def parts: Long = Files.list(Paths.get(catalog.dataPath(index.meta.name)))
+      .filter(_.toString.endsWith(".parquet")).count()
+    val before = parts
+    val key    = "spark.sql.shuffle.partitions"
+    val prior  = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    var indexed = 0L
+    val (jobs, shuffle) =
+      try jobsOf("upload") { indexed = api.upload(files, landing).chunksIndexed }
+      finally spark.conf.set(key, prior)
+    assert(indexed == files.map(f => new Chunker(500, 50).split(f._2).size).sum)
+    assert(jobs <= 2, s"upload ran $jobs jobs, expected at most 2")
+    assert(shuffle == 0L, s"upload shuffled $shuffle bytes")
+    assert(parts == before + 1)
   }
 
   test("http server: a health round trip does not stall on Nagle's algorithm") {

@@ -243,46 +243,6 @@ class CatalogSpec extends GraftSpec {
     assert(upsertJobs == 1, s"upsert of a local frame ran $upsertJobs jobs, expected 1")
   }
 
-  /** Runs `body` in a fresh job group; its jobs and their shuffle bytes. */
-  private def jobsOf(label: String)(body: => Unit): (Int, Long) = {
-    val sc     = spark.sparkContext
-    val group  = s"$label-${System.nanoTime()}"
-    val jobs   = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val ended  = new java.util.concurrent.atomic.AtomicInteger(0)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id")) {
-          jobs.add(js.jobId)
-          js.stageIds.foreach(id => stages.add(id))
-        }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (jobs.contains(je.jobId)) { ended.incrementAndGet(); () }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (stages.contains(te.stageId) && te.taskMetrics != null) {
-          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten +
-            te.taskMetrics.shuffleReadMetrics.totalBytesRead)
-          ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, label)
-      body
-      // listener events are async; a job's task ends precede its end
-      val deadline = System.nanoTime() + 10000000000L
-      while ((jobs.isEmpty || ended.get() < jobs.size) && System.nanoTime() < deadline)
-        Thread.sleep(20L)
-      assert(ended.get() == jobs.size, s"$label: a job never ended on the listener bus")
-      (jobs.size, shuffleBytes.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("live snapshot: concurrent knn during another handle's upsert answers old or new top-k") {
     val dim  = 8
     val meta = IndexMeta("snap-conc", dim)

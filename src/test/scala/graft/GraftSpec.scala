@@ -12,4 +12,44 @@ object TestSession {
 abstract class GraftSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir: String            = TestSession.sfDir
+
+  /** Runs `body` in a fresh job group; its jobs and their shuffle bytes. */
+  protected def jobsOf(label: String)(body: => Unit): (Int, Long) = {
+    val sc     = spark.sparkContext
+    val group  = s"$label-${System.nanoTime()}"
+    val jobs   = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended  = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id")) {
+          jobs.add(js.jobId)
+          js.stageIds.foreach(id => stages.add(id))
+        }
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (jobs.contains(je.jobId)) { ended.incrementAndGet(); () }
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskMetrics != null) {
+          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten +
+            te.taskMetrics.shuffleReadMetrics.totalBytesRead)
+          ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, label)
+      body
+      // listener events are async; a job's task ends precede its end
+      val deadline = System.nanoTime() + 10000000000L
+      while ((jobs.isEmpty || ended.get() < jobs.size) && System.nanoTime() < deadline)
+        Thread.sleep(20L)
+      assert(ended.get() == jobs.size, s"$label: a job never ended on the listener bus")
+      (jobs.size, shuffleBytes.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
