@@ -23,10 +23,16 @@ object Readers {
     * just needs enough files.
     */
   def textDirectory(spark: SparkSession, dir: String): DataFrame =
+    wholeTextFiles(spark, dir, TextGlob)
+
+  /** Recursive scan of the files under `dir` matching `glob`, one row
+    * `(text, source)` per file.
+    */
+  private def wholeTextFiles(spark: SparkSession, dir: String, glob: String): DataFrame =
     spark.read
       .option("wholetext", "true")
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", TextGlob)
+      .option("pathGlobFilter", glob)
       .text(dir)
       .select(col("value").as("text"), input_file_name().as("source"))
 
@@ -119,29 +125,8 @@ object Readers {
     * one-doc-per-file layout already implies.
     */
   def textGzDirectory(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .option("wholetext", "true")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.txt.gz")
-      .text(dir)
-      .select(col("value").as("text"), input_file_name().as("source"))
+    wholeTextFiles(spark, dir, "*.txt.gz")
 
-  /** JSONL corpus scan (one JSON document per line — the interchange
-    * format of web-scale text pipelines; engine extension, the reference
-    * reads only txt/pdf). The schema is REQUIRED: inference at 100 TB
-    * reads the corpus twice before the job starts. Malformed lines land
-    * in `_corrupt` (PERMISSIVE mode) instead of failing the job, so one
-    * bad record in a day-long ingest surfaces as data, not a stack
-    * trace; `source` carries the originating file.
-    *
-    * Spark restriction: a query that selects ONLY `_corrupt` (no data
-    * column) throws `AnalysisException` ("queries from raw JSON files are
-    * disallowed when the referenced columns only include the internal
-    * corrupt record column"). For a corrupt-rows-only audit, select at
-    * least one data column alongside it — e.g.
-    * `.select("_corrupt", schema.fieldNames.head).filter(col("_corrupt")
-    * .isNotNull)` — or `.cache()` the frame first.
-    */
   /** CSV landing-dir scan (the spreadsheet-era interchange format the
     * long tail of corpus drops still arrives in) — the q59 JSONL
     * contract on RFC 4180: explicit schema (no inference double-scan),
@@ -174,6 +159,22 @@ object Readers {
       .withColumn("source", input_file_name())
   }
 
+  /** JSONL corpus scan (one JSON document per line — the interchange
+    * format of web-scale text pipelines; engine extension, the reference
+    * reads only txt/pdf). The schema is REQUIRED: inference at 100 TB
+    * reads the corpus twice before the job starts. Malformed lines land
+    * in `_corrupt` (PERMISSIVE mode) instead of failing the job, so one
+    * bad record in a day-long ingest surfaces as data, not a stack
+    * trace; `source` carries the originating file.
+    *
+    * Spark restriction: a query that selects ONLY `_corrupt` (no data
+    * column) throws `AnalysisException` ("queries from raw JSON files are
+    * disallowed when the referenced columns only include the internal
+    * corrupt record column"). For a corrupt-rows-only audit, select at
+    * least one data column alongside it — e.g.
+    * `.select("_corrupt", schema.fieldNames.head).filter(col("_corrupt")
+    * .isNotNull)` — or `.cache()` the frame first.
+    */
   def jsonlDirectory(
       spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType

@@ -416,20 +416,14 @@ object DedupQueries {
       val docs = Tables.documents(s, d)
       val dict = Dedup.duplicatedWindows(
         Dedup.tokenWindows(docs, "doc_id", "text", SpanK), minDocs = 2)
+      // the parquet OUTPUT stays on disk: writing real files is part of
+      // the op (the drain's checkpoint is tmpfs, see StreamRunner.drain)
       val outDir = graft.util.TempDirs.scratch("graft-span-out-")
-      // checkpoint prefers tmpfs like every runToBatch stream (r12: the
-      // offset/commit WAL fsyncs per micro-batch; on a disk-backed
-      // tmpdir that jitter dominates a bounded replay) — the parquet
-      // OUTPUT stays on disk: writing real files is part of the op
-      val ckpt = graft.util.TempDirs.scratchIn("/dev/shm", "graft-span-ckpt-")
       val incoming = s.readStream.schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
         .filter(col("doc_id") >= 400)
       StreamingIngest.runSpanFlagStreamOnce(incoming, dict,
-        "doc_id", "text", k = SpanK, outDir = outDir, checkpointDir = ckpt)
-      // the stream has drained (AvailableNow): reclaim the tmpfs
-      // checkpoint now — a bench constructs this query up to 7 times
-      graft.util.TempDirs.deleteNow(ckpt)
+        "doc_id", "text", k = SpanK, outDir = outDir)
       // read back with the operator's OWN schema (derived from a
       // zero-row plan — no action): a corpus whose incoming half shares
       // no window writes no parquet data files, and a schema-inferring

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.LongType
   * (SURVEY §2.9): each query REALLY runs as a stream — file source over
   * the events fixture, state-store aggregation / `flatMapGroupsWithState`
   * sessions / `dropDuplicatesWithinWatermark` / stream-stream interval
-  * join, `Trigger.AvailableNow`, memory sink — and the materialized
+  * join, an AvailableNow drain into a memory sink — and the materialized
   * result is hash-compared against the batch SQL twin in DuckDB. This
   * graduates streaming from spec-only to the same oracle gate as every
   * batch operator: the claim is "the streaming form computes the SAME
@@ -172,11 +172,6 @@ object StreamingQueries {
     "q79_stream_ingest" -> { (s, d) =>
       import java.nio.file.Files
       val landing = graft.util.TempDirs.scratch("graft-landing-")
-      // tmpfs checkpoint (r12, the runToBatch pattern): the WAL fsync per
-      // micro-batch is measurement jitter, not part of the ingest; the
-      // landing JSON and the index parquet stay on disk — real files are
-      // what this query measures
-      val ckpt = graft.util.TempDirs.scratchIn("/dev/shm", "graft-ingest-ckpt-")
       val idxRoot = graft.util.TempDirs.scratch("graft-ingest-idx-")
       val docs    = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val nDocs   = docs.count()
@@ -199,8 +194,7 @@ object StreamingQueries {
         .json(landing)
         .select(col("text"), concat(col("doc_id"), lit(".txt")).as("source"))
       StreamingIngest.runIngestStreamOnce(uploads, index,
-        new DeterministicEmbedder(64), ckpt)
-      graft.util.TempDirs.deleteNow(ckpt) // drained: reclaim the tmpfs WAL
+        new DeterministicEmbedder(64))
       index.read
         .select(col("id"), col("source"), col("chunk_index"),
           length(col("text")).as("chunk_len"),
@@ -220,7 +214,6 @@ object StreamingQueries {
       import graft.operators.Knn
       val e       = Tables.embeddings(s, d)
       val landing = graft.util.TempDirs.scratch("graft-knnq-landing-")
-      val ckpt = graft.util.TempDirs.scratchIn("/dev/shm", "graft-knnq-ckpt-")
       val outDir  = graft.util.TempDirs.scratch("graft-knnq-out-")
       val qBatch  = e.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
@@ -230,8 +223,7 @@ object StreamingQueries {
       val queries = s.readStream.schema(qBatch.schema)
         .option("maxFilesPerTrigger", 1).parquet(landing)
       StreamingIngest.runKnnStreamOnce(queries, e, "vec_id", "embedding",
-        "query_id", "qvec", k = 5, outDir = outDir, checkpointDir = ckpt)
-      graft.util.TempDirs.deleteNow(ckpt) // drained: reclaim the tmpfs WAL
+        "query_id", "qvec", k = 5, outDir = outDir)
       // read back under the operator's own schema (zero-row plan, no
       // action) — an empty query stream writes no parquet data files
       val outSchema = Knn.topKBatch(e.limit(0), "vec_id", "embedding",
@@ -501,7 +493,6 @@ object StreamingQueries {
     "q8S_stream_export" -> { (s, d) =>
       val landing = graft.util.TempDirs.scratch("graft-export-landing-")
       val outDir  = graft.util.TempDirs.scratch("graft-export-out-")
-      val ck      = graft.util.TempDirs.scratch("graft-export-ck-")
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .repartition(4, pmod(col("doc_id"), lit(4)))
         .write.mode("overwrite").parquet(landing)
@@ -510,7 +501,7 @@ object StreamingQueries {
         .option("maxFilesPerTrigger", "2")
         .parquet(landing)
       graft.streaming.StreamingIngest.runExportStreamOnce(
-        docs, outDir, ck, nShards = 4, seed = 29)
+        docs, outDir, nShards = 4, seed = 29)
       val parsed = s.read.schema("doc_id LONG, text STRING")
         .json(outDir + "/batch-*/shard_*.jsonl.gz")
         .withColumn("_file", input_file_name())

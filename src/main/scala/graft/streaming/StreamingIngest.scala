@@ -14,144 +14,81 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * chunk → embed → id → dedup → upsert pipeline. No watermark is
   * needed (no event-time logic); exactly-once lands on the index's
   * upsert-by-id semantics + checkpointed source offsets.
+  *
+  * [[start]] is the resumable form: its checkpoint is the caller's, so a
+  * restart resumes from the committed offsets. The bounded `run*Once`
+  * runners are foreachBatch bodies handed to [[StreamRunner.drain]],
+  * which gives every run a fresh checkpoint: each is a one-shot replay
+  * of what its source holds, never a resume.
   */
 object StreamingIngest {
 
-  /** Shuffle partitions of every batch job inside the foreachBatch
-    * runners' bodies: sized for a micro-batch, not for the session's
-    * cores (VERDICT r12 #2: size per-batch task counts by batch volume).
-    * Results are partition-count-invariant.
-    */
-  private val BodyShufflePartitions = 8
-
-  /** Run `body` with `spark.sql.shuffle.partitions` set to
-    * [[BodyShufflePartitions]], restoring the previous value after. The
-    * foreachBatch runners below wrap their bounded stream drains in this:
-    * every batch job inside a foreachBatch body otherwise inherits the
-    * session's core-count-sized shuffle partitioning, which turns a
-    * micro-batch-sized aggregate into 32 tiny barrier tasks per batch.
-    * The streaming clone session snapshots the conf at `start()`, so
-    * set-before-start / restore-after-drain scopes the override to the
-    * stream exactly.
-    */
-  private def withShufflePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key  = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, BodyShufflePartitions.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** The landing-dir file stream: one row per *.txt file.
-    * `sourceBasename` keeps only the file NAME as the source — ids then
-    * survive relocations of the landing volume (re-reading the same
-    * files from a different mount must not mint a fresh id space), at
-    * the cost of requiring globally-unique landing file names.
-    */
-  private def landingStream(
-      spark: SparkSession, landingDir: String,
-      maxFilesPerTrigger: Int, sourceBasename: Boolean): DataFrame = {
-    val path = input_file_name()
-    spark.readStream
-      .option("wholetext", "true")
-      .option("pathGlobFilter", "*.txt")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(landingDir)
-      .select(col("value").as("text"),
-        (if (sourceBasename) regexp_extract(path, "[^/]+$", 0) else path)
-          .as("source"))
-  }
-
   /** One micro-batch of the upload→ingest path: [[graft.rag.Ingest]]'s
-    * own pipeline, so the batch and streaming forms can't fork. An empty
-    * micro-batch writes nothing (an empty write would still publish one
-    * empty part file and change the log's fingerprint).
+    * own pipeline at the default chunk size, so the batch and streaming
+    * forms can't fork. An empty micro-batch writes nothing (an empty
+    * write would still publish one empty part file and change the log's
+    * fingerprint).
     */
   private def ingestBatch(
-      batch: DataFrame, index: VectorIndex, embedder: Embedder,
-      chunker: Chunker): Unit =
+      batch: DataFrame, index: VectorIndex, embedder: Embedder): Unit =
     if (!batch.isEmpty) {
-      graft.rag.Ingest.upsertDocs(batch, index, embedder, chunker)
+      graft.rag.Ingest.upsertDocs(batch, index, embedder, new Chunker())
       ()
     }
 
-  /** Start a file-source stream over `landingDir` (*.txt) into `index`.
-    * `maxFilesPerTrigger` bounds micro-batch size — the streaming analog
-    * of the reference's upsert batching (100/request,
-    * `pinecone_service.py:135-140`).
+  /** Run `body` with `static` persisted and materialized: a static side
+    * joined into EVERY micro-batch would otherwise re-execute its
+    * lineage per batch (N batches = N full scans of its source).
+    */
+  private def pinned(static: DataFrame)(body: => Unit): Unit = {
+    static.persist()
+    try {
+      static.count() // materialize before the stream starts
+      body
+    } finally static.unpersist()
+  }
+
+  /** Start a file-source stream over `landingDir` (*.txt, one doc per
+    * file, `source` = the file's path) into `index`, checkpointed at
+    * `checkpointDir`. At most 100 files per trigger bound a micro-batch
+    * — the streaming analog of the reference's upsert batching
+    * (100/request, `pinecone_service.py:135-140`).
     */
   def start(
       spark: SparkSession,
       landingDir: String,
       index: VectorIndex,
       embedder: Embedder,
-      checkpointDir: String,
-      chunkSize: Int = 500,
-      chunkOverlap: Int = 50,
-      maxFilesPerTrigger: Int = 100,
-      sourceBasename: Boolean = false
-  ): StreamingQuery = {
-    val chunker = new Chunker(chunkSize, chunkOverlap)
-    landingStream(spark, landingDir, maxFilesPerTrigger, sourceBasename)
+      checkpointDir: String
+  ): StreamingQuery =
+    spark.readStream
+      .option("wholetext", "true")
+      .option("pathGlobFilter", "*.txt")
+      .option("maxFilesPerTrigger", 100)
+      .text(landingDir)
+      .select(col("value").as("text"), input_file_name().as("source"))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, index, embedder, chunker)
+        ingestBatch(batch, index, embedder)
       }
       .start()
-  }
 
   /** Bounded ingest of ANY streaming `(text, source)` DataFrame: drain
-    * everything currently available (`Trigger.AvailableNow`) through the
-    * same per-batch pipeline as the continuous form and return when the
-    * stream terminates — the shape a backfill or an oracle-gated replay
-    * uses. Offsets checkpoint exactly like the continuous form, so
-    * alternating runs never double-ingest.
+    * everything currently available through the same per-batch pipeline
+    * as the continuous form — the shape a backfill or an oracle-gated
+    * replay uses. Spark's file stream source costs ~ms PER FILE
+    * (driver-side listing + source log, PERF.md round 5), so a million
+    * tiny per-doc files bottleneck the driver: land uploads as BATCH
+    * files (one upload batch per JSONL file, the reference's own
+    * 100-per-request upsert batching) when volume is more than a trickle.
     */
   def runIngestStreamOnce(
-      docs: DataFrame,
-      index: VectorIndex,
-      embedder: Embedder,
-      checkpointDir: String,
-      chunkSize: Int = 500,
-      chunkOverlap: Int = 50
-  ): Unit = {
-    val chunker = new Chunker(chunkSize, chunkOverlap)
-    withShufflePartitions(docs.sparkSession) {
-      val q = docs.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          ingestBatch(batch, index, embedder, chunker)
-        }
-        .start()
-      q.awaitTermination()
-    }
-  }
-
-  /** Bounded form of [[start]] over a one-file-per-doc *.txt landing
-    * dir. NOTE the scale trap measured in PERF.md round 5: Spark's file
-    * stream source costs ~ms PER FILE (driver-side listing + source
-    * log), so a million tiny per-doc files bottleneck the driver — batch
-    * uploads into JSONL landing files ([[runLandingDirOnce]]'s caller
-    * can stream `spark.readStream.json` instead, one upload BATCH per
-    * file, the reference's own 100-per-request upsert batching) when
-    * ingest volume is more than a trickle.
-    */
-  def runLandingDirOnce(
-      spark: SparkSession,
-      landingDir: String,
-      index: VectorIndex,
-      embedder: Embedder,
-      checkpointDir: String,
-      chunkSize: Int = 500,
-      chunkOverlap: Int = 50,
-      maxFilesPerTrigger: Int = 100,
-      sourceBasename: Boolean = false
-  ): Unit =
-    runIngestStreamOnce(
-      landingStream(spark, landingDir, maxFilesPerTrigger, sourceBasename),
-      index, embedder, checkpointDir, chunkSize, chunkOverlap)
+      docs: DataFrame, index: VectorIndex, embedder: Embedder): Unit =
+    StreamRunner.drain(docs)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      ingestBatch(batch, index, embedder)
+    })
 
   /** Streaming corpus EXPORT — the write side of the streaming story
     * (landing → transform → publish while the crawl still runs): every
@@ -161,33 +98,20 @@ object StreamingIngest {
     * how the source cut files into triggers, so per-batch shard bytes
     * are not replayable — but the UNION of all batches' parsed content
     * is batch-split-independent, which is what the q8S gate checks.
-    * foreachBatch + AvailableNow + the checkpoint give each batch id a
-    * deterministic doc set per run; a batch retry overwrites its own
-    * dir (the sink's bytes are deterministic), never duplicates.
+    * Within one drain each batch id names a fixed doc set, so a batch
+    * retry overwrites its own dir (the sink's bytes are deterministic),
+    * never duplicates.
     */
   def runExportStreamOnce(
-      docs: DataFrame,
-      outDir: String,
-      checkpointDir: String,
-      nShards: Int,
-      seed: Int
-  ): Unit = {
-    withShufflePartitions(docs.sparkSession) {
-      val q = docs.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val dir = s"$outDir/batch-$id"
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-          graft.pipeline.JsonlSink
-            .writeJsonlShards(batch, "doc_id", "text", nShards, seed, dir)
-            .collect()
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-  }
+      docs: DataFrame, outDir: String, nShards: Int, seed: Int): Unit =
+    StreamRunner.drain(docs)(_.foreachBatch { (batch: DataFrame, id: Long) =>
+      val dir = s"$outDir/batch-$id"
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      graft.pipeline.JsonlSink
+        .writeJsonlShards(batch, "doc_id", "text", nShards, seed, dir)
+        .collect()
+      ()
+    })
 
   /** Streaming analytics over the events shape (batch q06's streaming
     * twin): watermarked tumbling-window counts per event type.
@@ -285,29 +209,17 @@ object StreamingIngest {
       incoming: DataFrame,
       dictionary: DataFrame,
       idCol: String, textCol: String, k: Int,
-      outDir: String,
-      checkpointDir: String
-  ): Unit = {
-    // the dictionary joins into EVERY micro-batch — persist it once or
-    // each batch re-executes the corpus-wide window aggregation lineage
-    // (N batches = N full corpus scans without this)
-    dictionary.persist()
-    try {
-      dictionary.count() // materialize before the stream starts
-      withShufflePartitions(incoming.sparkSession) {
-        val q = incoming.writeStream
-          .option("checkpointLocation", checkpointDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            graft.operators.Dedup
-              .spansAgainstDictionary(batch, idCol, textCol, dictionary, k)
-              .write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.awaitTermination()
-      }
-    } finally dictionary.unpersist()
-  }
+      outDir: String
+  ): Unit =
+    // the dictionary joins into every micro-batch: pinned, or each batch
+    // re-executes the corpus-wide window aggregation lineage
+    pinned(dictionary) {
+      StreamRunner.drain(incoming)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+        graft.operators.Dedup
+          .spansAgainstDictionary(batch, idCol, textCol, dictionary, k)
+          .write.mode("append").parquet(outDir)
+      })
+    }
 
   /** Streaming KNN serving: each arriving query micro-batch scores
     * against the STATIC corpus through the same batched-KNN reduction as
@@ -326,29 +238,19 @@ object StreamingIngest {
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String,
       queryIdCol: String, queryVecCol: String, k: Int,
-      outDir: String, checkpointDir: String
-  ): Unit = {
-    corpus.persist()
-    try {
-      corpus.count() // materialize before the stream starts
-      withShufflePartitions(queries.sparkSession) {
-        val q = queries.writeStream
-          .option("checkpointLocation", checkpointDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              graft.operators.Knn
-                .topKBatch(corpus, idCol, vecCol, batch, queryIdCol,
-                  queryVecCol, k)
-                .write.mode("append").parquet(outDir)
-              ()
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
-    } finally corpus.unpersist()
-  }
+      outDir: String
+  ): Unit =
+    pinned(corpus) {
+      StreamRunner.drain(queries)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) {
+          graft.operators.Knn
+            .topKBatch(corpus, idCol, vecCol, batch, queryIdCol,
+              queryVecCol, k)
+            .write.mode("append").parquet(outDir)
+          ()
+        }
+      })
+    }
 
   /** Watermarked stream-stream join with a time-interval condition
     * (the impressions-to-clicks attribution pattern): each left row
@@ -434,7 +336,7 @@ object StreamingIngest {
     * unbounded growth on an unbounded stream. The horizon keeps state
     * O(users inside their conversion window), is replay-deterministic
     * (event-time timers are data, not wall clock), and terminates under
-    * `Trigger.AvailableNow`. Requires `withWatermark` on `ts` upstream.
+    * [[StreamRunner.drain]]. Requires `withWatermark` on `ts` upstream.
     * A user whose state expired and who then sends fresh in-window
     * events restarts the funnel from step 1 — the semantics of "convert
     * within the window", matching the batch q4G min-chain whenever the
@@ -608,7 +510,7 @@ object StreamingIngest {
     /** Wall-clock idle flush: the session closes `ms` of processing time
       * after the user's last batch. Lowest latency, but wall-clock-
       * dependent (a replay of the same data can emit at different
-      * batches), and under `Trigger.AvailableNow` the engine keeps
+      * batches), and under an AvailableNow trigger the engine keeps
       * scheduling empty micro-batches forever to evaluate the pending
       * wall-clock timers (`FlatMapGroupsWithStateExec.shouldRunAnotherBatch`
       * is unconditionally true for ProcessingTimeTimeout) — so this mode
@@ -617,7 +519,7 @@ object StreamingIngest {
     final case class IdleWallClock(ms: Long) extends SessionFlush
     /** Event-time flush: the session closes when the watermark passes
       * `last event + horizonUs`. Deterministic on replay (timers are data,
-      * not wall clock) and terminates under `Trigger.AvailableNow` (the
+      * not wall clock) and terminates under an AvailableNow trigger (the
       * engine only re-batches while the watermark advances). Requires a
       * `withWatermark` upstream of the sessionizer. The mode to use for
       * incremental 100 TB pipelines: state stays O(open sessions) and a

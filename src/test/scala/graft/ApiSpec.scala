@@ -372,6 +372,11 @@ class ApiSpec extends GraftSpec {
     val health   = HttpRequest.newBuilder(
       URI.create(s"http://127.0.0.1:$port/api/v1/health")).GET().build()
     try {
+      // warm the connection, the handler and the JIT first: a cold
+      // round trip is slow whether or not Nagle is on
+      (0 until 10).foreach { _ =>
+        assert(client.send(health, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      }
       // with TCP_NODELAY off each round trip waits ~10 ms or more for
       // the delayed ACK of the header segment
       val ms = (0 until 25).map { _ =>

@@ -2,13 +2,102 @@ package graft
 
 import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
 import graft.embed.DeterministicEmbedder
-import graft.streaming.StreamingIngest
+import graft.streaming.{StreamRunner, StreamingIngest}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException, StreamingQueryListener, StreamingQueryProgress, Trigger}
 
 import java.nio.file.Files
 
 class StreamingSpec extends GraftSpec {
+
+  /** `body`'s result and the progress events of the one stream it runs,
+    * collected once that stream has terminated: the listener bus delivers
+    * asynchronously, and a query's terminated event follows its last
+    * progress event.
+    */
+  private def progressOf[T](body: => T): (T, Seq[StreamingQueryProgress]) = {
+    val events     = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        events.add(e.progress)
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.countDown()
+    }
+    spark.streams.addListener(listener)
+    val result =
+      try {
+        val r = body
+        assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "no terminated event")
+        r
+      } finally spark.streams.removeListener(listener)
+    (result, events.toArray(Array.empty[StreamingQueryProgress]).toSeq)
+  }
+
+  /** Called inside a foreachBatch body: the checkpoint dir of the one
+    * stream running in the session, found by the query id its
+    * `metadata` file records.
+    */
+  private def runningCheckpoint(): java.io.File = {
+    val id    = spark.streams.active.head.id.toString
+    val roots = Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
+    val dirs  = roots.flatMap(r => Option(new java.io.File(r).listFiles()).toSeq.flatten)
+      .filter(_.getName.startsWith("graft-stream-ckpt-"))
+    val mine = dirs.filter { d =>
+      val meta = new java.io.File(d, "metadata")
+      meta.isFile && Files.readString(meta.toPath).contains(id)
+    }
+    assert(mine.size == 1, s"checkpoints of query $id: $mine")
+    mine.head
+  }
+
+  test("bounded drains run at 8 shuffle partitions, restore the session and leave no checkpoint") {
+    import spark.implicits._
+    val key  = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try {
+      val dir = Files.createTempDirectory("graft-drain").toString
+      Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k").write.parquet(s"$dir/in")
+      val stream = spark.readStream.schema("id LONG, k STRING").parquet(s"$dir/in")
+
+      // a Complete-mode aggregate: its state store is sized by the drain
+      val (counts, progress) = progressOf {
+        StreamRunner.runToBatch(stream.groupBy("k").count(), OutputMode.Complete)
+          .as[(String, Long)].collect().toMap
+      }
+      assert(counts == Map("a" -> 2L, "b" -> 1L))
+      val stateParts = progress.flatMap(_.stateOperators.map(_.numShufflePartitions))
+      assert(stateParts.nonEmpty && stateParts.forall(_ == 8), s"state partitions $stateParts")
+      assert(spark.conf.get(key) == "3")
+
+      // a foreachBatch body plans its jobs at the drain's value
+      var seen = Seq.empty[String]
+      var ckpts = Seq.empty[java.io.File]
+      StreamRunner.drain(stream)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+        seen = Seq(spark.conf.get(key), batch.sparkSession.conf.get(key))
+        ckpts :+= runningCheckpoint()
+      })
+      assert(seen == Seq("8", "8"))
+      assert(spark.conf.get(key) == "3")
+
+      // a body that throws: the failure reaches the caller, and the
+      // session's value and the checkpoint are still restored / reclaimed
+      val err = intercept[StreamingQueryException] {
+        StreamRunner.drain(stream)(_.foreachBatch { (_: DataFrame, _: Long) =>
+          ckpts :+= runningCheckpoint()
+          throw new IllegalStateException("drain body failed")
+        })
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("drain body failed")))
+      assert(spark.conf.get(key) == "3")
+      assert(ckpts.size == 2 && ckpts.forall(!_.exists()), s"left behind: $ckpts")
+    } finally spark.conf.set(key, prev)
+  }
 
   test("file-source streaming ingest: landing files flow into the index") {
     val landing    = Files.createTempDirectory("graft-landing")
@@ -475,7 +564,7 @@ class StreamingSpec extends GraftSpec {
       .parquet(s"$dir/in")
     val outDir = s"$dir/out"
     StreamingIngest.runSpanFlagStreamOnce(stream, dict, "doc_id", "text",
-      k = k, outDir = outDir, checkpointDir = s"$dir/ckpt")
+      k = k, outDir = outDir)
 
     val got = spark.read.parquet(outDir)
       .select("doc", "span_start", "span_end", "n_windows")
@@ -499,13 +588,12 @@ class StreamingSpec extends GraftSpec {
     qBatch.repartition(3).write.parquet(s"$dir/in")
     val stream = spark.readStream.schema(qBatch.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-    StreamingIngest.runKnnStreamOnce(stream, corpus, "vec_id", "embedding",
-      "query_id", "qvec", k = 3, outDir = s"$dir/out",
-      checkpointDir = s"$dir/ckpt")
+    val (_, progress) = progressOf {
+      StreamingIngest.runKnnStreamOnce(stream, corpus, "vec_id", "embedding",
+        "query_id", "qvec", k = 3, outDir = s"$dir/out")
+    }
     // three landing files, one per trigger → three REAL micro-batches
-    // (offsets log has one entry per batch)
-    val nBatches = new java.io.File(s"$dir/ckpt/offsets")
-      .listFiles().count(f => f.getName.forall(_.isDigit))
+    val nBatches = progress.count(_.numInputRows > 0)
     assert(nBatches == 3, s"expected 3 micro-batches, got $nBatches")
     // the appended union equals the batch twin exactly
     val got = spark.read.parquet(s"$dir/out")
