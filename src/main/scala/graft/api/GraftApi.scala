@@ -6,7 +6,7 @@ import graft.query.FilterDict
 import graft.rag.{Ingest, LlmClient, Rag, RagAnswer}
 import org.apache.spark.sql.SparkSession
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 /** Library mirror of the reference's 5 HTTP endpoints
@@ -51,35 +51,42 @@ final class GraftApi(
   /** GET /api/v1/stats (`routes.py:266-311`). */
   def stats: IndexStats = index.stats
 
-  /** POST /api/v1/upload (`routes.py:314-334`): save payloads to a
-    * landing dir and ingest them into the index. (The reference crashes
-    * here on a missing import — behavior reimplemented from intent, bug
-    * not replicated; SURVEY §4 "known reference bugs".)
+  /** [[uploadBytes]] of text files, each encoded as UTF-8. */
+  def upload(files: Seq[(String, String)], landingDir: String): UploadResponse =
+    uploadBytes(files.map { case (name, text) => name -> text.getBytes(UTF_8) }, landingDir)
+
+  /** POST /api/v1/upload (`routes.py:314-334`): write the files' bytes
+    * to a landing dir and ingest those same bytes into the index, so a
+    * binary PDF arrives intact. (The reference crashes here on a missing
+    * import — behavior reimplemented from intent, bug not replicated;
+    * SURVEY §4 "known reference bugs".)
     *
-    * Only this request's files are read — with the `*.txt` / `*.pdf`
+    * Only this request's files are ingested — with the `*.txt` / `*.pdf`
     * selection of a directory ingest, and the same `source` and chunk
     * ids — so each upload appends just its own chunks to the index's
     * log. A file left in the landing dir by an earlier failed upload is
     * therefore not picked up by the next one; upload it again.
     *
     * The request's files are already in this process, so they are
-    * ingested on the driver (`Ingest.upsertFiles`): reading, chunking
+    * ingested on the driver (`Ingest.upsertFiles`): parsing, chunking
     * and the embedder all run here, not on executors. An upload is at
     * most two Spark jobs with no shuffle — a probe of the log for the
     * request's chunk ids, then one write of one part file — and never
     * counts the index. `chunksIndexed` is the number of chunks newly
     * live: the request's distinct chunk ids that the log did not hold,
-    * so re-uploading the same files reports 0.
+    * so re-uploading the same files reports 0. A name sent twice in one
+    * request is ingested once, as its last copy (the one on disk).
     */
-  def upload(files: Seq[(String, String)], landingDir: String): UploadResponse = {
+  def uploadBytes(files: Seq[(String, Array[Byte])], landingDir: String): UploadResponse = {
     val dir = Paths.get(landingDir)
     Files.createDirectories(dir)
-    val written = files.map { case (name, content) =>
+    val written = files.map { case (name, bytes) =>
       require(!name.contains("/") && !name.contains(".."), s"unsafe filename $name")
-      Files.write(dir.resolve(name), content.getBytes(StandardCharsets.UTF_8)).toString
-    }.distinct
+      Files.write(dir.resolve(name), bytes).toString -> bytes
+    }
+    val last = written.toMap
     if (written.isEmpty) UploadResponse(0, 0L)
-    else UploadResponse(files.size,
-      Ingest.upsertFiles(spark, catalog, written, index.meta.name, embedder))
+    else UploadResponse(files.size, Ingest.upsertFiles(spark, catalog,
+      written.map(_._1).distinct.map(p => p -> last(p)), index.meta.name, embedder))
   }
 }

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 
 /** Thin HTTP layer over [[GraftApi]] — the reference's FastAPI surface
@@ -30,15 +30,21 @@ import scala.jdk.CollectionConverters._
   *    (`routes.py:314-334`). Accepts real `multipart/form-data` (what
   *    the reference's `UploadFile` takes and a browser form sends) and,
   *    as a convenience extension, JSON `{files: [{name, content}]}`.
+  *    Uploads are byte-exact: a multipart part's bytes (a binary PDF
+  *    included) and a JSON `content`'s UTF-8 bytes are what the landing
+  *    dir holds and what the index ingests.
   *
-  * Validation mirrors the Pydantic contract (`routes.py:27-51`): a
-  * malformed body — invalid JSON, empty/missing question, top_k outside
-  * [1, 20] or non-integral, malformed chat_history, a filter naming an
-  * unknown field or comparing it with a wrongly typed operand — is 422
-  * `{detail}` (FastAPI's RequestValidationError status), not 400.
-  * Unknown paths → 404; wrong method on a known path → 405; handler
-  * exceptions → 500 `{detail}` (the reference's error contract).
-  * Request bodies are capped at [[GraftHttpServer.MaxBodyBytes]] → 413.
+  * One dispatcher serves every route, the UI and static ones included,
+  * with one contract: a path that is not a route is 404; a route called
+  * with another method is 405; a body over
+  * [[GraftHttpServer.MaxBodyBytes]] is 413; a malformed request is 422
+  * `{detail}` (FastAPI's RequestValidationError status, not 400,
+  * mirroring the Pydantic contract of `routes.py:27-51`) — a JSON route's
+  * body that is not a JSON object, an empty/missing question, top_k
+  * outside [1, 20] or non-integral, malformed chat_history or files, a
+  * filter naming an unknown field or comparing it with a wrongly typed
+  * operand; any other failure is 500 `{detail}`. No client input is
+  * answered with a 500.
   *
   * Serving is driver-side by design, like every query engine's
   * coordinator endpoint: a request fans out to the cluster as one Spark
@@ -63,9 +69,8 @@ import scala.jdk.CollectionConverters._
   * `-Dsun.net.httpserver.nodelay=false` still wins.
   */
 final class GraftHttpServer(api: GraftApi, uploadDir: String, port: Int = 0) {
-  import GraftHttpServer.{MaxBodyBytes, NoDelay}
+  import GraftHttpServer._
 
-  private val mapper = new ObjectMapper()
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
 
@@ -74,38 +79,8 @@ final class GraftHttpServer(api: GraftApi, uploadDir: String, port: Int = 0) {
     require(server == null, "server already started")
     if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    route("/api/v1/health", "GET") { _ =>
-      ok(jmap("status" -> "healthy", "service" -> "graft", "version" -> "0.4"))
-    }
-    route("/api/v1/stats", "GET") { _ =>
-      val s = api.stats
-      ok(jmap(
-        "total_vector_count" -> Long.box(s.totalVectorCount),
-        "dimension" -> Int.box(s.dimension),
-        "index_fullness" -> Double.box(s.indexFullness)))
-    }
-    route("/api/v1/query", "POST") { body =>
-      val (question, topK) = questionAndTopK(body)
-      val filter = Option(body.get("filter")).map {
-        case f: java.util.Map[_, _] => toScala(f).asInstanceOf[Map[String, Any]]
-        case other => invalid(s"filter must be an object, got: $other")
-      }
-      answerJson(api.query(question, topK, filter))
-    }
-    route("/api/v1/chat", "POST") { body =>
-      val (question, topK) = questionAndTopK(body)
-      val history = Option(body.get("chat_history")).toSeq.flatMap {
-        case l: java.util.List[_] => l.asScala.toSeq.map {
-          case m: java.util.Map[_, _] =>
-            (String.valueOf(m.get("question")), String.valueOf(m.get("answer")))
-          case other => invalid(s"malformed chat_history entry: $other")
-        }
-        case other => invalid(s"chat_history must be a list, got: $other")
-      }
-      answerJson(api.chat(question, history, topK))
-    }
-    uploadRoute()
-    staticRoutes()
+    // "/" is the JDK server's catch-all context: every request lands here
+    server.createContext("/", (ex: HttpExchange) => dispatch(ex))
     pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     server.setExecutor(pool)
     server.start()
@@ -117,210 +92,145 @@ final class GraftHttpServer(api: GraftApi, uploadDir: String, port: Int = 0) {
     if (pool != null) { pool.shutdown(); pool = null }
   }
 
-  // ---- request plumbing ----------------------------------------------
+  // ---- routes ----------------------------------------------------------
 
-  private final case class HttpError(code: Int, detail: String)
-      extends RuntimeException(detail)
-  /** Request-shape/validation failure — Pydantic's 422, not 400. */
-  private def invalid(detail: String): Nothing = throw HttpError(422, detail)
+  /** Every route by its exact path. */
+  private val routes: Map[String, Route] = Map(
+    "/" -> Route("GET", _ => ok(jmap(
+      "message" -> "Welcome to graft — Spark-native RAG engine",
+      "version" -> "0.4",
+      "docs" -> "/ui"))),
+    "/ui" -> Route("GET", _ => asset("index.html", "text/html")),
+    "/static/app.js" -> Route("GET", _ => asset("app.js", "text/javascript")),
+    "/static/styles.css" -> Route("GET", _ => asset("styles.css", "text/css")),
+    "/api/v1/health" -> Route("GET", _ =>
+      ok(jmap("status" -> "healthy", "service" -> "graft", "version" -> "0.4"))),
+    "/api/v1/stats" -> Route("GET", { _ =>
+      val s = api.stats
+      ok(jmap(
+        "total_vector_count" -> Long.box(s.totalVectorCount),
+        "dimension" -> Int.box(s.dimension),
+        "index_fullness" -> Double.box(s.indexFullness)))
+    }),
+    "/api/v1/query" -> Route("POST", { r =>
+      val body = r.json
+      val (question, topK) = questionAndTopK(body)
+      val filter = Option(body.get("filter")).map {
+        case f: java.util.Map[_, _] => toScala(f).asInstanceOf[Map[String, Any]]
+        case other => invalid(s"filter must be an object, got: $other")
+      }
+      answerJson(api.query(question, topK, filter))
+    }),
+    "/api/v1/chat" -> Route("POST", { r =>
+      val body = r.json
+      val (question, topK) = questionAndTopK(body)
+      val history = Option(body.get("chat_history")).toSeq.flatMap {
+        case l: java.util.List[_] => l.asScala.toSeq.map {
+          case m: java.util.Map[_, _] =>
+            (String.valueOf(m.get("question")), String.valueOf(m.get("answer")))
+          case other => invalid(s"malformed chat_history entry: $other")
+        }
+        case other => invalid(s"chat_history must be a list, got: $other")
+      }
+      answerJson(api.chat(question, history, topK))
+    }),
+    "/api/v1/upload" -> Route("POST", upload))
 
-  private type Response = (Int, String)
-  private def ok(payload: Object): Response =
-    (200, mapper.writeValueAsString(payload))
+  // ---- the dispatcher --------------------------------------------------
 
-  /** Read the request body, enforcing the size cap (→ 413). */
-  private def readBody(ex: HttpExchange): Array[Byte] = {
-    val in = ex.getRequestBody
-    val buf = new java.io.ByteArrayOutputStream()
-    val chunk = new Array[Byte](64 * 1024)
-    var n = in.read(chunk)
-    while (n >= 0) {
-      buf.write(chunk, 0, n)
-      if (buf.size() > MaxBodyBytes)
-        throw HttpError(413, s"request body exceeds $MaxBodyBytes bytes")
-      n = in.read(chunk)
-    }
-    buf.toByteArray
-  }
-
-  private def respond(ex: HttpExchange, code: Int, body: Array[Byte],
-      contentType: String): Unit = {
-    ex.getResponseHeaders.set("Content-Type", contentType)
-    ex.sendResponseHeaders(code, body.length.toLong)
-    ex.getResponseBody.write(body)
+  private def dispatch(ex: HttpExchange): Unit = {
+    val reply =
+      try routes.get(ex.getRequestURI.getPath) match {
+        case None => error(404, "not found")
+        case Some(Route(method, _)) if method != ex.getRequestMethod =>
+          error(405, s"method not allowed, use $method")
+        case Some(Route(_, handle)) =>
+          val body = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
+          if (body.length > MaxBodyBytes)
+            error(413, s"request body exceeds $MaxBodyBytes bytes")
+          else handle(Request(
+            Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse(""), body))
+      } catch {
+        case e: IllegalArgumentException => error(422, String.valueOf(e.getMessage))
+        case e: Exception => error(500, String.valueOf(e.getMessage))
+      }
+    ex.getResponseHeaders.set("Content-Type", reply.contentType)
+    ex.sendResponseHeaders(reply.code, reply.body.length.toLong)
+    ex.getResponseBody.write(reply.body)
     ex.close()
   }
 
-  private def guarded(ex: HttpExchange)(f: => Response): Unit = {
-    val (code, json) =
-      try f
-      catch {
-        case HttpError(code, detail) => (code, errJson(detail))
-        case e: IllegalArgumentException =>
-          (422, errJson(String.valueOf(e.getMessage)))
-        case e: Exception => (500, errJson(String.valueOf(e.getMessage)))
-      }
-    respond(ex, code, json.getBytes(StandardCharsets.UTF_8), "application/json")
+  private def ok(payload: Object): Reply = Reply(200, mapper.writeValueAsBytes(payload))
+
+  private def error(code: Int, detail: String): Reply =
+    Reply(code, mapper.writeValueAsBytes(jmap("detail" -> detail)))
+
+  private def asset(name: String, mime: String): Reply = {
+    val in = getClass.getClassLoader.getResourceAsStream(s"graft/static/$name")
+    try Reply(200, in.readAllBytes(), s"$mime; charset=utf-8") finally in.close()
   }
 
-  private def route(path: String, method: String)(
-      handler: java.util.Map[String, Object] => Response): Unit =
-    server.createContext(path, (ex: HttpExchange) => guarded(ex) {
-      if (ex.getRequestMethod != method)
-        (405, errJson(s"method not allowed, use $method"))
-      else if (ex.getRequestURI.getPath != path)
-        (404, errJson("not found"))
-      else {
-        val raw = new String(readBody(ex), StandardCharsets.UTF_8)
-        val body: java.util.Map[String, Object] =
-          if (method == "GET" || raw.isEmpty)
-            new java.util.HashMap[String, Object]()
-          else
-            try mapper.readValue(raw, classOf[java.util.Map[String, Object]])
-            catch { case _: Exception => invalid("invalid JSON body") }
-        handler(body)
-      }
-    })
+  // ---- upload: multipart/form-data or the JSON convenience shape -------
 
-  // ---- upload: multipart/form-data or the JSON convenience shape -----
-
-  private def uploadRoute(): Unit =
-    server.createContext("/api/v1/upload", (ex: HttpExchange) => guarded(ex) {
-      if (ex.getRequestMethod != "POST")
-        (405, errJson("method not allowed, use POST"))
-      else if (ex.getRequestURI.getPath != "/api/v1/upload")
-        (404, errJson("not found"))
-      else {
-        val contentType =
-          Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-        val raw = readBody(ex)
-        val files =
-          if (contentType.toLowerCase.startsWith("multipart/form-data"))
-            parseMultipart(raw, contentType)
-          else jsonFiles(raw)
-        // the reference returns HTTP 200 with success=false on failure
-        try {
-          api.upload(files, uploadDir)
-          ok(jmap("success" -> Boolean.box(true),
-            "files" -> files.map(_._1).asJava))
-        } catch {
-          case e: HttpError => throw e // validation stays a 4xx
-          case e: Exception =>
-            ok(jmap("success" -> Boolean.box(false),
-              "error" -> String.valueOf(e.getMessage)))
+  private def upload(r: Request): Reply = {
+    val files =
+      if (r.contentType.toLowerCase.startsWith("multipart/form-data")) multipartFiles(r)
+      else r.json.get("files") match {
+        case l: java.util.List[_] => l.asScala.toSeq.map {
+          case m: java.util.Map[_, _] => (m.get("name"), m.get("content")) match {
+            case (name: String, content: String) => name -> content.getBytes(UTF_8)
+            case _ => invalid(s"files entry needs a string name and content: $m")
+          }
+          case other => invalid(s"malformed files entry: $other")
         }
+        case _ => invalid("files must be a list of {name, content}")
       }
-    })
-
-  private def jsonFiles(raw: Array[Byte]): Seq[(String, String)] = {
-    val body =
-      try mapper.readValue(new String(raw, StandardCharsets.UTF_8),
-        classOf[java.util.Map[String, Object]])
-      catch { case _: Exception => invalid("invalid JSON body") }
-    body.get("files") match {
-      case l: java.util.List[_] => l.asScala.toSeq.map {
-        case m: java.util.Map[_, _] =>
-          (String.valueOf(m.get("name")), String.valueOf(m.get("content")))
-        case other => invalid(s"malformed files entry: $other")
-      }
-      case _ => invalid("files must be a list of {name, content}")
+    // the reference returns HTTP 200 with success=false on failure
+    try {
+      api.uploadBytes(files, uploadDir)
+      ok(jmap("success" -> Boolean.box(true), "files" -> files.map(_._1).asJava))
+    } catch {
+      case e: Exception =>
+        ok(jmap("success" -> Boolean.box(false), "error" -> String.valueOf(e.getMessage)))
     }
   }
 
-  /** Minimal RFC 7578 multipart/form-data parser: split the body on the
-    * boundary delimiter, keep parts carrying a `filename`. ISO-8859-1 is
-    * the decode charset because it maps bytes 1:1 to chars — offsets
-    * survive the round-trip, and each part's content re-encodes to its
-    * exact original bytes before the real UTF-8 decode.
+  /** Minimal RFC 7578 multipart/form-data parser: the body is cut at each
+    * boundary delimiter, and every part with a `filename` yields its
+    * content bytes exactly as sent (up to the CRLF that precedes the next
+    * delimiter). Part headers are read as UTF-8, as browsers send names.
     */
-  private def parseMultipart(
-      body: Array[Byte], contentType: String): Seq[(String, String)] = {
-    val boundary = contentType.split("boundary=", 2) match {
-      case Array(_, b) =>
-        val raw = b.split(";")(0).trim
-        if (raw.startsWith("\"") && raw.endsWith("\"") && raw.length >= 2)
-          raw.substring(1, raw.length - 1)
-        else raw
-      case _ => invalid("multipart/form-data without a boundary")
+  private def multipartFiles(r: Request): Seq[(String, Array[Byte])] = {
+    val boundary = r.contentType.split("boundary=", 2) match {
+      case Array(_, b) => b.split(";")(0).trim.stripPrefix("\"").stripSuffix("\"")
+      case _ => ""
     }
     if (boundary.isEmpty) invalid("multipart/form-data without a boundary")
-    val text  = new String(body, StandardCharsets.ISO_8859_1)
-    val delim = "--" + boundary
-    val fnRe  = """filename="([^"]*)"""".r
-    text.split(java.util.regex.Pattern.quote(delim), -1).toSeq
-      .drop(1)                                   // preamble before part 1
-      .filterNot(_.startsWith("--"))             // closing delimiter tail
-      .flatMap { seg =>
-        val part = seg.stripPrefix("\r\n")
-        val sep  = part.indexOf("\r\n\r\n")
-        if (sep < 0) None
-        else {
-          val headers = part.substring(0, sep)
-          // each part's content ends with the CRLF that precedes the
-          // next delimiter line
-          val content = part.substring(sep + 4).stripSuffix("\r\n")
-          fnRe.findFirstMatchIn(headers).map(_.group(1)).filter(_.nonEmpty)
-            .map(name => name -> new String(
-              content.getBytes(StandardCharsets.ISO_8859_1),
-              StandardCharsets.UTF_8))
-        }
-      }
-  }
-
-  // ---- root + static UI ----------------------------------------------
-
-  private def staticRoutes(): Unit = {
-    server.createContext("/ui", (ex: HttpExchange) =>
-      serveAsset(ex, exactPath = Some("/ui"), name = "index.html"))
-    server.createContext("/static/", (ex: HttpExchange) => {
-      val name = ex.getRequestURI.getPath.stripPrefix("/static/")
-      if (name.isEmpty || name.contains("/") || name.contains(".."))
-        respond(ex, 404, errJson("not found").getBytes(StandardCharsets.UTF_8),
-          "application/json")
-      else serveAsset(ex, exactPath = None, name = name)
-    })
-    // "/" is the JDK server's catch-all context: exact root serves the
-    // reference's welcome JSON (`app/main.py:76-83`); anything unmatched
-    // by a more specific context is a 404
-    server.createContext("/", (ex: HttpExchange) => guarded(ex) {
-      if (ex.getRequestURI.getPath != "/") (404, errJson("not found"))
-      else if (ex.getRequestMethod != "GET")
-        (405, errJson("method not allowed, use GET"))
-      else ok(jmap(
-        "message" -> "Welcome to graft — Spark-native RAG engine",
-        "version" -> "0.4",
-        "docs" -> "/ui"))
-    })
-  }
-
-  private def serveAsset(ex: HttpExchange, exactPath: Option[String],
-      name: String): Unit = {
-    val notFound = exactPath.exists(_ != ex.getRequestURI.getPath)
-    val stream = Option(
-      getClass.getClassLoader.getResourceAsStream(s"graft/static/$name"))
-    (if (notFound) None else stream) match {
-      case Some(in) =>
-        val bytes =
-          try in.readAllBytes()
-          finally in.close()
-        respond(ex, 200, bytes, contentTypeOf(name))
-      case None =>
-        stream.foreach(_.close())
-        respond(ex, 404, errJson("not found").getBytes(StandardCharsets.UTF_8),
-          "application/json")
+    val body  = r.body
+    val delim = s"--$boundary".getBytes(UTF_8)
+    val at = Iterator.iterate(indexOf(body, delim, 0))(i => indexOf(body, delim, i + delim.length))
+      .takeWhile(_ >= 0).toVector
+    at.zip(at.drop(1) :+ body.length).flatMap { case (from, until) =>
+      val seg = body.slice(from + delim.length, until)
+      val sep = indexOf(seg, CrLf ++ CrLf, 0)
+      // "--" after the delimiter closes the body
+      if (seg.startsWith("--".getBytes(UTF_8)) || sep < 0) None
+      else FileName.findFirstMatchIn(new String(seg, 0, sep, UTF_8))
+        .map(_.group(1)).filter(_.nonEmpty)
+        .map(_ -> seg.slice(sep + 4, seg.length - (if (seg.endsWith(CrLf)) 2 else 0)))
     }
   }
 
-  private def contentTypeOf(name: String): String =
-    if (name.endsWith(".html")) "text/html; charset=utf-8"
-    else if (name.endsWith(".js")) "text/javascript; charset=utf-8"
-    else if (name.endsWith(".css")) "text/css; charset=utf-8"
-    else "application/octet-stream"
+  /** The first index at or after `from` where `needle` starts in `hay`, or -1. */
+  private def indexOf(hay: Array[Byte], needle: Array[Byte], from: Int): Int = {
+    var i = from
+    while (i <= hay.length - needle.length &&
+        !java.util.Arrays.equals(hay, i, i + needle.length, needle, 0, needle.length))
+      i += 1
+    if (i <= hay.length - needle.length) i else -1
+  }
 
-  // ---- response helpers ----------------------------------------------
-
-  private def errJson(detail: String): String =
-    mapper.writeValueAsString(jmap("detail" -> detail))
+  // ---- request and response shapes -------------------------------------
 
   private def questionAndTopK(body: java.util.Map[String, Object]): (String, Int) = {
     val question = body.get("question") match {
@@ -342,7 +252,7 @@ final class GraftHttpServer(api: GraftApi, uploadDir: String, port: Int = 0) {
     (question, topK)
   }
 
-  private def answerJson(a: graft.rag.RagAnswer): Response =
+  private def answerJson(a: graft.rag.RagAnswer): Reply =
     ok(jmap(
       "question" -> a.question,
       "answer" -> a.answer,
@@ -377,4 +287,28 @@ object GraftHttpServer {
 
   /** The JDK server's `TCP_NODELAY` switch, read once per JVM. */
   private val NoDelay = "sun.net.httpserver.nodelay"
+
+  private val CrLf     = "\r\n".getBytes(UTF_8)
+  private val FileName = """filename="([^"]*)"""".r
+
+  private val mapper = new ObjectMapper()
+
+  private final case class Route(method: String, handle: Request => Reply)
+
+  /** A routed request: its `Content-Type` and its body, within the cap. */
+  private final case class Request(contentType: String, body: Array[Byte]) {
+    /** The body as a JSON object; any other body is a 422. */
+    def json: java.util.Map[String, Object] =
+      (try mapper.readValue(body, classOf[java.util.Map[String, Object]])
+       catch { case _: Exception => null }) match {
+        case null => invalid("body must be a JSON object")
+        case m => m
+      }
+  }
+
+  private final case class Reply(code: Int, body: Array[Byte],
+      contentType: String = "application/json")
+
+  /** Request-shape/validation failure — Pydantic's 422, not 400. */
+  private def invalid(detail: String): Nothing = throw new IllegalArgumentException(detail)
 }

@@ -1,6 +1,5 @@
 package graft.ingest
 
-import org.apache.commons.io.IOUtils
 import org.apache.hadoop.fs.{GlobFilter, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -86,29 +85,26 @@ object Readers {
   def documents(spark: SparkSession, dir: String): DataFrame =
     textDirectory(spark, dir).unionByName(pdfDirectory(spark, dir))
 
-  /** [[documents]]' rows for request-sized input: the named files, read
-    * on the driver with no Spark job. The selection is the scan's — the
+  /** [[documents]]' rows for request-sized input: the named files, as
+    * `(path, bytes)` a request already holds, parsed on the driver with no
+    * Spark job and no read of the files. The selection is the scan's — the
     * `*.txt` / `*.pdf` globs and Spark's data-file rule (its file index
     * skips a name starting `.`, or `_` without a `=`) — the PDF parser is
     * [[PdfParser]], and `source` is the string each scan yields: the
     * text scan's `input_file_name()` is the file's URI
     * (`file:///d/a%20b.txt`), the binary scan's `path` the Hadoop path
-    * (`file:/d/a b.pdf`). A directory among `files` is not listed.
+    * (`file:/d/a b.pdf`).
     */
-  private[graft] def localDocuments(spark: SparkSession, files: Seq[String]): Seq[(String, String)] = {
+  private[graft] def localDocuments(
+      spark: SparkSession, files: Seq[(String, Array[Byte])]): Seq[(String, String)] = {
     val conf   = spark.sparkContext.hadoopConfiguration
     val text   = new GlobFilter(TextGlob)
     val pdf    = new GlobFilter(PdfGlob)
     val parser = new PdfParser
-    files.flatMap { f =>
+    files.flatMap { case (f, bytes) =>
       val p    = new Path(f)
-      val fs   = p.getFileSystem(conf)
-      val path = fs.makeQualified(p)
+      val path = p.getFileSystem(conf).makeQualified(p)
       val name = path.getName
-      def bytes: Array[Byte] = {
-        val in = fs.open(path)
-        try IOUtils.toByteArray(in) finally in.close()
-      }
       if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) Nil
       else if (text.accept(path)) Seq(new String(bytes, UTF_8) -> path.toUri.toString)
       else if (pdf.accept(path)) parser.pages(bytes).map(_ -> path.toString)

@@ -168,7 +168,7 @@ final class Rag(
   *  - [[Ingest.upsertDocs]], one Spark pipeline over a DataFrame of
   *    documents, shared by the batch entry points and every micro-batch
   *    of [[graft.streaming.StreamingIngest]];
-  *  - [[Ingest.upsertFiles]], the request path of an upload, which reads,
+  *  - [[Ingest.upsertFiles]], the request path of an upload, which parses,
   *    chunks and embeds a request's files on the driver and writes one
   *    local frame.
   * They share the document selection and `source` strings
@@ -242,21 +242,22 @@ object Ingest {
     index.upsert(withId(EmbedOps.embedText(chunked, "text", embedder)).dropDuplicates("id"))
   }
 
-  /** The request path: [[upsertDocs]]' pipeline over the named files at
-    * the default chunk size, run on the driver for input a request
-    * already holds. The files are read with
-    * `Readers.localDocuments`, chunked with `Chunker.split` and embedded
-    * in batches here; repeated `(source, chunk_index, text)` triples —
-    * two identical PDF pages — are dropped before embedding, which is
-    * the id dedup without its shuffle. Two jobs at most: one probe of
-    * the log for the request's ids, then the upsert of one local frame
-    * as one part file. Returns the chunks newly live in the index, the
-    * request's ids less those the log already held.
+  /** The request path: [[upsertDocs]]' pipeline over a request's files,
+    * `(path, bytes)` as the landing dir holds them, at the default chunk
+    * size, run on the driver. The bytes are parsed with
+    * `Readers.localDocuments` (the files are not read back), chunked
+    * with `Chunker.split` and embedded in batches here; repeated
+    * `(source, chunk_index, text)` triples — two identical PDF pages —
+    * are dropped before embedding, which is the id dedup without its
+    * shuffle. Two jobs at most: one probe of the log for the request's
+    * ids, then the upsert of one local frame as one part file. Returns
+    * the chunks newly live in the index, the request's ids less those
+    * the log already held.
     */
   private[graft] def upsertFiles(
       spark: SparkSession,
       catalog: VectorCatalog,
-      files: Seq[String],
+      files: Seq[(String, Array[Byte])],
       indexBase: String,
       embedder: Embedder
   ): Long = {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{AnnIvf, AnnLsh, Knn}
+import graft.util.TempDirs
 import org.apache.spark.sql.functions._
 
 class AnnSpec extends GraftSpec {
@@ -141,7 +142,7 @@ class AnnSpec extends GraftSpec {
   }
 
   test("bucket-partitioned store prunes partitions at the scan") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ann-store").toString
+    val path = TempDirs.scratch("graft-ann-store")
     AnnLsh.writeBucketPartitioned(emb, "embedding", path, nPlanes = 6)
     val approx = AnnLsh.topKApproxFromStore(spark, path, "vec_id", "embedding",
       qvec, 10, nPlanes = 6, probeRadius = 1)
@@ -160,7 +161,7 @@ class AnnSpec extends GraftSpec {
   test("IVF cell-partitioned store prunes partitions and matches direct probe") {
     val cents    = AnnIvf.centroids(emb, "vec_id", "embedding", 16)
     val assigned = AnnIvf.assign(emb, "vec_id", "embedding", cents)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
+    val path = TempDirs.scratch("graft-ivf-store")
     AnnIvf.writeCellPartitioned(assigned, path)
     val fromStore = AnnIvf.topKApproxFromStore(spark, path, cents,
       "vec_id", "embedding", qvec, 10, nProbe = 4)

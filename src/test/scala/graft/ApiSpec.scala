@@ -6,6 +6,7 @@ import graft.embed.DeterministicEmbedder
 import graft.ingest.{Chunker, PdfWriter}
 import graft.query.FilterDict
 import graft.rag.Ingest
+import graft.util.TempDirs
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
@@ -38,10 +39,10 @@ class ApiSpec extends GraftSpec {
   }
 
   test("api mirrors the five endpoints end-to-end") {
-    val docsDir = Files.createTempDirectory("graft-api-docs")
+    val docsDir = Paths.get(TempDirs.scratch("graft-api-docs"))
     Files.writeString(docsDir.resolve("doc1.txt"),
       "The quarterly revenue was $450 million in Q1 2024.")
-    val catRoot  = Files.createTempDirectory("graft-api-cat").toString
+    val catRoot  = TempDirs.scratch("graft-api-cat")
     val catalog  = new VectorCatalog(spark, catRoot)
     val embedder = new DeterministicEmbedder(32)
     val index    = Ingest.run(spark, catalog, docsDir.toString, "api-idx", embedder)
@@ -76,7 +77,7 @@ class ApiSpec extends GraftSpec {
     assert(c.retrieved.nonEmpty)
 
     // upload: new content becomes retrievable
-    val landing = Files.createTempDirectory("graft-api-landing").toString
+    val landing = TempDirs.scratch("graft-api-landing")
     val up = api.upload(Seq(("doc2.txt",
       "Headcount grew to 9,000 employees by December.")), landing)
     assert(up.filesReceived == 1 && up.chunksIndexed > 0)
@@ -91,14 +92,14 @@ class ApiSpec extends GraftSpec {
     import java.net.URI
     import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-    val docsDir = Files.createTempDirectory("graft-http-docs")
+    val docsDir = Paths.get(TempDirs.scratch("graft-http-docs"))
     Files.writeString(docsDir.resolve("doc1.txt"),
       "The quarterly revenue was $450 million in Q1 2024.")
     val catalog  = new VectorCatalog(spark,
-      Files.createTempDirectory("graft-http-cat").toString)
+      TempDirs.scratch("graft-http-cat"))
     val embedder = new DeterministicEmbedder(32)
     val index    = Ingest.run(spark, catalog, docsDir.toString, "http-idx", embedder)
-    val landing  = Files.createTempDirectory("graft-http-landing").toString
+    val landing  = TempDirs.scratch("graft-http-landing")
     val srv      = new GraftHttpServer(
       new GraftApi(spark, catalog, index, embedder), landing)
     val port     = srv.start()
@@ -234,16 +235,106 @@ class ApiSpec extends GraftSpec {
     } finally srv.stop()
   }
 
+  test("http server: every route answers malformed requests with 404, 405, 413 or 422, never 500") {
+    import graft.api.GraftHttpServer
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+
+    val docsDir = Paths.get(TempDirs.scratch("graft-fuzz-docs"))
+    Files.writeString(docsDir.resolve("doc1.txt"),
+      "The quarterly revenue was $450 million in Q1 2024.")
+    val catalog  = new VectorCatalog(spark, TempDirs.scratch("graft-fuzz-cat"))
+    val embedder = new DeterministicEmbedder(32)
+    val index    = Ingest.run(spark, catalog, docsDir.toString, "fuzz-idx", embedder)
+    val srv      = new GraftHttpServer(new GraftApi(spark, catalog, index, embedder),
+      TempDirs.scratch("graft-fuzz-landing"))
+    val port     = srv.start()
+    val client   = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    def send(method: String, path: String, body: Array[Byte] = Array.emptyByteArray,
+        contentType: String = "application/json"): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        .header("Content-Type", contentType)
+        .method(method, HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+    // every answer is kept, so one run reports every case that breaks;
+    // an error answer must also have FastAPI's {detail} shape
+    val seen = Seq.newBuilder[(Int, Int, Boolean, String)]
+    def check(code: Int, request: String, r: HttpResponse[String]): Unit =
+      seen += ((code, r.statusCode(), code == 200 || r.body().startsWith("{\"detail\":"),
+        s"$request -> ${r.statusCode()} ${r.body().take(80).replace('\n', ' ')}"))
+    def expect(code: Int, method: String, path: String, body: String = "",
+        contentType: String = "application/json"): Unit =
+      check(code, s"$method $path $body", send(method, path, body.getBytes("UTF-8"), contentType))
+    val gets  = Seq("/", "/ui", "/static/app.js", "/static/styles.css",
+      "/api/v1/health", "/api/v1/stats")
+    val posts = Seq("/api/v1/query", "/api/v1/chat", "/api/v1/upload")
+    try {
+      // exact paths only: anything else is 404 whatever the method
+      for (path <- Seq("/api/v1/nope", "/api/v1/query/x", "/api/v1/health/", "/api",
+          "/ui/x", "/static/", "/static/nope.js", "/static/../app.js", "/index.html");
+          method <- Seq("GET", "POST"))
+        expect(404, method, path)
+      // every route checks its method, the UI and static ones included
+      for (path <- gets; method <- Seq("POST", "DELETE", "PUT")) expect(405, method, path)
+      for (path <- posts; method <- Seq("GET", "DELETE", "PUT")) expect(405, method, path)
+      // a JSON route's body must be a JSON object
+      for (path <- posts; body <- Seq("", "null", "[]", "[{}]", "\"x\"", "5", "true",
+          "{", "{\"question\":", "not json", "\u0000"))
+        expect(422, "POST", path, body)
+      // a body over the cap is 413, on every route that reads one
+      val over = Array.fill[Byte](GraftHttpServer.MaxBodyBytes + 1)('x')
+      for (path <- posts :+ "/api/v1/health")
+        check(413, s"over-cap $path",
+          send(if (posts.contains(path)) "POST" else "GET", path, over))
+      for (path <- Seq("/api/v1/query", "/api/v1/chat")) {
+        for (q <- Seq("", "\"question\":null,", "\"question\":\"  \",", "\"question\":5,",
+            "\"question\":[\"x\"],", "\"question\":{},"))
+          expect(422, "POST", path, s"{$q\"top_k\":3}")
+        for (k <- Seq("0", "21", "-1", "3.7", "1e400", "4294967297",
+            "123456789012345678901234567890", "\"5\"", "true", "[]", "{}"))
+          expect(422, "POST", path, s"""{"question":"what was the revenue?","top_k":$k}""")
+      }
+      for (h <- Seq("5", "\"x\"", "{}", "[1]", "[[]]", "[\"x\"]", "true"))
+        expect(422, "POST", "/api/v1/chat",
+          s"""{"question":"and the quarter?","chat_history":$h}""")
+      for (f <- Seq("{}", "5", "\"x\"", "[1]", "[]", "true", """{"nosuch":"x"}""",
+          """{"source":{}}""", """{"source":{"$regex":"a"}}""", """{"source":{"$in":[]}}""",
+          """{"source":{"$in":"x"}}""", """{"source":{"$eq":{}}}""", """{"source":[1]}""",
+          """{"$and":[]}""", """{"$and":[1]}""", """{"$or":{}}""", """{"$and":[{}]}""",
+          """{"a.b":1}""", """{"chunk_index":{"$lt":"abc"}}"""))
+        expect(422, "POST", "/api/v1/query",
+          s"""{"question":"what was the revenue?","filter":$f}""")
+      for (b <- Seq("{}", """{"files":5}""", """{"files":{}}""", """{"files":[1]}""",
+          """{"files":[{"name":"a.txt"}]}""", """{"files":[{"name":5,"content":"x"}]}""",
+          """{"files":[{"name":"a.txt","content":null}]}"""))
+        expect(422, "POST", "/api/v1/upload", b)
+      for (ct <- Seq("multipart/form-data", "multipart/form-data; boundary=",
+          "multipart/form-data; boundary=\"\""))
+        expect(422, "POST", "/api/v1/upload", "--x\r\n\r\nbody\r\n--x--\r\n", ct)
+      // well-formed requests that carry nothing to do still succeed
+      expect(200, "POST", "/api/v1/upload", """{"files":[]}""")
+      expect(200, "POST", "/api/v1/upload", "no parts here",
+        "multipart/form-data; boundary=x")
+      val answers = seen.result()
+      val fivehundreds = answers.collect { case (_, 500, _, what) => what }
+      assert(fivehundreds.isEmpty, s"client input answered 500:\n${fivehundreds.mkString("\n")}")
+      val wrong = answers.collect {
+        case (code, got, shaped, what) if got != code || !shaped => s"expected $code: $what"
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+    } finally srv.stop()
+  }
+
   test("upload ingests only the request's files: the log grows by exactly their chunks") {
-    val docsDir = Files.createTempDirectory("graft-upload-docs")
+    val docsDir = Paths.get(TempDirs.scratch("graft-upload-docs"))
     Files.writeString(docsDir.resolve("doc1.txt"),
       "The quarterly revenue was $450 million in Q1 2024.")
     val catalog  = new VectorCatalog(spark,
-      Files.createTempDirectory("graft-upload-cat").toString)
+      TempDirs.scratch("graft-upload-cat"))
     val embedder = new DeterministicEmbedder(32)
     val index    = Ingest.run(spark, catalog, docsDir.toString, "upload-idx", embedder)
     val api      = new GraftApi(spark, catalog, index, embedder)
-    val landing  = Files.createTempDirectory("graft-upload-landing").toString
+    val landing  = TempDirs.scratch("graft-upload-landing")
     def logRows: Long = spark.read.parquet(catalog.dataPath(index.meta.name)).count()
     val long = (1 to 40).map(i =>
       s"Paragraph $i reports segment revenue of ${i * 7} million dollars.").mkString("\n\n")
@@ -280,22 +371,37 @@ class ApiSpec extends GraftSpec {
       "empty.txt"   -> "",
       "_hidden.txt" -> "A hidden file is stored, not ingested.",
       "notes.md"    -> "Not a document either.")
-    val landing   = Files.createTempDirectory("graft-equiv-landing")
-    val upCatalog = new VectorCatalog(spark, Files.createTempDirectory("graft-equiv-up").toString)
+    val landing   = Paths.get(TempDirs.scratch("graft-equiv-landing"))
+    val upCatalog = new VectorCatalog(spark, TempDirs.scratch("graft-equiv-up"))
     val api = new GraftApi(spark, upCatalog,
       VectorIndex.createOrConnect(spark, upCatalog, IndexMeta("equiv", 32)), embedder)
     val expected = Seq(report, texts(1)._2).map(chunker.split(_).size).sum
     assert(expected > 2)
     assert(api.upload(texts, landing.toString).chunksIndexed == expected)
-    // the upload API carries text, and a PDF is binary: it goes through
-    // the request path the upload calls. Its two identical pages chunk
-    // to one repeated (source, chunk_index, text) triple, one row.
+    // a PDF is binary (FlateDecode streams): it goes through a multipart
+    // POST, byte for byte. Its two identical pages chunk to one repeated
+    // (source, chunk_index, text) triple, one row.
     val page = "The board approved the merger on both identical pages."
-    val pdf  = landing.resolve("two pages.pdf")
-    Files.write(pdf, PdfWriter.typ0Pdf(Seq(page, page)))
-    assert(Ingest.upsertFiles(spark, upCatalog, Seq(pdf.toString), "equiv", embedder) == 1L)
+    val pdf  = PdfWriter.typ0Pdf(Seq(page, page))
+    val srv  = new graft.api.GraftHttpServer(api, landing.toString)
+    val port = srv.start()
+    val boundary = "graftPdfBoundary7"
+    val multipart = Array.concat(
+      (s"--$boundary\r\nContent-Disposition: form-data; name=\"files\"; " +
+        s"filename=\"two pages.pdf\"\r\nContent-Type: application/pdf\r\n\r\n").getBytes("UTF-8"),
+      pdf, s"\r\n--$boundary--\r\n".getBytes("UTF-8"))
+    val resp =
+      try java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:$port/api/v1/upload"))
+          .header("Content-Type", s"multipart/form-data; boundary=$boundary")
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(multipart)).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      finally srv.stop()
+    assert(resp.statusCode() == 200 && resp.body().contains("\"success\":true"), resp.body())
+    assert(Files.readAllBytes(landing.resolve("two pages.pdf")).sameElements(pdf))
 
-    val dirCatalog = new VectorCatalog(spark, Files.createTempDirectory("graft-equiv-dir").toString)
+    val dirCatalog = new VectorCatalog(spark, TempDirs.scratch("graft-equiv-dir"))
     Ingest.run(spark, dirCatalog, landing.toString, "equiv", embedder)
     def rows(c: VectorCatalog) = spark.read.parquet(c.dataPath("equiv")).drop("_version")
     val (up, dir) = (rows(upCatalog), rows(dirCatalog))
@@ -328,15 +434,15 @@ class ApiSpec extends GraftSpec {
   }
 
   test("upload runs at most two jobs, shuffles nothing and adds one part file, at 200 shuffle partitions") {
-    val docsDir = Files.createTempDirectory("graft-upjobs-docs")
+    val docsDir = Paths.get(TempDirs.scratch("graft-upjobs-docs"))
     Files.writeString(docsDir.resolve("doc1.txt"),
       "The quarterly revenue was $450 million in Q1 2024.")
     val catalog  = new VectorCatalog(spark,
-      Files.createTempDirectory("graft-upjobs-cat").toString)
+      TempDirs.scratch("graft-upjobs-cat"))
     val embedder = new DeterministicEmbedder(32)
     val index    = Ingest.run(spark, catalog, docsDir.toString, "upjobs-idx", embedder)
     val api      = new GraftApi(spark, catalog, index, embedder)
-    val landing  = Files.createTempDirectory("graft-upjobs-landing").toString
+    val landing  = TempDirs.scratch("graft-upjobs-landing")
     val files = (0 until 10).map(i => f"f$i%02d.txt" -> (1 to 12).map(j =>
       s"File $i, paragraph $j: the segment booked ${i * 100 + j} million in orders.")
       .mkString("\n\n"))
@@ -362,11 +468,11 @@ class ApiSpec extends GraftSpec {
     import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
     val catalog  = new VectorCatalog(spark,
-      Files.createTempDirectory("graft-nodelay-cat").toString)
+      TempDirs.scratch("graft-nodelay-cat"))
     val index    = VectorIndex.createOrConnect(spark, catalog, IndexMeta("nodelay-idx", 8))
     val srv      = new GraftHttpServer(
       new GraftApi(spark, catalog, index, new DeterministicEmbedder(8)),
-      Files.createTempDirectory("graft-nodelay-landing").toString)
+      TempDirs.scratch("graft-nodelay-landing"))
     val port     = srv.start()
     val client   = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
     val health   = HttpRequest.newBuilder(

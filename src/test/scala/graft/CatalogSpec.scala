@@ -2,17 +2,17 @@ package graft
 
 import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
 import graft.functions.VectorFunctions
+import graft.util.TempDirs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 class CatalogSpec extends GraftSpec {
   import spark.implicits._
 
-  private lazy val root = Files.createTempDirectory("graft-catalog").toString
+  private lazy val root = TempDirs.scratch("graft-catalog")
   private lazy val cat  = new VectorCatalog(spark, root)
 
   test("create is idempotent; exists/dimension/list/delete roundtrip") {
@@ -122,7 +122,7 @@ class CatalogSpec extends GraftSpec {
     // Hadoop's local createNewFile (exists-then-create) lets both win on
     // nearly every round of this race; both writers would then stage
     // and publish under the same version
-    val dir = new org.apache.hadoop.fs.Path(Files.createTempDirectory("graft-claim").toString)
+    val dir = new org.apache.hadoop.fs.Path(TempDirs.scratch("graft-claim"))
     val fs  = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val doubleWins = (0 until 200).count { i =>
       val marker  = new org.apache.hadoop.fs.Path(dir, s"_v$i.commit")

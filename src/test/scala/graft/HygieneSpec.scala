@@ -1,0 +1,29 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Spec hygiene, checked mechanically like [[RegistrySpec]]'s doc
+  * counts. A scratch dir made with the JDK's temp-file calls outlives the
+  * run: one full test run once left 58 `graft*` dirs in java.io.tmpdir, and
+  * repeated runs piled them up. The specs make their scratch dirs with
+  * `graft.util.TempDirs.scratch`, which deletes them at JVM exit, and
+  * this spec fails the build when a JDK temp call comes back.
+  */
+class HygieneSpec extends AnyFunSuite {
+
+  test("no spec makes a temp dir or file that outlives the run") {
+    val jdkTemp = """(Files\s*\.\s*createTempDirectory|createTempFile)\s*\(""".r
+    val offenders = Files.walk(Paths.get("src/test")).iterator().asScala
+      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".scala"))
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if jdkTemp.findFirstIn(line).isDefined => s"$f:${i + 1}"
+        }
+      }.toSeq
+    assert(offenders.isEmpty,
+      s"make scratch dirs with graft.util.TempDirs.scratch: ${offenders.mkString(", ")}")
+  }
+}

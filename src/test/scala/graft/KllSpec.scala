@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Kll, KllSketch, Sketch}
+import graft.util.TempDirs
 import org.apache.spark.sql.functions._
 
 class KllSpec extends GraftSpec {
@@ -172,7 +173,7 @@ class KllSpec extends GraftSpec {
     import spark.implicits._
     import graft.streaming.StreamingIngest
     import graft.streaming.StreamingIngest.KllEvent
-    val dir = java.nio.file.Files.createTempDirectory("graft-kll-stream").toString
+    val dir = TempDirs.scratch("graft-kll-stream")
     val events = (0 until 5).flatMap { g =>
       (0 until 4000).map(i => KllEvent(s"g$g", i.toLong,
         (((i * 2654435761L + g) % 99991L + 99991L) % 99991L).toDouble))

@@ -1,14 +1,15 @@
 package graft
 
 import graft.multimodal.Multimodal
+import graft.util.TempDirs
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class MultimodalSpec extends GraftSpec {
 
   private lazy val mediaDir = {
-    val dir = Files.createTempDirectory("graft-media")
+    val dir = Paths.get(TempDirs.scratch("graft-media"))
     Files.write(dir.resolve("a.img"), Array.tabulate[Byte](400)(i => (i % 251).toByte))
     Files.write(dir.resolve("b.img"), Array.tabulate[Byte](100)(i => (i % 7).toByte))
     Files.write(dir.resolve("skip.txt"), "not media".getBytes)
@@ -51,7 +52,7 @@ class MultimodalSpec extends GraftSpec {
 
   test("media features compose with the vector near-dup operator") {
     // duplicate payload under a new name → near-dup by feature cosine
-    val dupDir = Files.createTempDirectory("graft-media-dup")
+    val dupDir = Paths.get(TempDirs.scratch("graft-media-dup"))
     val payload = Array.tabulate[Byte](400)(i => (i % 251).toByte)
     Files.write(java.nio.file.Paths.get(dupDir.toString, "x.img"), payload)
     Files.write(java.nio.file.Paths.get(dupDir.toString, "y.img"), payload)
@@ -112,7 +113,7 @@ class MultimodalSpec extends GraftSpec {
   }
 
   test("decode+featurize with the real decoder flags garbage rows, keeps good ones") {
-    val mixDir = Files.createTempDirectory("graft-media-mix")
+    val mixDir = Paths.get(TempDirs.scratch("graft-media-mix"))
     val img = new java.awt.image.BufferedImage(
       4, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
     val baos = new java.io.ByteArrayOutputStream()

@@ -4,9 +4,10 @@ import graft.catalog.VectorCatalog
 import graft.embed.DeterministicEmbedder
 import graft.ingest.{PdfParser, PdfText, Readers}
 import graft.rag.Ingest
+import graft.util.TempDirs
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The dependency-free PDF extractor (SURVEY §2 S2): fixture PDFs are
   * built IN-TEST (correct xref, FlateDecode streams via the JDK
@@ -229,7 +230,7 @@ class PdfSpec extends GraftSpec {
   }
 
   test("binaryFile reader explodes PDF pages as rows (S2)") {
-    val dir = Files.createTempDirectory("graft-pdf-dir")
+    val dir = Paths.get(TempDirs.scratch("graft-pdf-dir"))
     Files.write(dir.resolve("report.pdf"), buildPdf(Seq(
       pageContent("Revenue grew forty percent in the third quarter"),
       pageContent("Gross margin expanded to sixty eight percent")),
@@ -243,7 +244,7 @@ class PdfSpec extends GraftSpec {
   }
 
   test("Ingest.run round-trips a mixed txt+pdf corpus into the index") {
-    val dir = Files.createTempDirectory("graft-pdf-ingest")
+    val dir = Paths.get(TempDirs.scratch("graft-pdf-ingest"))
     Files.writeString(dir.resolve("notes.txt"),
       "Plain text document about vector databases and retrieval")
     Files.write(dir.resolve("filing.pdf"), buildPdf(Seq(
@@ -251,7 +252,7 @@ class PdfSpec extends GraftSpec {
       pageContent("Liquidity remains robust across segments")),
       compress = true))
     val catalog = new VectorCatalog(spark,
-      Files.createTempDirectory("graft-pdf-cat").toString)
+      TempDirs.scratch("graft-pdf-cat"))
     val index = Ingest.run(spark, catalog, dir.toString, "pdfmix",
       new DeterministicEmbedder(64))
     val rows = index.read.select("text", "source").collect()

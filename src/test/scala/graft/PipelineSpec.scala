@@ -3,9 +3,8 @@ package graft
 import graft.catalog.VectorCatalog
 import graft.embed.DeterministicEmbedder
 import graft.pipeline.TrainingDataPipeline
+import graft.util.TempDirs
 import org.apache.spark.sql.functions._
-
-import java.nio.file.Files
 
 class PipelineSpec extends GraftSpec {
   import spark.implicits._
@@ -20,7 +19,7 @@ class PipelineSpec extends GraftSpec {
     ).toDF("text", "source")
 
     val catalog  = new VectorCatalog(spark,
-      Files.createTempDirectory("graft-pipe-cat").toString)
+      TempDirs.scratch("graft-pipe-cat"))
     val embedder = new DeterministicEmbedder(32)
     val (index, counts) = TrainingDataPipeline.run(
       spark, catalog, corpus, "pipe-idx", embedder,
@@ -51,7 +50,7 @@ class PipelineSpec extends GraftSpec {
       ("completely unrelated content with many distinct words in this row here", "a3")
     ).toDF("text", "source")
     val catalog  = new VectorCatalog(spark,
-      Files.createTempDirectory("graft-pipe-cat2").toString)
+      TempDirs.scratch("graft-pipe-cat2"))
     val (_, counts) = TrainingDataPipeline.run(
       spark, catalog, corpus, "pipe-idx2", new DeterministicEmbedder(16),
       TrainingDataPipeline.Config(languages = Set("en"), nearDupBands = 4))
@@ -69,7 +68,7 @@ class PipelineSpec extends GraftSpec {
       ("the end", "c4")
     ).toDF("text", "source")
     val catalog = new VectorCatalog(spark,
-      Files.createTempDirectory("graft-pipe-cat3").toString)
+      TempDirs.scratch("graft-pipe-cat3"))
     val (index, counts) = TrainingDataPipeline.run(
       spark, catalog, corpus, "pipe-idx3", new DeterministicEmbedder(16),
       TrainingDataPipeline.Config(languages = Set("en"),

@@ -3,6 +3,7 @@ package graft
 import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
 import graft.embed.{DeterministicEmbedder, HttpShapedEmbedder}
 import graft.rag.{Ingest, Rag}
+import graft.util.TempDirs
 
 import java.nio.file.{Files, Paths}
 
@@ -15,7 +16,7 @@ import java.nio.file.{Files, Paths}
 class RagSpec extends GraftSpec {
 
   private lazy val dataDir = {
-    val dir = Files.createTempDirectory("graft-docs")
+    val dir = Paths.get(TempDirs.scratch("graft-docs"))
     Files.writeString(dir.resolve("quarterly_report.txt"),
       """Quarterly Report Q1 2024
         |
@@ -44,7 +45,7 @@ class RagSpec extends GraftSpec {
     dir.toString
   }
 
-  private lazy val catalogRoot = Files.createTempDirectory("graft-rag-cat").toString
+  private lazy val catalogRoot = TempDirs.scratch("graft-rag-cat")
   private lazy val catalog     = new VectorCatalog(spark, catalogRoot)
   private lazy val embedder    = new DeterministicEmbedder(64)
   private lazy val index       = Ingest.run(spark, catalog, dataDir, "docs", embedder)
@@ -52,7 +53,7 @@ class RagSpec extends GraftSpec {
 
   test("jsonl reader: explicit schema, corrupt lines captured not fatal") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-jsonl")
+    val dir = Paths.get(TempDirs.scratch("graft-jsonl"))
     Files.writeString(dir.resolve("a.jsonl"),
       """{"doc_id": 1, "text": "alpha"}
         |{"doc_id": 2, "text": "beta"}
@@ -73,7 +74,7 @@ class RagSpec extends GraftSpec {
 
   test("csv reader: RFC quoting round-trips, bad cells null locally, corrupt line captured") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = Paths.get(TempDirs.scratch("graft-csv"))
     Files.writeString(dir.resolve("a.csv"),
       "1,\"hello, \"\"world\"\"\"\n" + // RFC 4180 quoted comma + doubled quote
         "x2,bad id cell\n" +          // non-numeric id -> corrupt, text survives
@@ -216,7 +217,7 @@ class RagSpec extends GraftSpec {
   }
 
   test("truncation caps retrieved text at 200 chars + ellipsis") {
-    val longDir = Files.createTempDirectory("graft-long")
+    val longDir = Paths.get(TempDirs.scratch("graft-long"))
     Files.writeString(longDir.resolve("long.txt"),
       "spark " * 200 + "needle fact here")
     val idx = Ingest.run(spark, catalog, longDir.toString, "long-docs", embedder)

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.VectorMeanAgg
 import graft.operators.Scale
+import graft.util.TempDirs
 import org.apache.spark.sql.functions._
 
 class ScaleSpec extends GraftSpec {
@@ -99,7 +100,7 @@ class ScaleSpec extends GraftSpec {
 
   test("date-partitioned layout prunes partitions on a date filter") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = TempDirs.scratch("graft-part")
     val events = Tables.events(spark, sfDir).limit(2000)
       .withColumn("day", to_date(col("ts")))
     Scale.writePartitioned(events, dir, "day")
@@ -143,7 +144,7 @@ class ScaleSpec extends GraftSpec {
   }
 
   test("compaction collapses a small-file explosion and preserves the data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = TempDirs.scratch("graft-compact") + "/t"
     val li  = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
     li.repartition(64).write.parquet(dir)
     val before = new java.io.File(dir).listFiles()

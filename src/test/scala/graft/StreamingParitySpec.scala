@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.StreamingQueries
+import graft.util.TempDirs
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,8 +44,8 @@ class StreamingParitySpec extends GraftSpec {
     // partition dirs.
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.streaming.StreamingIngest
-    val dir  = java.nio.file.Files.createTempDirectory("graft-partfreeze-").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-partfreeze-ckpt-").toString
+    val dir  = TempDirs.scratch("graft-partfreeze-")
+    val ckpt = TempDirs.scratch("graft-partfreeze-ckpt-")
     val ev = Tables.events(spark, sfDir)
       .select(col("ts"), col("event_type"), col("value"), col("event_id"))
     ev.filter(col("event_id") % 2 === 0).write.parquet(s"$dir/data")

@@ -3,11 +3,12 @@ package graft
 import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
 import graft.embed.DeterministicEmbedder
 import graft.streaming.{StreamRunner, StreamingIngest}
+import graft.util.TempDirs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException, StreamingQueryListener, StreamingQueryProgress, Trigger}
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class StreamingSpec extends GraftSpec {
 
@@ -60,7 +61,7 @@ class StreamingSpec extends GraftSpec {
     val prev = spark.conf.get(key)
     spark.conf.set(key, "3")
     try {
-      val dir = Files.createTempDirectory("graft-drain").toString
+      val dir = TempDirs.scratch("graft-drain")
       Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k").write.parquet(s"$dir/in")
       val stream = spark.readStream.schema("id LONG, k STRING").parquet(s"$dir/in")
 
@@ -100,9 +101,9 @@ class StreamingSpec extends GraftSpec {
   }
 
   test("file-source streaming ingest: landing files flow into the index") {
-    val landing    = Files.createTempDirectory("graft-landing")
-    val checkpoint = Files.createTempDirectory("graft-ckpt").toString
-    val catRoot    = Files.createTempDirectory("graft-stream-cat").toString
+    val landing    = Paths.get(TempDirs.scratch("graft-landing"))
+    val checkpoint = TempDirs.scratch("graft-ckpt")
+    val catRoot    = TempDirs.scratch("graft-stream-cat")
     val catalog    = new VectorCatalog(spark, catRoot)
     val embedder   = new DeterministicEmbedder(16)
     val index = VectorIndex.createOrConnect(spark, catalog,
@@ -136,7 +137,7 @@ class StreamingSpec extends GraftSpec {
 
   test("stream-stream interval join attributes clicks within the window") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ssj").toString
+    val dir = TempDirs.scratch("graft-ssj")
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def ts(sec: Long) = new java.sql.Timestamp(base.getTime + sec * 1000)
 
@@ -172,7 +173,7 @@ class StreamingSpec extends GraftSpec {
 
   test("left-outer interval join emits negatives only for watermark-closed windows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ssj-outer").toString
+    val dir = TempDirs.scratch("graft-ssj-outer")
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def ts(sec: Long) = new java.sql.Timestamp(base.getTime + sec * 1000)
 
@@ -217,7 +218,7 @@ class StreamingSpec extends GraftSpec {
     import spark.implicits._
     import graft.streaming.StreamingIngest.{ClosedSession, UserEvent}
 
-    val dir = Files.createTempDirectory("graft-sess").toString
+    val dir = TempDirs.scratch("graft-sess")
     // two users; user 1 has two sessions split by a >10min gap that
     // spans the two input files (forces cross-batch state)
     val m = 60L * 1000000L
@@ -264,7 +265,7 @@ class StreamingSpec extends GraftSpec {
   test("streaming SCD2 closes versions across micro-batches; open stays in state") {
     import spark.implicits._
     import graft.streaming.StreamingIngest.{ClosedVersion, ScdChange}
-    val dir = Files.createTempDirectory("graft-scd").toString
+    val dir = TempDirs.scratch("graft-scd")
     // batch 1: key 1 opens A at 10 (with a same-ts tie loser B@tie1);
     // batch 2: A->B at 20 closes [10,20), B->B at 25 collapses,
     //          B->C at 30 closes [20,30); C stays OPEN (state only)
@@ -298,7 +299,7 @@ class StreamingSpec extends GraftSpec {
   test("streaming SCD2 drops cross-batch same-ts duplicates (no zero-length interval)") {
     import spark.implicits._
     import graft.streaming.StreamingIngest.{ClosedVersion, ScdChange}
-    val dir = Files.createTempDirectory("graft-scd-dup").toString
+    val dir = TempDirs.scratch("graft-scd-dup")
     // batch 1 installs A@10 as current. batch 2 redelivers ts=10 with a
     // DIFFERENT attr (an at-least-once source's late duplicate — its
     // tie-break already ran when A won in batch 1): it must be dropped,
@@ -328,7 +329,7 @@ class StreamingSpec extends GraftSpec {
   test("idle users' final sessions flush via the processing-time timeout") {
     import spark.implicits._
     import graft.streaming.StreamingIngest.{ClosedSession, UserEvent}
-    val dir = Files.createTempDirectory("graft-sess-idle").toString
+    val dir = TempDirs.scratch("graft-sess-idle")
     val m = 60L * 1000000L
     def ev(uid: Long, us: Long, v: Double) =
       UserEvent(uid, new java.sql.Timestamp(us / 1000L), us, v)
@@ -355,7 +356,7 @@ class StreamingSpec extends GraftSpec {
   test("event-time flush closes an idle session when the watermark passes the horizon") {
     import spark.implicits._
     import graft.streaming.StreamingIngest.{ClosedSession, SessionFlush, UserEvent}
-    val dir = Files.createTempDirectory("graft-sess-evt").toString
+    val dir = TempDirs.scratch("graft-sess-evt")
     val m    = 60L * 1000000L
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def row(uid: Long, minute: Long, v: Double) =
@@ -388,7 +389,7 @@ class StreamingSpec extends GraftSpec {
 
   test("watermarked streaming dedup drops re-delivered events") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dedup-stream").toString
+    val dir = TempDirs.scratch("graft-dedup-stream")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ev(id: Long, offsetS: Int) =
       (id, new java.sql.Timestamp(base.getTime + offsetS * 1000L), s"e$id")
@@ -414,7 +415,7 @@ class StreamingSpec extends GraftSpec {
   }
 
   test("stream-static join enriches a stream with a dimension table") {
-    val dir = Files.createTempDirectory("graft-enrich").toString
+    val dir = TempDirs.scratch("graft-enrich")
     Tables.events(spark, sfDir).limit(200)
       .select("event_id", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(dir)
@@ -437,7 +438,7 @@ class StreamingSpec extends GraftSpec {
   }
 
   test("watermarked windowed aggregation over an events stream") {
-    val dir = Files.createTempDirectory("graft-events").toString
+    val dir = TempDirs.scratch("graft-events")
     Tables.events(spark, sfDir).limit(500)
       .select("ts", "event_type", "value")
       .write.mode("overwrite").parquet(dir)
@@ -474,7 +475,7 @@ class StreamingSpec extends GraftSpec {
       (4L, "completely different content about spark engines"), // fresh
       (5L, "too short")                                     // no shingles -> pass
     ).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-lsh-dedup").toString
+    val dir = TempDirs.scratch("graft-lsh-dedup")
     incoming.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(incoming.schema).parquet(dir)
     val survivors = StreamingIngest.lshDedupStream(stream, corpusBuckets,
@@ -504,7 +505,7 @@ class StreamingSpec extends GraftSpec {
   test("curation column ops compose on a stream: scrub + dedup in one plan") {
     import spark.implicits._
     import graft.functions.TextFunctions.{normalizeText, redactPii}
-    val dir = Files.createTempDirectory("graft-curate-stream").toString
+    val dir = TempDirs.scratch("graft-curate-stream")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def doc(id: Long, offsetS: Int, text: String) =
       (id, new java.sql.Timestamp(base.getTime + offsetS * 1000L), text)
@@ -555,7 +556,7 @@ class StreamingSpec extends GraftSpec {
 
     // two landing files + maxFilesPerTrigger=1 → two real micro-batches:
     // per-arrival exactness must hold batch by batch, not only in total
-    val dir = Files.createTempDirectory("graft-span-stream").toString
+    val dir = TempDirs.scratch("graft-span-stream")
     incoming.filter(col("doc_id") <= 11).coalesce(1).write.parquet(s"$dir/in/f1")
     incoming.filter(col("doc_id") >= 12).coalesce(1).write.parquet(s"$dir/in/f2")
     val stream = spark.readStream.schema(incoming.schema)
@@ -584,7 +585,7 @@ class StreamingSpec extends GraftSpec {
     val corpus = Tables.embeddings(spark, sfDir)
     val qBatch = corpus.filter(col("vec_id") % 7 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val dir = Files.createTempDirectory("graft-knn-stream").toString
+    val dir = TempDirs.scratch("graft-knn-stream")
     qBatch.repartition(3).write.parquet(s"$dir/in")
     val stream = spark.readStream.schema(qBatch.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
