@@ -127,14 +127,6 @@ final class VectorCatalog(spark: SparkSession, root: String) {
   def stats(name: String): Option[IndexStats] =
     get(name).map(new VectorIndex(spark, this, _).stats)
 
-  /** Live count of an index with data: the merge-on-read log keeps
-    * superseded versions per id until compaction, so count distinct ids,
-    * not raw rows. Only `id` is read, under a declared schema: no
-    * schema-inference job.
-    */
-  private[catalog] def countLive(name: String): Long =
-    spark.read.schema("id STRING").parquet(dataPath(name)).distinct().count()
-
   /** Ingest-side resolution (`ingest_documents.py:175-195`): if `base`
     * exists with a different dimension, route to `base-{dim}`.
     */

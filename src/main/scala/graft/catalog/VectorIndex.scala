@@ -7,9 +7,11 @@ import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
-  GenericInternalRow, InterpretedOrdering, JoinedRow, KnownNotNull, Literal, Round, SortOrder,
-  UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BindReferences, BoundReference,
+  Descending, Expression, GenericInternalRow, InterpretedOrdering, JoinedRow, KnownNotNull,
+  Literal, Predicate, Round, SortOrder, UnsafeArrayData, Unevaluable}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -45,15 +47,16 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField
   *
   * [[knn]] bypasses Catalyst: one `SparkContext.runJob` over the
   * snapshot's physical rows (`queryExecution.toRdd`, planned once per
-  * snapshot) with [[VectorIndex.TopK]] as the task — cosine score,
-  * `round(…, 6)` and a bounded k-heap per partition, a ≤ k-row merge on
-  * the driver. The `withColumn(score) → orderBy → limit` plan it
-  * replaces ran the same single job, but on a 2.5k-row index with
+  * snapshot) with [[VectorIndex.TopK]] as the task — metadata filter,
+  * cosine score, `round(…, 6)` and a bounded k-heap per partition, a
+  * ≤ k-row merge on the driver. The `withColumn(score) → orderBy → limit`
+  * plan it replaces ran the same single job, but on a 2.5k-row index with
   * `local[4]` on a 4-core host a request spent ~6 ms in analysis,
   * optimization and planning, ~4 ms closure-cleaning the job's lambda
   * and ~25 ms in the SQL-execution bookkeeping of its two Dataset
-  * actions, around a ~6 ms task. A metadata filter still goes through the planner (analysis
-  * and planning of `filter`, no Dataset action); the scoring does not.
+  * actions, around a ~6 ms task. A filter is only analyzed (~2 ms): its
+  * resolved condition rides in the task, so no request is optimized,
+  * planned or compiled.
   */
 final class VectorIndex(
     spark: SparkSession,
@@ -138,10 +141,11 @@ final class VectorIndex(
     * store without atomic create-exclusive, swap the marker for a
     * conditional PUT — the protocol shape is unchanged.)
     *
-    * The on-disk max is read ONCE per VectorIndex instance (marker
-    * listing, O(batches); parquet footers only for pre-marker legacy
-    * logs) and bumped in memory after each claim: a streaming ingest
-    * upserting hundreds of micro-batches must not re-scan every prior
+    * The markers are the only record of versions: [[upsert]] is the one
+    * writer under an index path, and it claims a marker before it writes.
+    * Their max is listed ONCE per VectorIndex instance (O(batches), no
+    * data read) and bumped in memory after each claim: a streaming ingest
+    * upserting hundreds of micro-batches must not re-list every prior
     * version per batch.
     */
   private var lastVersion: Long = Long.MinValue
@@ -156,8 +160,8 @@ final class VectorIndex(
 
   private def claimVersion(): Long = synchronized {
     val fs = fileSystem
-    if (lastVersion == Long.MinValue) {
-      val markerMax =
+    if (lastVersion == Long.MinValue)
+      lastVersion =
         if (!fs.exists(markersDir)) -1L
         else fs.listStatus(markersDir).foldLeft(-1L) { (m, st) =>
           st.getPath.getName match {
@@ -165,11 +169,6 @@ final class VectorIndex(
             case _             => m
           }
         }
-      val dataMax =
-        if (markerMax >= 0L || liveFiles().isEmpty) markerMax
-        else spark.read.parquet(path).agg(max("_version")).head().getLong(0)
-      lastVersion = math.max(markerMax, dataMax)
-    }
     fs.mkdirs(markersDir)
     var candidate = math.max(lastVersion + 1L, System.currentTimeMillis())
     while (!VectorIndex.createExclusive(fs,
@@ -197,8 +196,9 @@ final class VectorIndex(
 
   /** One state of the log: its fingerprint, the live view materialized
     * on first use, and the live-id count computed on first use. The
-    * count runs its own distinct-id aggregate rather than forcing the
-    * snapshot, so a writer polling [[stats]] never pays for a build.
+    * count runs its own distinct-id aggregate over [[loggedIds]] rather
+    * than forcing the snapshot, so a writer polling [[stats]] never pays
+    * for a build.
     */
   private final class Snapshot(val files: Seq[(String, Long)]) {
     lazy val frame: DataFrame =
@@ -207,8 +207,12 @@ final class VectorIndex(
     /** The frame's physical rows, planned once. */
     lazy val rows: RDD[InternalRow] = frame.queryExecution.toRdd
     lazy val liveCount: Long =
-      if (files.isEmpty) 0L else catalog.countLive(meta.name)
+      if (files.isEmpty) 0L else loggedIds.distinct().count()
   }
+
+  /** `id` of every logged row, superseded ones too, under a declared
+    * schema: no schema-inference job. */
+  private def loggedIds: DataFrame = spark.read.schema("id STRING").parquet(path)
 
   private var cached: Snapshot = _
 
@@ -282,17 +286,9 @@ final class VectorIndex(
     * compacted dir before the aside copy is dropped — [[claimVersion]]'s
     * monotonicity in a fresh JVM reads off the markers, and discarding
     * them would silently demote the protocol to its wall-clock fallback
-    * (a clock-skewed writer could then re-claim a burnt version). A
-    * legacy log without markers gets one synthesized at the
-    * pre-compaction max version for the same reason.
+    * (a clock-skewed writer could then re-claim a burnt version).
     */
   def compact(): Unit = {
-    // capture the pre-compaction max version BEFORE the log is rewritten
-    // to _version = 0 — it seeds the synthesized marker for marker-less
-    // legacy logs
-    val maxVersion =
-      if (liveFiles().nonEmpty) spark.read.parquet(path).agg(max("_version")).head().getLong(0)
-      else 0L
     val deduped = readAt(Long.MaxValue).withColumn("_version", lit(0L))
     val tmp     = s"$path._compact"
     deduped.write.mode("overwrite").parquet(tmp)
@@ -310,22 +306,16 @@ final class VectorIndex(
     }
     val asideMarkers = new org.apache.hadoop.fs.Path(aside, "_commits")
     if (fs.exists(asideMarkers)) fs.rename(asideMarkers, markersDir)
-    else if (maxVersion > 0L) {
-      fs.mkdirs(markersDir)
-      fs.createNewFile(
-        new org.apache.hadoop.fs.Path(markersDir, s"_v$maxVersion.commit"))
-      ()
-    }
     fs.delete(aside, true)
   }
 
   /** Top-k cosine query with optional metadata filter — the reference's
     * `index.query(vector, top_k, filter)` (`pinecone_service.py:148-182`).
     * The live snapshot's columns plus `score` = `round(cosine, 6)`,
-    * ordered by score desc nulls last, then id, as a local frame. A filter
-    * naming a column the index lacks, or comparing a column with an
-    * operand of the wrong type, is the caller's error:
-    * `IllegalArgumentException`, not Spark's `AnalysisException`.
+    * ordered by score desc nulls last, then id, as a local frame. A
+    * filter naming a column the index lacks, comparing a column with an
+    * operand of the wrong type, or not evaluable row by row (a subquery)
+    * is the caller's error: `IllegalArgumentException`.
     */
   def knn(queryVec: Seq[Float], k: Int, filter: Option[Column] = None): DataFrame = {
     val (schema, rows) = topK(queryVec, k, filter)
@@ -343,18 +333,10 @@ final class VectorIndex(
     require(k >= 0, s"k must be >= 0, got $k")
     val snap = snapshot()
     try {
-      val (schema, rows) = filter.fold((snap.frame.schema, snap.rows)) { f =>
-        val base =
-          try snap.frame.filter(f)
-          catch {
-            case e: AnalysisException =>
-              throw new IllegalArgumentException(s"invalid filter: ${e.getMessage}", e)
-          }
-        (base.schema, base.queryExecution.toRdd)
-      }
-      val task  = new VectorIndex.TopK(queryVec.toArray, k, schema)
-      val parts = new Array[Array[InternalRow]](rows.getNumPartitions)
-      spark.sparkContext.runJob(rows, task, parts.indices,
+      val task  = new VectorIndex.TopK(queryVec.toArray, k, snap.frame.schema,
+        filter.map(bound(snap.frame, _)))
+      val parts = new Array[Array[InternalRow]](snap.rows.getNumPartitions)
+      spark.sparkContext.runJob(snap.rows, task, parts.indices,
         (i: Int, best: Array[InternalRow]) => parts(i) = best)
       (task.outputSchema, task.merge(parts))
     } catch {
@@ -363,38 +345,54 @@ final class VectorIndex(
     }
   }
 
+  /** `filter` as Spark's analyzer resolves it over `frame` (type
+    * coercion, time zones, runtime-replaceable functions replaced), bound
+    * to the ordinals of `frame`'s rows: nothing is optimized or planned.
+    */
+  private def bound(frame: DataFrame, filter: Column): Expression = {
+    val analyzed =
+      try frame.filter(filter).queryExecution.analyzed
+      catch { case e: AnalysisException =>
+        throw new IllegalArgumentException(s"invalid filter: ${e.getMessage}", e) }
+    Some(ReplaceExpressions(analyzed)).collect {
+      case Filter(c, child) => BindReferences.bindReference(c, child.output)
+    }.filterNot(_.exists(_.isInstanceOf[Unevaluable])).getOrElse(
+      throw new IllegalArgumentException(s"invalid filter: $filter cannot be evaluated row by row"))
+  }
+
   /** `{total_vector_count, dimension}`: the live-id count, memoized for
     * the log's current state.
     */
   def stats: IndexStats = IndexStats(snapshot().liveCount, meta.dimension)
 
   /** The ids among `ids` that the log holds, all of them live: no write
-    * removes an id. One job reading `id` alone, under a declared schema
-    * and filtered on the set, with no shuffle; none on an empty log.
+    * removes an id. One job over [[loggedIds]] filtered on the set, with
+    * no shuffle; none on an empty log.
     */
   private[graft] def liveAmong(ids: Set[String]): Set[String] =
     if (ids.isEmpty || liveFiles().isEmpty) Set.empty
-    else spark.read.schema("id STRING").parquet(path)
-      .filter(col("id").isin(ids.toSeq: _*))
+    else loggedIds.filter(col("id").isin(ids.toSeq: _*))
       .collect().map(_.getString(0)).toSet
 }
 
 object VectorIndex {
   /** The fused operator behind [[VectorIndex.knn]], over rows of
     * `schema` (the snapshot's columns, which include `id` and
-    * `embedding`). Per partition it scores each row with
+    * `embedding`). Per partition it keeps the rows on which `condition`
+    * (a filter bound to `schema`'s ordinals) is `true`, scores each with
     * `round(cosine_similarity(embedding, query), 6)` — the same
-    * expressions, evaluated interpreted — and keeps a bounded heap of the
-    * k best copied rows, each followed by its score; on the driver
-    * [[merge]] orders the ≤ k rows of every partition and keeps k. One
-    * ordering serves both: score desc nulls last, then id asc, Spark's
-    * own comparison for each type.
+    * expressions, evaluated interpreted, so a request compiles no code —
+    * and keeps a bounded heap of the k best copied rows, each followed by
+    * its score; on the driver [[merge]] orders the ≤ k rows of every
+    * partition and keeps k. One ordering serves both: score desc nulls
+    * last, then id asc, Spark's own comparison for each type.
     *
     * A named class, not a lambda: `SparkContext.runJob` closure-cleans a
     * lambda on every job (~4 ms of reading class bytes out of the Spark
     * jars) and passes any other function object through as it is.
     */
-  private[catalog] final class TopK(query: Array[Float], k: Int, schema: StructType)
+  private[catalog] final class TopK(query: Array[Float], k: Int, schema: StructType,
+      condition: Option[Expression])
       extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
     private val width = schema.length
     // where withColumn("score", …) puts the score: in place of a
@@ -429,7 +427,12 @@ object VectorIndex {
         val heap   = new java.util.PriorityQueue[InternalRow](k, order.reverse) // worst first
         val scored = new GenericInternalRow(1)
         val probe  = new JoinedRow(null, scored)
-        rows.foreach { row =>
+        val kept   = condition.fold(rows) { c =>
+          val keep = Predicate.createInterpreted(c)
+          keep.initialize(context.partitionId())
+          rows.filter(keep.eval)
+        }
+        kept.foreach { row =>
           scored.update(0, score.eval(row))
           if (heap.size < k || order.compare(probe.withLeft(row), heap.peek) < 0) {
             if (heap.size == k) heap.poll()

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Exact top-k similarity search — the reference's one real query operator
@@ -54,11 +55,8 @@ object Knn {
     * `lambda * sim(q, d) - (1 - lambda) * max_{s in picked} sim(d, s)`.
     * The candidate pool is the exact top-`poolSize` by query similarity
     * (distributed scan, [[topK]]-style); the greedy selection over the
-    * pool is inherently sequential and tiny (poolSize <= ~100, like the
-    * reference's k <= 20 driver-side results), so it runs on the driver.
-    * Deterministic: MMR ties resolve to the earlier pool entry (score
-    * desc, id asc), so no Ordering on the id type is needed. Returns
-    * `(idCol, score, mmr, rank)` in pick order.
+    * pool is [[mmrPick]], on the driver. Returns `(idCol, score, mmr,
+    * rank)` in pick order.
     */
   def mmrRerank(
       corpus: DataFrame,
@@ -83,9 +81,31 @@ object Knn {
       .orderBy(col("score").desc, col(idCol))
       .limit(poolSize)
       .collect()
-      .map(r => (r.get(0),
-        r.getAs[scala.collection.Seq[Float]](1).toArray, r.getDouble(2)))
+    val picked = mmrPick(
+      pool.map(r => (r.getAs[scala.collection.Seq[Float]](1).toArray, r.getDouble(2))),
+      k, lambda)
+    val outSchema = StructType(Seq(corpus.schema(idCol).copy(name = idCol),
+      StructField("score", DoubleType, nullable = false),
+      StructField("mmr", DoubleType, nullable = false),
+      StructField("rank", IntegerType, nullable = false)))
+    val rows = picked.zipWithIndex.map { case ((at, m), i) =>
+      Row(pool(at).get(0), pool(at).getDouble(2),
+        BigDecimal(m).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, i + 1)
+    }
+    spark.createDataFrame(rows.asJava, outSchema)
+  }
 
+  /** The greedy MMR selection behind [[mmrRerank]] and
+    * `Rag.retrieveMmr`, over a candidate pool of `(vector, score)` in
+    * pool order (score desc, id asc), every score non-null. The pool is
+    * tiny (poolSize <= ~100, like the reference's k <= 20 driver-side
+    * results) and the pick inherently sequential, so it runs on the
+    * driver. Deterministic: an MMR tie resolves to the earlier pool
+    * entry, so no Ordering on the id type is needed. Returns the picked
+    * pool positions with their MMR values, in pick order.
+    */
+  def mmrPick(pool: scala.collection.IndexedSeq[(Array[Float], Double)], k: Int,
+      lambda: Double): Seq[(Int, Double)] = {
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) {
@@ -97,42 +117,25 @@ object Knn {
       if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
     }
 
-    val picked  = scala.collection.mutable.ArrayBuffer.empty[(Any, Double, Double)]
-    val pickedV = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-    val remaining = scala.collection.mutable.ArrayBuffer.from(pool)
+    val picked    = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
+    val remaining = scala.collection.mutable.ArrayBuffer.from(pool.indices)
     while (picked.length < k && remaining.nonEmpty) {
       // strict > keeps the first-seen candidate on MMR ties, and
-      // `remaining` preserves pool order (score desc, id asc) — so tie
-      // resolution is deterministic without needing an id Ordering
+      // `remaining` preserves pool order
       var bestIdx = -1
       var bestMmr = Double.NegativeInfinity
       var i = 0
       while (i < remaining.length) {
-        val (_, v, s) = remaining(i)
+        val (v, s) = pool(remaining(i))
         val redundancy =
-          if (pickedV.isEmpty) 0.0 else pickedV.iterator.map(p => cos(v, p)).max
+          if (picked.isEmpty) 0.0 else picked.iterator.map(p => cos(v, pool(p._1)._1)).max
         val m = lambda * s - (1.0 - lambda) * redundancy
         if (m > bestMmr) { bestMmr = m; bestIdx = i }
         i += 1
       }
-      val (id, v, s) = remaining.remove(bestIdx)
-      picked += ((id, s, bestMmr))
-      pickedV += v
+      picked += ((remaining.remove(bestIdx), bestMmr))
     }
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      corpus.schema(idCol).copy(name = idCol),
-      org.apache.spark.sql.types.StructField("score",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("mmr",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList(picked.toSeq.zipWithIndex.map { case ((id, s, m), i) =>
-        org.apache.spark.sql.Row(id, s,
-          BigDecimal(m).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, i + 1)
-      }.asJava)
-    spark.createDataFrame(rows, outSchema)
+    picked.toSeq
   }
 
   /** Top-k per query for a query set `(queryIdCol, queryVecCol)`.

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{AnalysisException, Column}
 import org.apache.spark.sql.functions._
 
 /** Pinecone-style metadata filter dictionaries translated to Catalyst
@@ -16,10 +16,10 @@ import org.apache.spark.sql.functions._
   *  - multiple keys in one map AND together (Pinecone semantics)
   *
   * The output is a plain predicate. [[graft.catalog.VectorIndex.knn]]
-  * applies it over the index's materialized live snapshot before
-  * scoring, and resolves it against the snapshot's schema there: an
-  * unknown field or a wrongly typed operand is an
-  * `IllegalArgumentException` (a 422 over HTTP).
+  * analyzes it against the index's live snapshot and evaluates it per
+  * row inside its fused top-k. A caller error — a field Spark cannot
+  * parse as a column name, an unknown field, a wrongly typed operand —
+  * is an `IllegalArgumentException` (a 422 over HTTP).
   */
 object FilterDict {
 
@@ -32,22 +32,24 @@ object FilterDict {
     case "$and" => subFilters(value, "$and").map(toColumn).reduce(_ && _)
     case "$or"  => subFilters(value, "$or").map(toColumn).reduce(_ || _)
     case field =>
+      val c = try col(field) catch { case e: AnalysisException => // such as a`b
+        throw new IllegalArgumentException(s"invalid filter field $field: ${e.getMessage}", e) }
       value match {
         case ops: Map[_, _] =>
           require(ops.nonEmpty, s"empty operator object for $field")
           ops.asInstanceOf[Map[String, Any]].map {
-            case ("$eq", v)  => col(field) === scalar(v, "$eq")
-            case ("$ne", v)  => col(field) =!= scalar(v, "$ne")
-            case ("$gt", v)  => col(field) > scalar(v, "$gt")
-            case ("$gte", v) => col(field) >= scalar(v, "$gte")
-            case ("$lt", v)  => col(field) < scalar(v, "$lt")
-            case ("$lte", v) => col(field) <= scalar(v, "$lte")
-            case ("$in", vs) => col(field).isin(values(vs, "$in"): _*)
-            case ("$nin", vs) => !col(field).isin(values(vs, "$nin"): _*)
+            case ("$eq", v)  => c === scalar(v, "$eq")
+            case ("$ne", v)  => c =!= scalar(v, "$ne")
+            case ("$gt", v)  => c > scalar(v, "$gt")
+            case ("$gte", v) => c >= scalar(v, "$gte")
+            case ("$lt", v)  => c < scalar(v, "$lt")
+            case ("$lte", v) => c <= scalar(v, "$lte")
+            case ("$in", vs) => c.isin(values(vs, "$in"): _*)
+            case ("$nin", vs) => !c.isin(values(vs, "$nin"): _*)
             case (op, _) =>
               throw new IllegalArgumentException(s"unsupported filter operator $op")
           }.reduce(_ && _)
-        case v => col(field) === scalar(v, field)
+        case v => c === scalar(v, field)
       }
   }
 

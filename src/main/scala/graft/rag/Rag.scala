@@ -47,8 +47,8 @@ final case class RagAnswer(
 
 /** End-to-end RAG engine (reference `app/rag/chain.py:71-154` +
   * `app/rag/retriever.py:35-95`), Spark-first: retrieval is one job over
-  * the index's materialized live snapshot — filter, then per partition a
-  * fused cosine score and bounded top-k heap, merged on the driver (see
+  * the index's materialized live snapshot — per partition a fused
+  * filter, cosine score and bounded top-k heap, merged on the driver (see
   * [[graft.catalog.VectorIndex]]); only the ≤20 result rows ever reach
   * the driver, and they are read as rows, with no Dataset around them.
   */
@@ -86,28 +86,24 @@ final class Rag(
   }
 
   /** MMR-diversified retrieve (beyond the reference, which only offers
-    * plain similarity): exact top-`poolSize` candidate pool, greedy
-    * maximal-marginal-relevance rerank to `topK` via [[graft.operators
-    * .Knn.mmrRerank]]. Results keep MMR pick order.
+    * plain similarity): the exact top-`poolSize` by query similarity is
+    * [[retrieve]]'s one fused job ([[VectorIndex.knnRows]]) less the
+    * rows that score NULL (zero vectors), then the greedy
+    * maximal-marginal-relevance pick to `topK` runs on the driver through
+    * [[graft.operators.Knn.mmrPick]], the kernel of `Knn.mmrRerank`.
+    * Results keep MMR pick order and carry their rows' metadata.
     */
   def retrieveMmr(question: String, topK: Int = defaultTopK,
       poolSize: Int = 50, lambda: Double = 0.5): Seq[RetrievedDoc] = {
     require(topK >= 1 && topK <= 20, "top_k must be in [1, 20]")
+    require(poolSize >= topK, s"need top_k <= poolSize, got top_k=$topK pool=$poolSize")
     val qvec = embedder.embedOne(question).toSeq
-    val snap = index.read
-    val picked = graft.operators.Knn
-      .mmrRerank(snap, "id", "embedding", qvec, topK, poolSize, lambda)
-      .collect()
-      .map(r => (r.getAs[String]("id"), r.getAs[Double]("score"),
-        r.getAs[Int]("rank")))
-    if (picked.isEmpty) return Seq.empty
-    val meta = snap
-      .filter(org.apache.spark.sql.functions.col("id")
-        .isin(picked.map(_._1).toSeq: _*))
-      .collect()
-      .map(r => r.getAs[String]("id") -> r).toMap
-    picked.sortBy(_._3).toSeq.map { case (id, score, _) =>
-      rowToDoc(meta(id), id, score)
+    val pool = index.knnRows(qvec, poolSize).toIndexedSeq
+      .filterNot(r => r.isNullAt(r.fieldIndex("score")))
+    val vectors = pool.map(r =>
+      (r.getAs[scala.collection.Seq[Float]]("embedding").toArray, r.getAs[Double]("score")))
+    graft.operators.Knn.mmrPick(vectors, topK, lambda).map { case (at, _) =>
+      rowToDoc(pool(at), pool(at).getAs[String]("id"), vectors(at)._2)
     }
   }
 

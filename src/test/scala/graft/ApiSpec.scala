@@ -36,6 +36,9 @@ class ApiSpec extends GraftSpec {
       FilterDict.toColumn(Map("x" -> Map("$regex" -> "a"))))
     intercept[IllegalArgumentException](
       FilterDict.toColumn(Map("source" -> Map.empty[String, Any])))
+    // field names Spark's column-name parser rejects
+    intercept[IllegalArgumentException](FilterDict.toColumn(Map("a`b" -> "x")))
+    intercept[IllegalArgumentException](FilterDict.toColumn(Map("`" -> 1)))
   }
 
   test("api mirrors the five endpoints end-to-end") {
@@ -301,7 +304,8 @@ class ApiSpec extends GraftSpec {
           """{"source":{}}""", """{"source":{"$regex":"a"}}""", """{"source":{"$in":[]}}""",
           """{"source":{"$in":"x"}}""", """{"source":{"$eq":{}}}""", """{"source":[1]}""",
           """{"$and":[]}""", """{"$and":[1]}""", """{"$or":{}}""", """{"$and":[{}]}""",
-          """{"a.b":1}""", """{"chunk_index":{"$lt":"abc"}}"""))
+          """{"a.b":1}""", """{"chunk_index":{"$lt":"abc"}}""", """{"a`b":"x"}""",
+          """{"`":1}"""))
         expect(422, "POST", "/api/v1/query",
           s"""{"question":"what was the revenue?","filter":$f}""")
       for (b <- Seq("{}", """{"files":5}""", """{"files":{}}""", """{"files":[1]}""",

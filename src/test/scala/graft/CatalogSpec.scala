@@ -2,6 +2,7 @@ package graft
 
 import graft.catalog.{IndexMeta, VectorCatalog, VectorIndex}
 import graft.functions.VectorFunctions
+import graft.query.FilterDict
 import graft.util.TempDirs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -157,8 +158,11 @@ class CatalogSpec extends GraftSpec {
       .collect().toMap == s2)
     // an as-of BEFORE the first batch is an empty index, not an error
     assert(idx.readAt(vs.head - 1).isEmpty)
-    // compact rewrites to one version: live view unchanged, history gone
-    idx.compact()
+    // compact rewrites to one version: live view unchanged, history gone.
+    // Its jobs are the deduping rewrite's alone; versions come off the
+    // markers, so no max(_version) aggregate runs before it
+    val (compactJobs, _) = jobsOf("compact") { idx.compact() }
+    assert(compactJobs == 3, s"compact ran $compactJobs jobs, expected 3")
     assert(idx.versions == Seq(0L))
     assert(idx.read.select("id", "embedding").as[(String, Seq[Float])]
       .collect().toMap == s2)
@@ -223,8 +227,10 @@ class CatalogSpec extends GraftSpec {
   test("live snapshot: a repeated knn on an unchanged log is one job with no shuffle") {
     val idx = VectorIndex.createOrConnect(spark, cat, IndexMeta("snap-jobs", 3))
     // two versions, so the log's own read would need the dedup window
-    idx.upsert(Seq(("a", Seq(1f, 0f, 0f)), ("b", Seq(0f, 1f, 0f))).toDF("id", "embedding"))
-    idx.upsert(Seq(("b", Seq(0f, 0f, 1f)), ("c", Seq(1f, 1f, 0f))).toDF("id", "embedding"))
+    idx.upsert(Seq(("a", Seq(1f, 0f, 0f), 0), ("b", Seq(0f, 1f, 0f), 1))
+      .toDF("id", "embedding", "chunk_index"))
+    idx.upsert(Seq(("b", Seq(0f, 0f, 1f), 2), ("c", Seq(1f, 1f, 0f), 3))
+      .toDF("id", "embedding", "chunk_index"))
     val q = Seq(1f, 0.5f, 0f)
     assert(idx.knn(q, 2).select("id").as[String].collect().toSeq == Seq("c", "a"))
 
@@ -235,10 +241,29 @@ class CatalogSpec extends GraftSpec {
     assert(knnJobs == 1, s"repeated knn ran $knnJobs jobs, expected 1")
     assert(knnShuffle == 0L, s"repeated knn shuffled $knnShuffle bytes")
 
+    // a filtered knn is the same one job: the filter is analyzed, never
+    // planned, and evaluated inside the top-k task
+    def below(n: Int) = Some(col("chunk_index") < n)
+    assert(idx.knn(q, 2, below(100)).select("id").as[String].collect().toSeq == Seq("c", "a"))
+    val (filteredJobs, filteredShuffle) = jobsOf("filtered knn") {
+      val hits = idx.knn(q, 2, below(3)).collect()
+      assert(hits.map(_.getAs[String]("id")).toSeq == Seq("a", "b"))
+    }
+    assert(filteredJobs == 1, s"filtered knn ran $filteredJobs jobs, expected 1")
+    assert(filteredShuffle == 0L, s"filtered knn shuffled $filteredShuffle bytes")
+    // ... and compiles nothing: a planned filter is whole-stage code with
+    // its operand inlined, so each distinct operand would compile anew
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before   = compiled.getCount
+    val hits     = (1 to 5).map(n => idx.knn(q, 2, below(n)).select("id").as[String].collect().toSeq)
+    assert(hits == Seq(Seq("a"), Seq("a"), Seq("a", "b"), Seq("c", "a"), Seq("c", "a")))
+    assert(compiled.getCount - before == 0L,
+      s"five filtered knn calls compiled ${compiled.getCount - before} classes")
+
     // the upsert of a local frame is its write job alone: the dimension
     // check rides in the write, the row count comes off the footers
     val (upsertJobs, _) = jobsOf("upsert") {
-      assert(idx.upsert(Seq(("d", Seq(0f, 1f, 1f))).toDF("id", "embedding")) == 1L)
+      assert(idx.upsert(Seq(("d", Seq(0f, 1f, 1f), 4)).toDF("id", "embedding", "chunk_index")) == 1L)
     }
     assert(upsertJobs == 1, s"upsert of a local frame ran $upsertJobs jobs, expected 1")
   }
@@ -335,10 +360,12 @@ class CatalogSpec extends GraftSpec {
       (0 until 4).map(i => s"d$i" -> twin) ++
       (0 until 3).map(i => s"e$i" -> twin.map(_ + 1e-7f * (i + 1)))
     val rows = (random ++ special).zipWithIndex.map { case ((id, v), i) =>
-      (id, v, s"text $i", if (i % 3 == 0) "a.txt" else "b.txt", i)
+      (id, v, s"text $i", if (i % 3 == 0) "a.txt" else "b.txt", i,
+        if (i % 5 == 0) None else Some(s"t${i % 4}"))
     }
     val idx = VectorIndex.createOrConnect(spark, cat, IndexMeta("topk-eq", dim))
-    idx.upsert(rows.toDF("id", "embedding", "text", "source", "chunk_index").repartition(4))
+    idx.upsert(rows.toDF("id", "embedding", "text", "source", "chunk_index", "tag")
+      .repartition(4))
     // build the snapshot with one partition per shuffle partition, so the
     // driver-side merge of several partitions' heaps runs
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
@@ -360,8 +387,23 @@ class CatalogSpec extends GraftSpec {
   // rows as text: a NaN inside an embedding never equals itself under ==
   private def shown(rows: Seq[org.apache.spark.sql.Row]): Seq[String] = rows.map(_.toString)
 
+  // every FilterDict shape, a NULL operand and a column holding NULLs
+  // (`tag`), where a row is kept only when the filter is true
   private val topKFilters: Seq[Option[Column]] = Seq(None,
-    Some(col("source") === "a.txt"), Some(col("chunk_index") < 50))
+    Some(col("source") === "a.txt"), Some(col("chunk_index") < 50)) ++
+    Seq[Map[String, Any]](
+      Map("source" -> Map("$ne" -> "a.txt")),
+      Map("chunk_index" -> Map("$in" -> Seq(3, 7, 100, 250, 407))),
+      Map("chunk_index" -> Map("$nin" -> (0 until 400 by 2))),
+      Map("chunk_index" -> Map("$gte" -> 100, "$lte" -> 180)),
+      Map("$or" -> Seq(Map("source" -> "a.txt"), Map("chunk_index" -> Map("$gt" -> 300)))),
+      Map("source" -> null),
+      Map("tag" -> Map("$ne" -> "t1")),
+      Map("tag" -> Map("$nin" -> Seq("t1", "t2"))),
+      Map("tag" -> Map("$in" -> Seq("t3", null)))
+    ).map(f => Some(FilterDict.toColumn(f))) ++
+    // functions the analyzer leaves for the optimizer to replace
+    Seq(Some(col("text").ilike("TEXT 1%")), Some(nvl(col("tag"), lit("none")) === "none"))
 
   test("fused knn matches the Catalyst top-k: rows, scores, column order and schema") {
     val idx  = topKIndex
@@ -403,6 +445,9 @@ class CatalogSpec extends GraftSpec {
       assert(g.schema == w.schema && shown(g.collect().toSeq) == shown(w.collect().toSeq))
     }
     assert(scored.knn(q, 1).columns.toSeq == Seq("id", "embedding", "score", "text"))
+    // the top-k task evaluates a filter row by row, which a subquery is not
+    intercept[IllegalArgumentException](
+      scored.knn(q, 1, Some(col("text") === spark.range(1).select(lit("t1")).scalar())))
   }
 
   test("fused knn: concurrent calls on an unchanged index answer as a single thread does") {

@@ -136,6 +136,36 @@ class RagSpec extends GraftSpec {
     assert(rag.retrieveMmr(q, topK = 3, poolSize = 8) == mmr)
   }
 
+  test("mmr retrieve equals Knn.mmrRerank over the live view, in one job") {
+    import spark.implicits._
+    // the ingested chunks plus two zero vectors, which score NULL and
+    // can never join the pool
+    val idx = VectorIndex.createOrConnect(spark, catalog, IndexMeta("mmr-pool", 64))
+    idx.upsert(index.read.unionByName(Seq(
+      ("zero-a", Seq.fill(64)(0f), "zero a", "zero.txt", 0),
+      ("zero-b", Seq.fill(64)(0f), "zero b", "zero.txt", 1)
+    ).toDF("id", "embedding", "text", "source", "chunk_index")))
+    val mmrRag = new Rag(spark, idx, embedder)
+    val scorable = index.read.count().toInt
+    val texts = idx.read.collect().map(r => r.getAs[String]("id") -> r.getAs[String]("text")).toMap
+    val q = "What was the total revenue in Q1 2024?"
+    val qvec = embedder.embedOne(q).toSeq
+    for ((topK, poolSize, lambda) <- Seq((3, 8, 0.5), (1, 1, 0.5), (4, 4, 0.0), (5, 12, 1.0),
+        (3, scorable + 5, 0.3), (math.min(scorable, 20), 50, 0.7))) {
+      val got  = mmrRag.retrieveMmr(q, topK, poolSize, lambda)
+      val want = graft.operators.Knn
+        .mmrRerank(idx.read, "id", "embedding", qvec, topK, poolSize, lambda)
+        .collect().sortBy(_.getAs[Int]("rank"))
+        .map(r => (r.getAs[String]("id"), r.getAs[Double]("score"))).toSeq
+      val what = s"topK=$topK poolSize=$poolSize lambda=$lambda"
+      assert(got.map(d => (d.id, d.score)) == want, what)
+      assert(got.forall(d => d.text == texts(d.id) && d.source != "zero.txt"), what)
+    }
+    assert(scorable < 50 && mmrRag.retrieveMmr(q, 20, 50).length == math.min(scorable, 20))
+    val (jobs, _) = jobsOf("mmr retrieve") { mmrRag.retrieveMmr(q, 3, 50) }
+    assert(jobs == 1, s"retrieveMmr ran $jobs jobs, expected 1")
+  }
+
   test("empty index returns the no-documents answer") {
     val emptyIdx = VectorIndex.createOrConnect(spark, catalog, IndexMeta("empty", 64))
     val r = new Rag(spark, emptyIdx, embedder).invoke("anything?")
