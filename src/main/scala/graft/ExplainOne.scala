@@ -108,7 +108,7 @@ object ExplainOne {
     ("q0D_quantiles", "distributed exact quantiles (round-5 rewrite): value-frequency selection -- one scan explodes the requested columns into a partial-aggregated (group, column, value) -> count table (shuffle carries distinct-value cardinality, not rows), running sum in value order assigns rank ranges, <=2 covering rows per quantile interpolate. NO exact-percentile ObjectHashAggregate buffer anywhere (PlanAuditSpec bans it registry-wide)"),
     ("q78_span_keep_one", "keep-one-copy span dedup: the window-hash dictionary aggregate also elects each duplicated window's canonical min-(doc, s) occurrence; non-canonical hits alone feed the island merge. Same three linear keyed exchanges as q74 -- the election adds one column to the dictionary, not a join"),
     ("q57_pdf_ingest", "PDF ingest round-trip: binaryFile scan -> typed flatMap page explode (object path, NOT a ScalaUDF -- per-file parsing is imperative by nature and parallelizes across files), then pure codegen'd projection. One narrow map, zero shuffles before the final sort"),
-    ("q2D_bloom_screen", "Bloom contamination screen: the set-bit table (<= d*w rows by construction) BROADCASTS into the probe join -- the training side never shuffles for membership; the exact-join comparison broadcasts the benchmark shingle set the same way. One keyed exchange total (the per-doc aggregate)"),
+    ("q2D_bloom_screen", "Bloom contamination screen: the set-bit table (<= d*w rows by construction) BROADCASTS into the probe join -- the training side never shuffles for membership; the exact-join comparison broadcasts the benchmark shingle set the same way. The training side's one exchange is the doc_id fan-out after its scan; its per-doc aggregate reuses that partitioning"),
     ("q2E_bpe_pairs", "BPE pair statistics: corpus explodes ONCE into the distinct-word frequency table (map-side combine bounds that shuffle to vocab), pairs explode from the word table (vocabulary-sized, not corpus-sized), pair aggregate partial-combines again. TakeOrderedAndProject cuts the top-20"),
     ("q6I_weighted_sample", "DSIR Gumbel-top-k resample: q6G's weight pipeline (broadcast log-ratio table, pool streams through one narrow join) + a narrow key map, then TakeOrderedAndProject -- per-partition k-heaps, partitions*k rows to the merge, NO global sort of the weighted pool"),
     ("q2H_hll_distinct", "from-scratch HyperLogLog: one narrow md5 map per occurrence, register table via (source, j) groupBy MAX (partial-aggregated -- the shuffle carries <= groups*m register rows, never occurrences), integer-exact 2^(33-r) register sum, one closed-form division. The exact countDistinct side it is priced against carries distinct-value state; the sketch side is the 100 TB path"),

@@ -9,13 +9,15 @@ import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftBridge, 
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BindReferences, BoundReference,
   Descending, Expression, GenericInternalRow, InterpretedOrdering, JoinedRow, KnownNotNull,
-  Literal, Predicate, Round, SortOrder, UnsafeArrayData, Unevaluable}
+  LeafExpression, Literal, Predicate, Round, SortOrder, UnsafeArrayData, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType,
+  StructField, StructType}
 
 /** A named vector index: parquet data dir + catalog meta, with
   * upsert-by-id last-wins semantics (Pinecone upsert,
@@ -106,7 +108,8 @@ final class VectorIndex(
     // the documented crash cost.
     val fs     = fileSystem
     val staged = new org.apache.hadoop.fs.Path(s"$path/.staged_v$version")
-    try checked.select(declared :+ lit(version).as("_version"): _*)
+    try checked.select(declared :+ GraftBridge.column(VectorIndex.BatchVersion(version))
+        .as("_version"): _*)
       .write.mode("overwrite").parquet(staged.toString)
     catch {
       case e: Exception =>
@@ -346,8 +349,11 @@ final class VectorIndex(
   }
 
   /** `filter` as Spark's analyzer resolves it over `frame` (type
-    * coercion, time zones, runtime-replaceable functions replaced), bound
-    * to the ordinals of `frame`'s rows: nothing is optimized or planned.
+    * coercion, time zones, runtime-replaceable functions replaced), its
+    * constant subexpressions evaluated here, bound to the ordinals of
+    * `frame`'s rows: nothing is optimized or planned. Folding on the
+    * driver rejects an operand that cannot be cast to its column's type
+    * (`chunk_index < "abc"`) before any job runs.
     */
   private def bound(frame: DataFrame, filter: Column): Expression = {
     val analyzed =
@@ -355,7 +361,9 @@ final class VectorIndex(
       catch { case e: AnalysisException =>
         throw new IllegalArgumentException(s"invalid filter: ${e.getMessage}", e) }
     Some(ReplaceExpressions(analyzed)).collect {
-      case Filter(c, child) => BindReferences.bindReference(c, child.output)
+      case Filter(c, child) => BindReferences.bindReference(c.transform {
+        case e if e.foldable && !e.isInstanceOf[Literal] => Literal.create(e.eval(), e.dataType)
+      }, child.output)
     }.filterNot(_.exists(_.isInstanceOf[Unevaluable])).getOrElse(
       throw new IllegalArgumentException(s"invalid filter: $filter cannot be evaluated row by row"))
   }
@@ -450,6 +458,19 @@ object VectorIndex {
         toRow(new GenericInternalRow(withScore(values, hit.get(width, DoubleType)))).asInstanceOf[Row]
       }
     }
+  }
+
+  /** An upsert batch's `_version`, read at run time. A literal would be
+    * inlined into the write's generated code, and every batch claims a
+    * new version, so every upsert would compile its write anew (2
+    * classes) and fill Spark's codegen cache; this compiles once per
+    * batch shape.
+    */
+  private final case class BatchVersion(version: Long)
+      extends LeafExpression with CodegenFallback {
+    override def nullable: Boolean = false
+    override def dataType: DataType = LongType
+    override def eval(input: InternalRow): Any = version
   }
 
   /** Atomic create-exclusive: true for exactly one of several racing

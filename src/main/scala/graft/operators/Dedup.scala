@@ -634,8 +634,13 @@ object Dedup {
       .distinct()
       .localCheckpoint()
     // und is symmetrized (both directions), so the undirected edge count
-    // is half its row count
-    if (und.count() <= 2L * driverMaxEdges) return ccDriver(und)
+    // is half its row count. One capped collect in ascending order both
+    // decides the path and hands the driver path its rows; a negative
+    // cap collects nothing (limit 0, no job) and always propagates
+    val cap  = 2L * driverMaxEdges
+    val rows = und.orderBy("src", "dst")
+      .limit((cap + 1L).max(0L).min(Int.MaxValue.toLong).toInt).collect()
+    if (rows.length <= cap) return ccDriver(und, rows)
     val idType = und.schema("src").dataType
     var labels = und.select(col("src").as("node")).distinct()
       .withColumn("root", col("node"))
@@ -670,12 +675,12 @@ object Dedup {
     labels
   }
 
-  /** Driver-side union-find for small graphs. Min-root labels without
-    * needing an Ordering on the (generic) id type: nodes are scanned in
-    * the engine's ascending sort order, and the first node seen in each
-    * component names it.
+  /** Driver-side union-find for small graphs over `und`'s rows, sorted
+    * by `src`. Min-root labels without needing an Ordering on the
+    * (generic) id type: nodes are scanned in the engine's ascending sort
+    * order, and the first node seen in each component names it.
     */
-  private def ccDriver(und: DataFrame): DataFrame = {
+  private def ccDriver(und: DataFrame, sorted: Array[org.apache.spark.sql.Row]): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
@@ -684,12 +689,12 @@ object Dedup {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    und.collect().foreach { row =>
+    sorted.foreach { row =>
       val (ra, rb) = (find(row.get(0)), find(row.get(1)))
       if (ra != rb) parent(rb) = ra
     }
-    val nodesAsc = und.select(col("src")).distinct().orderBy(col("src"))
-      .collect().map(_.get(0))
+    // und is symmetric, so its src values are all its nodes
+    val nodesAsc = sorted.iterator.map(_.get(0)).distinct
     val rootLabel = scala.collection.mutable.HashMap.empty[Any, Any]
     val rows: java.util.List[org.apache.spark.sql.Row] =
       new java.util.ArrayList(nodesAsc.map { n =>

@@ -395,7 +395,7 @@ object CurationQueries {
     // Gopher-style repetition: top word-2-gram frequency fraction per doc.
     "q63_repetition_2gram" -> { (s, d) =>
       Curation.topNgramFraction(
-          Tables.documents(s, d).repartition(s.sparkContext.defaultParallelism),
+          graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id")),
           "doc_id", "text", n = 2)
         .select(col("doc_id"), col("n_grams"),
           round(col("top_fraction"), 6).as("top_fraction"))
@@ -412,8 +412,7 @@ object CurationQueries {
     // Benchmark contamination: 4-gram overlap of each training doc (id % 50
     // != 0) against the held-out benchmark docs (id % 50 == 0).
     "q65_contamination" -> { (s, d) =>
-      val docs  = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val docs  = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
       val bench = docs.filter(col("doc_id") % 50 === 0)
       val train = docs.filter(col("doc_id") % 50 =!= 0)
       Curation.contamination(train, bench, "doc_id", "text", shingleN = 4)
@@ -973,8 +972,7 @@ object CurationQueries {
     // vs the pool, keep the top 100. The log-ratio table is a broadcast
     // 4096-bucket aggregate; the pool streams through one narrow join.
     "q6G_importance_weights" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val docs = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
       Curation.importanceWeights(
           raw = docs.filter(col("doc_id") % 20 =!= 0),
           target = docs.filter(col("doc_id") % 20 === 0),
@@ -988,8 +986,7 @@ object CurationQueries {
     // docs without replacement, deterministic under any partitioning.
     // TakeOrderedAndProject: per-partition k-heaps, no global sort.
     "q6I_weighted_sample" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val docs = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
       val weights = Curation.importanceWeights(
         raw = docs.filter(col("doc_id") % 20 =!= 0),
         target = docs.filter(col("doc_id") % 20 === 0),
@@ -1003,8 +1000,7 @@ object CurationQueries {
     // the id % 10 == 0 slice scores EVERY doc by average bigram negative
     // log-likelihood + perplexity (low = looks like the reference slice).
     "q6H_lm_perplexity" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val docs = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
       Curation.lmScore(docs, docs.filter(col("doc_id") % 10 === 0),
           "doc_id", "text")
         .orderBy("doc_id")
@@ -1021,8 +1017,7 @@ object CurationQueries {
     // bit-stable.
     "q8P_ppl_buckets" -> { (s, d) =>
       import graft.operators.Quantiles
-      val docs = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val docs = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
       val scored = Curation.lmScore(docs,
           docs.filter(col("doc_id") % 10 === 0), "doc_id", "text")
         .select(col("doc_id"), col("avg_nll"))

@@ -247,11 +247,9 @@ object DedupQueries {
         .orderBy("name")
     },
 
-    // SimHash 64-bit signatures (repartition: 64 interpreted md5 votes
-    // per token on a 1-file scan would otherwise run on one core).
+    // SimHash 64-bit signatures.
     "q34_simhash" -> { (s, d) =>
-      Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
         .select(col("doc_id"), Dedup.simhash64(col("text")).as("simhash"))
         .orderBy("doc_id")
     },
@@ -260,7 +258,7 @@ object DedupQueries {
     // pigeonhole join — the scale path that avoids the quadratic scan.
     "q35_simhash_pairs" -> { (s, d) =>
       Dedup.simhashPairsBlocked(
-        Tables.documents(s, d).repartition(s.sparkContext.defaultParallelism),
+        graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id")),
         "doc_id", "text", maxDist = 2)
         .orderBy("dist", "doc_a", "doc_b")
     },

@@ -15,6 +15,12 @@ object PipelineQueries {
 
   private def duckCosine(a: String, b: String): String = DuckSql.cosine(a, b)
 
+  /** `doc_id` of the first `n` documents, fanned out: the keys the
+    * synthetic media generators expand into images, clips and videos. */
+  private[queries] def mediaIds(s: SparkSession, d: String, n: Int): DataFrame =
+    graft.util.Scans.fanOut(
+      Tables.documents(s, d).filter(col("doc_id") < n).select("doc_id"), col("doc_id"))
+
   /** Sparse part↔supplier bipartite graph for q4W/q4X: rare
     * (quantity ≥ 49) lineitems as edges, suppliers offset by 10^6 into
     * an id space disjoint from parts.
@@ -353,10 +359,7 @@ object PipelineQueries {
     // with the reference's 500/50 config — not SQL-expressible; parity is
     // covered by ChunkerSpec goldens.
     "q50_chunk_recursive" -> { (s, d) =>
-      // repartition: chunking is compute-heavy per row and the fixture is
-      // a single parquet file (1 scan partition)
-      val docs = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val docs = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
       val chunked = new graft.ingest.Chunker(500, 50).chunk(docs, "text")
       chunked.select(col("doc_id"), col("chunk_index"),
           col("chunk_text"), length(col("chunk_text")).as("chunk_len"))
@@ -367,8 +370,8 @@ object PipelineQueries {
     // mapPartitions with batch-32 grouping.
     "q51_embed_documents" -> { (s, d) =>
       val embedded = graft.embed.EmbedOps.embedText(
-        Tables.documents(s, d).select("doc_id", "text")
-          .repartition(s.sparkContext.defaultParallelism),
+        graft.util.Scans.fanOut(
+          Tables.documents(s, d).select("doc_id", "text"), col("doc_id")),
         "text", new graft.embed.DeterministicEmbedder(64))
       // c0 (first component) pins the murmur-trigram hash math in the
       // oracle — norm alone is ~1.0 for every non-empty doc
@@ -390,8 +393,7 @@ object PipelineQueries {
     // plumbing is what's under test) into per-source feature stats.
     "q54_media_features" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val media = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val media = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
         .select(col("doc_id"), col("source"),
           encode(col("text"), "UTF-8").as("content"))
       val feat = Multimodal.decodeAndFeaturize(media,
@@ -415,9 +417,7 @@ object PipelineQueries {
     // (width, height) classes.
     "q56_image_decode" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 50).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 50)
       val decoded = Multimodal.decodeAndFeaturize(
         Multimodal.syntheticPngs(ids, "doc_id"), new Multimodal.ImageIoDecoder)
       decoded.select(
@@ -444,9 +444,7 @@ object PipelineQueries {
     // recomputes every bit from the pixel formula without a codec.
     "q5G_image_phash" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 50).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 50)
       Multimodal.aHash(Multimodal.syntheticPngs(ids, "doc_id"))
         .filter(col("ahash_ok"))
         .groupBy("phash_hi", "phash_lo")
@@ -466,9 +464,7 @@ object PipelineQueries {
     // arithmetically — blocking is a plan choice, not semantics.
     "q5H_image_near_dup" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 200).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 200)
       val hashed = Multimodal.aHash(Multimodal.syntheticSpikedPngs(ids, "doc_id"))
         .filter(col("ahash_ok"))
       Multimodal.imageNearDupPairs(hashed, "doc_id", maxDist = 3)
@@ -486,9 +482,7 @@ object PipelineQueries {
     // IS semantics, not just a plan choice.
     "q5M_image_near_dup_capped" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 200).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 200)
       val hashed = Multimodal.aHash(Multimodal.syntheticSpikedPngs(ids, "doc_id"))
         .filter(col("ahash_ok"))
       Multimodal.imageNearDupPairs(hashed, "doc_id", maxDist = 3,
@@ -537,9 +531,7 @@ object PipelineQueries {
     "q5I_image_near_dup_clusters" -> { (s, d) =>
       import graft.multimodal.Multimodal
       import graft.operators.Graph
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 200).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 200)
       val hashed = Multimodal.aHash(Multimodal.syntheticSpikedPngs(ids, "doc_id"))
         .filter(col("ahash_ok"))
       val pairs = Multimodal.imageNearDupPairs(hashed, "doc_id", maxDist = 3)
@@ -562,9 +554,7 @@ object PipelineQueries {
     // shuffle.
     "q5J_video_fingerprint" -> { (s, d) =>
       import graft.multimodal.{Avi, Multimodal}
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 50).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 50)
       val frames = Avi.sampleFrames(
         Avi.syntheticAvis(ids, "doc_id"), stride = 2, maxFrames = 3)
       val hashed = Multimodal.aHash(frames.drop("content"),
@@ -592,13 +582,11 @@ object PipelineQueries {
     // quadratic cross-set distance.
     "q5L_incremental_image_dedup" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val corpusIds = Tables.documents(s, d)
-        .filter(col("doc_id") < 200).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val corpusIds = mediaIds(s, d, 200)
       val incomingIds = Tables.documents(s, d)
         .filter(col("doc_id") >= 200 && col("doc_id") < 240)
         .select(col("doc_id"), (col("doc_id") % 200).as("content_id"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(graft.util.Scans.fanOut(_, col("doc_id")))
       val corpus = Multimodal.aHash(
           Multimodal.syntheticSpikedPngs(corpusIds, "doc_id"))
         .filter(col("ahash_ok"))
@@ -623,13 +611,11 @@ object PipelineQueries {
     // dist is band-independent), so the oracle is q5L's verbatim.
     "q5R_image_near_dup_bucketed" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val corpusIds = Tables.documents(s, d)
-        .filter(col("doc_id") < 200).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val corpusIds = mediaIds(s, d, 200)
       val incomingIds = Tables.documents(s, d)
         .filter(col("doc_id") >= 200 && col("doc_id") < 240)
         .select(col("doc_id"), (col("doc_id") % 200).as("content_id"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(graft.util.Scans.fanOut(_, col("doc_id")))
       val corpus = Multimodal.aHash(
           Multimodal.syntheticSpikedPngs(corpusIds, "doc_id"))
         .filter(col("ahash_ok"))
@@ -736,9 +722,7 @@ object PipelineQueries {
     // and grouping without parsing a byte.
     "q5K_audio_fingerprint" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 50).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 50)
       Multimodal.audioEnergyFingerprint(
           Multimodal.syntheticToneWavs(ids, "doc_id"), windows = 8)
         .filter(col("afp_ok"))
@@ -758,9 +742,7 @@ object PipelineQueries {
     // sampling map, or the re-encode breaks the hash.
     "q5B_image_resize" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 50).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 50)
       val resized = Multimodal.resizeNearest(
         Multimodal.syntheticPngs(ids, "doc_id"), outW = 8, outH = 8)
       val decoded = Multimodal.decodeAndFeaturize(
@@ -785,9 +767,7 @@ object PipelineQueries {
     // by an oracle that replays the pixel formula arithmetically.
     "q5C_video_frames" -> { (s, d) =>
       import graft.multimodal.{Avi, Multimodal}
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 50).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 50)
       val frames = Avi.sampleFrames(
         Avi.syntheticAvis(ids, "doc_id"), stride = 2, maxFrames = 3)
       // drop the full container payload before the frame decode: every
@@ -816,9 +796,7 @@ object PipelineQueries {
     // MultimodalSpec instead).
     "q5F_mjpeg_frames" -> { (s, d) =>
       import graft.multimodal.{Avi, Multimodal}
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 40).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 40)
       val frames = Avi.sampleFrames(
         Avi.syntheticMjpegAvis(ids, "doc_id"), stride = 2, maxFrames = 3)
       val decoded = Multimodal.decodeAndFeaturize(
@@ -844,9 +822,7 @@ object PipelineQueries {
     // alignment, channel interleave, sign handling) breaks the hash.
     "q58_audio_decode" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val ids = Tables.documents(s, d)
-        .filter(col("doc_id") < 50).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val ids = mediaIds(s, d, 50)
       val decoded = Multimodal.decodeAndFeaturize(
         Multimodal.syntheticWavs(ids, "doc_id"), new Multimodal.WavPcmDecoder)
       decoded.select(
@@ -873,8 +849,8 @@ object PipelineQueries {
       import java.nio.file.{Files, Paths}
       import java.nio.charset.StandardCharsets.UTF_8
       val dir = graft.util.TempDirs.scratch("graft-mixed-corpus-")
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
+      graft.util.Scans.fanOut(
+          Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
         .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
           rows.foreach { r =>
             val id = r.getLong(0); val t = r.getString(1)
@@ -937,8 +913,8 @@ object PipelineQueries {
       import java.nio.file.{Files, Paths}
       import java.nio.charset.StandardCharsets.UTF_8
       val dir = graft.util.TempDirs.scratch("graft-gz-corpus-")
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
+      graft.util.Scans.fanOut(
+          Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
         .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
           rows.foreach { r =>
             val out = new java.util.zip.GZIPOutputStream(
@@ -973,8 +949,8 @@ object PipelineQueries {
     "q5O_warc_ingest" -> { (s, d) =>
       import graft.ingest.Warc
       val dir = graft.util.TempDirs.scratch("graft-warc-corpus-")
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
+      graft.util.Scans.fanOut(
+          Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
         .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
           Warc.writeSegment(rows.map(r => (r.getLong(0), r.getString(1))),
             dir, "http://corpus.local/doc/", gzip = false)
@@ -999,8 +975,8 @@ object PipelineQueries {
     "q5Q_warc_gz_ingest" -> { (s, d) =>
       import graft.ingest.Warc
       val dir = graft.util.TempDirs.scratch("graft-warcgz-corpus-")
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
+      graft.util.Scans.fanOut(
+          Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
         .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
           Warc.writeSegment(rows.map(r => (r.getLong(0), r.getString(1))),
             dir, "http://corpus.local/doc/", gzip = true)
@@ -1031,8 +1007,8 @@ object PipelineQueries {
     "q5T_warc_charset" -> { (s, d) =>
       import graft.ingest.Warc
       val dir = graft.util.TempDirs.scratch("graft-warc-charset-")
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
+      graft.util.Scans.fanOut(
+          Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
         .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
           val date = "2024-01-01T00:00:00Z"
           Warc.writeRecords(rows.map { r =>
@@ -1247,8 +1223,8 @@ object PipelineQueries {
     "q57_pdf_ingest" -> { (s, d) =>
       import java.nio.file.{Files, Paths}
       val dir = graft.util.TempDirs.scratch("graft-pdfcorpus-")
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
+      graft.util.Scans.fanOut(
+          Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
         .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
           rows.foreach { r =>
             Files.write(
@@ -1874,8 +1850,7 @@ object PipelineQueries {
       // Checkpointed, the predicates see a plain column: the fused
       // kernel's last-document memo then collapses them to ONE stats
       // pass + 24 memcmps per row.
-      val curated = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val curated = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
         .select(col("doc_id"), redactPii(normalizeText(col("text"))).as("text"))
         .localCheckpoint()
       // post-barrier the predicates are one memo'd kernel pass per row;

@@ -869,9 +869,7 @@ object StreamingQueries {
     // q77 shape for pixels). Emitted rows equal the batch q5L result.
     "q7R_stream_image_dedup" -> { (s, d) =>
       import graft.multimodal.Multimodal
-      val corpusIds = Tables.documents(s, d)
-        .filter(col("doc_id") < 200).select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism)
+      val corpusIds = PipelineQueries.mediaIds(s, d, 200)
       val corpus = Multimodal.aHash(
           Multimodal.syntheticSpikedPngs(corpusIds, "doc_id"))
         .filter(col("ahash_ok"))
@@ -908,13 +906,10 @@ object StreamingQueries {
       val schema = s.read.parquet(s"$d/lineitem.parquet").schema
       val liStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "lineitem.parquet").parquet(d)
-      // stateless fan-out shuffle before the per-row md5 probes (r12):
-      // the single-row-group micro-batch otherwise computes every probe
-      // in ONE task before the stateful grid aggregate (see q7A note)
       val streamedCells = StreamRunner.runToBatch(
         Sketch.cmsTable(
           liStream.select(col("l_orderkey").cast("string").as("t"))
-            .repartition(s.sparkContext.defaultParallelism, col("t")),
+            .transform(graft.util.Scans.streamFanOut(_, col("t"))),
           "t", depth = 4, width = width, salt = "jsz"),
         OutputMode.Complete)
       val est = streamedCells.select(col("j"), col("b"), col("c").as("ca"))

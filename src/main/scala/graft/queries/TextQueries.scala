@@ -428,8 +428,7 @@ object TextQueries {
     // join, which at 100 TB would ship the full benchmark shingle set.
     "q2D_bloom_screen" -> { (s, d) =>
       import graft.operators.Sketch
-      val docs = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val docs = graft.util.Scans.fanOut(Tables.documents(s, d), col("doc_id"))
       val benchSh = docs.filter(col("doc_id") % 50 === 0)
         .select(explode(wordShingles(col("text"), 4)).as("sh")).distinct()
       val bloom = Sketch.bloomBits(benchSh, "sh", depth = 4, width = 32768)

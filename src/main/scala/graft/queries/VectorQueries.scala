@@ -493,8 +493,7 @@ object VectorQueries {
       val qvec = e.filter(col("vec_id") === 0).head()
         .getAs[scala.collection.Seq[Float]]("embedding").toSeq
       val encoded = Quantize.pqEncode(
-        e.filter(col("vec_id") =!= 0)
-          .repartition(s.sparkContext.defaultParallelism),
+        graft.util.Scans.fanOut(e.filter(col("vec_id") =!= 0), col("vec_id")),
         "embedding", model)
       Quantize.pqTopK(encoded, "vec_id", model, qvec, 10)
     },
@@ -534,8 +533,7 @@ object VectorQueries {
     // vectors — 200K rows at sf0.1) to exercise scan-scoring throughput;
     // fully oracle-checkable since the expansion is pure SQL.
     "q19_knn_scaled" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val e = graft.util.Scans.fanOut(Tables.embeddings(s, d), col("vec_id"))
       val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
         .select(col("embedding").as("qvec"))
       val big = e

@@ -23,8 +23,7 @@ object RagChain {
     * Spark plan.
     */
   def flagship(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-      .repartition(spark.sparkContext.defaultParallelism)
+    val docs = graft.util.Scans.fanOut(Tables.documents(spark, sfDir), col("doc_id"))
     val chunked = new Chunker(500, 50).chunk(docs, "text")
     val embedder = new DeterministicEmbedder(64)
     // Batch embed via the canonical mapPartitions path (E1) — the same

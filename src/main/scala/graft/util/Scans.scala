@@ -2,48 +2,45 @@ package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Scan-parallelism helpers (optimization rounds 12-13).
+/** The one place a post-scan fan-out is decided: every exchange that
+  * only spreads a scan's rows over the cores goes through [[fanOut]]
+  * (batch) or [[streamFanOut]] (stream), and `src/main` names
+  * `defaultParallelism` nowhere else (HygieneSpec). Exchanges that set a
+  * file or shard count are semantics, not fan-outs, and stay at their
+  * writers.
   *
-  * The driver fixtures are single-file, SINGLE-ROW-GROUP parquet tables;
-  * Spark cannot split a parquet scan below row-group granularity, so
-  * every per-row expression that sits between such a scan and the first
-  * exchange executes in ONE task no matter how many cores the session
-  * has — a 600 k-row md5/tokenize/shingle stage runs single-threaded on
-  * `local[32]`. This is exactly the guide's §2.5 "input skew: one huge
-  * unsplittable file … repartition immediately after the read".
+  * Why a fan-out at all: the driver fixtures are single-file,
+  * single-row-group parquet tables, and Spark cannot split a parquet scan
+  * below row-group granularity, so every per-row expression between such
+  * a scan and the first exchange runs in ONE task however many cores the
+  * session has (a 600 k-row md5/tokenize/shingle stage single-threaded on
+  * `local[32]`).
   *
-  * [[fanOut]] makes that repartition SCALE-ADAPTIVE instead of
-  * unconditional: it fires only when the frame's planned size estimate
-  * is below what the session's default parallelism could split anyway
-  * (small inputs: single-row-group parquet, tiny landing dirs), or when
-  * the plan has NO size estimate at all (the Long.MaxValue
-  * `defaultSizeInBytes` sentinel). On the sentinel: VERDICT r12
-  * hypothesized that foreachBatch micro-batch `LogicalRDD`s report it
-  * and so silently skipped round 12's size-only probe — MEASURED in
-  * r13 to be false on Spark 4.1: the micro-batch LogicalRDD carries
-  * originStats from the source plan (a documents.parquet batch reports
-  * ~65 KB, well under the threshold), so fanOut fires inside
-  * foreachBatch exactly like the batch path. The sentinel branch is
-  * kept as defense-in-depth for RDD-backed frames with no origin stats
-  * (a trigger-bounded micro-batch is the honest fan-out default when
-  * its size is unknowable). At 100 TB a real table scan carries
-  * thousands of row-group splits with a real (finite,
-  * far-below-sentinel) size estimate, the condition is false, and no
-  * shuffle is added. NOTE the condition is size-based, not
-  * splittability-based: a LARGE unsplittable compressed input (one huge
-  * .gz member) still reads as "big" and is not fanned out — this helper
-  * targets small/unknown inputs and single-row-group parquet, not
-  * codec-level unsplittability (ADVICE r12).
+  * What it costs, by scale:
+  *  - Small input (an estimate below `defaultParallelism` max-size scan
+  *    partitions: single-row-group parquet, tiny landing dirs): one hash
+  *    exchange into `defaultParallelism` partitions on the caller's row
+  *    key. A later aggregate, join or window keyed on that column reuses
+  *    the partitioning instead of shuffling again (q63: 4 exchanges at
+  *    the old round-robin sites, 2 now).
+  *  - No estimate (the `Long.MaxValue` sentinel of an RDD-backed frame
+  *    with no origin stats): treated as small, since a trigger-bounded
+  *    micro-batch of unknowable size is the honest fan-out default.
+  *    Measured on Spark 4.1, a foreachBatch micro-batch `LogicalRDD`
+  *    carries its source's stats, so it takes the small branch instead.
+  *  - At scale (an input of at least `defaultParallelism ×
+  *    maxPartitionBytes`, which a real table scan reaches with thousands
+  *    of row-group splits): no exchange at all; the scan's own splits
+  *    are the parallelism. The condition is size-based, not
+  *    splittability-based: one huge unsplittable compressed member still
+  *    reads as big and is not fanned out.
   *
-  * Hash partitioning on a caller-chosen deterministic key (NEVER
-  * round-robin on non-deterministic input) keeps row placement stable
-  * under task retry (SPARK-38388) and skips round-robin's
-  * sort-before-repartition pass.
-  *
-  * Callers must only hand this frames whose downstream result is
-  * partition-independent (aggregations, joins, keyed windows — not
-  * pid-derived sketches or per-partition file writers unless those are
-  * themselves placement-invariant).
+  * The key is a deterministic row key (`doc_id`, `vec_id`), never
+  * round-robin: placement stays stable under task retry (SPARK-38388)
+  * and round-robin's sort-before-repartition pass is skipped. Callers
+  * only hand over frames whose result is placement-independent
+  * (aggregations, joins, keyed windows, writers whose files are read
+  * back as a whole).
   */
 object Scans {
   def fanOut(df: DataFrame, key: Column*): DataFrame = {

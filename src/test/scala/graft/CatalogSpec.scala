@@ -251,6 +251,13 @@ class CatalogSpec extends GraftSpec {
     }
     assert(filteredJobs == 1, s"filtered knn ran $filteredJobs jobs, expected 1")
     assert(filteredShuffle == 0L, s"filtered knn shuffled $filteredShuffle bytes")
+    // an operand that cannot be cast to its column's type is the caller's
+    // error before any job: the cast is folded when the filter is bound
+    val uncastable = Some(FilterDict.toColumn(Map("chunk_index" -> Map("$lt" -> "abc"))))
+    val (uncastableJobs, _) = jobsOf("uncastable filter") {
+      intercept[IllegalArgumentException](idx.knn(q, 2, uncastable))
+    }
+    assert(uncastableJobs == 0, s"an uncastable filter ran $uncastableJobs jobs, expected 0")
     // ... and compiles nothing: a planned filter is whole-stage code with
     // its operand inlined, so each distinct operand would compile anew
     val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
@@ -266,6 +273,22 @@ class CatalogSpec extends GraftSpec {
       assert(idx.upsert(Seq(("d", Seq(0f, 1f, 1f), 4)).toDF("id", "embedding", "chunk_index")) == 1L)
     }
     assert(upsertJobs == 1, s"upsert of a local frame ran $upsertJobs jobs, expected 1")
+  }
+
+  test("upsert: a second batch of the same shape compiles no new classes") {
+    val idx = VectorIndex.createOrConnect(spark, cat, IndexMeta("upsert-codegen", 2))
+    // the upload's shape: a local frame, coalesced into one part file
+    def batch(i: Int) = Seq((s"u$i", Seq(1f, i.toFloat), i))
+      .toDF("id", "embedding", "chunk_index").coalesce(1)
+    idx.upsert(batch(0))
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before   = compiled.getCount
+    assert(idx.upsert(batch(1)) == 1L)
+    assert(compiled.getCount - before == 0L,
+      s"a warm upsert compiled ${compiled.getCount - before} classes")
+    val vs = idx.versions
+    assert(vs.size == 2 && vs == vs.sorted)
+    assert(idx.read.select("id").as[String].collect().toSet == Set("u0", "u1"))
   }
 
   test("live snapshot: concurrent knn during another handle's upsert answers old or new top-k") {

@@ -200,7 +200,8 @@ class DedupSpec extends GraftSpec {
   test("distributed CC: one SQL action per propagation round") {
     // 8-node chain: diameter 7 -> 7 changing rounds + 1 zero-change
     // round = 8 rounds. Actions counted via QueryExecutionListener:
-    // 1 (und.count) + 8 (one changed-count per round, which also
+    // 1 (the capped collect that picks the path: limit 0 here, no job)
+    // + 8 (one changed-count per round, which also
     // materializes the lazy checkpoint) + 1 (final collect) = 10. The
     // pre-round-3 loop ran an EXTRA compare join + isEmpty action per
     // round (18 total), so the bound below fails on that shape.
@@ -231,10 +232,24 @@ class DedupSpec extends GraftSpec {
         Thread.sleep(100)
       val n = actions.size()
       assert(n == 10,
-        s"expected 10 counted actions (1 und.count + 8 per-round counts " +
+        s"expected 10 counted actions (1 capped collect + 8 per-round counts " +
           s"+ 1 collect), saw $n (${actions.toString}) — a second action " +
           "per CC round has crept back in")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("driver CC: a small graph is solved from one sorted collect") {
+    // the dedup cut is its shuffle-map job and its checkpoint job; the
+    // collect that picks the path also carries the rows in node order
+    val edges = Seq((7L, 8L), (8L, 9L), (1L, 2L), (2L, 3L), (20L, 15L)).toDF("a", "b")
+    var labels = Map.empty[Long, Long]
+    val (jobs, _) = jobsOf("driver cc") {
+      labels = Dedup.connectedComponents(edges, "a", "b").collect()
+        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("root")).toMap
+    }
+    assert(labels == Map(7L -> 7L, 8L -> 7L, 9L -> 7L, 1L -> 1L, 2L -> 1L, 3L -> 1L,
+      15L -> 15L, 20L -> 15L))
+    assert(jobs <= 3, s"driver-path connected components ran $jobs jobs, expected <= 3")
   }
 
   test("connected components on an empty edge list is empty (both paths)") {

@@ -26,6 +26,20 @@ class PlanSpec extends GraftSpec {
     assert(!read.contains("l_extendedprice"), s"scan not pruned: $read")
   }
 
+  test("a keyed fan-out is reused by the aggregates on its key (q63)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = SparkEntry.queries("q63_repetition_2gram")(spark, sfDir)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p                        => p
+      }
+    // the doc_id fan-out serves both per-doc aggregates; the other
+    // exchange is the output sort
+    val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 2, plan.toString)
+  }
+
   test("top-k plans TakeOrderedAndProject, not a global sort (O1)") {
     val plan = planOf(
       Tables.orders(spark, sfDir)
