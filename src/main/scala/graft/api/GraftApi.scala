@@ -12,7 +12,8 @@ import java.nio.file.{Files, Paths}
 /** Library mirror of the reference's 5 HTTP endpoints
   * (`app/api/routes.py:178-334`, `app/main.py:76-89`). The HTTP layer
   * itself is deliberately out of scope (any server can wrap these five
-  * methods); the engine semantics live here.
+  * methods); the engine semantics live here. Every endpoint reads and
+  * writes through `index`; `catalog` is the catalog that holds it.
   */
 final case class HealthResponse(status: String, indexReady: Boolean, vectorCount: Long)
 final case class UploadResponse(filesReceived: Int, chunksIndexed: Long)
@@ -68,14 +69,15 @@ final class GraftApi(
     * therefore not picked up by the next one; upload it again.
     *
     * The request's files are already in this process, so they are
-    * ingested on the driver (`Ingest.upsertFiles`): parsing, chunking
-    * and the embedder all run here, not on executors. An upload is at
-    * most two Spark jobs with no shuffle — a probe of the log for the
-    * request's chunk ids, then one write of one part file — and never
-    * counts the index. `chunksIndexed` is the number of chunks newly
-    * live: the request's distinct chunk ids that the log did not hold,
-    * so re-uploading the same files reports 0. A name sent twice in one
-    * request is ingested once, as its last copy (the one on disk).
+    * ingested on the driver (`Ingest.upsertFiles`) into this API's index
+    * handle: parsing, chunking, the embedder and the write of one part
+    * file all run here, not on executors. An upload is at most one Spark
+    * job with no shuffle — a probe of the log for the request's chunk
+    * ids — and never counts the index. `chunksIndexed` is the number of
+    * chunks newly live: the request's distinct chunk ids that the log
+    * did not hold, so re-uploading the same files reports 0. A name sent
+    * twice in one request is ingested once, as its last copy (the one
+    * on disk).
     */
   def uploadBytes(files: Seq[(String, Array[Byte])], landingDir: String): UploadResponse = {
     val dir = Paths.get(landingDir)
@@ -86,7 +88,7 @@ final class GraftApi(
     }
     val last = written.toMap
     if (written.isEmpty) UploadResponse(0, 0L)
-    else UploadResponse(files.size, Ingest.upsertFiles(spark, catalog,
-      written.map(_._1).distinct.map(p => p -> last(p)), index.meta.name, embedder))
+    else UploadResponse(files.size, Ingest.upsertFiles(spark,
+      written.map(_._1).distinct.map(p => p -> last(p)), index, embedder))
   }
 }

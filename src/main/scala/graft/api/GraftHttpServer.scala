@@ -52,7 +52,7 @@ import scala.jdk.CollectionConverters._
   * top-k per partition, no query planning unless the request has a
   * filter — and only the ≤ top_k result rows pass through this process.
   * The snapshot is rebuilt on the first request after the log changes —
-  * an upload here, which ingests its own files through its own index
+  * an upload here, which writes its own files through the served index
   * handle, or any other writer — so the requests between writes skip
   * the log's listing, footers and dedup shuffle. Handlers run on a
   * small fixed thread pool, so a long-running query cannot block

@@ -1,6 +1,8 @@
 package graft.catalog
 
 import graft.functions.CosineSimilarityExpr
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.{SparkThrowable, TaskContext}
@@ -8,16 +10,18 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BindReferences, BoundReference,
-  Descending, Expression, GenericInternalRow, InterpretedOrdering, JoinedRow, KnownNotNull,
-  LeafExpression, Literal, Predicate, Round, SortOrder, UnsafeArrayData, Unevaluable}
+  Cast, Descending, EvalMode, Expression, GenericInternalRow, InterpretedOrdering, JoinedRow,
+  KnownNotNull, LeafExpression, Literal, Predicate, Round, SortOrder, UnsafeArrayData,
+  Unevaluable}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType,
-  StructField, StructType}
+  StringType, StructField, StructType}
 
 /** A named vector index: parquet data dir + catalog meta, with
   * upsert-by-id last-wins semantics (Pinecone upsert,
@@ -68,13 +72,27 @@ final class VectorIndex(
   private val path = catalog.dataPath(meta.name)
 
   /** Schema contract for upserts: `id STRING` + `embedding ARRAY<FLOAT>`
-    * (+ arbitrary metadata columns). Dimension is validated row-wise
-    * inside the one write job — the invariant the reference enforces
+    * (+ arbitrary metadata columns). Dimension is validated row-wise as
+    * the batch is written — the invariant the reference enforces
     * (`pinecone_service.py:126-133`, SURVEY §1.2): a null or
     * wrong-length embedding fails the write with an
     * `IllegalArgumentException`, publishes nothing, and burns the
-    * batch's claimed version. Returns the rows written, read off the
-    * staged part files' footers.
+    * batch's claimed version. Returns the rows written.
+    *
+    * Two writers, one file layout. A batch whose rows already sit in
+    * its plan — its optimized plan is a local relation, as every
+    * upload's is — is written by this thread through Spark's own parquet
+    * writer ([[writeOnDriver]]) as one part file: no Spark job, and the
+    * row count is the rows written. Its dimension check runs when the
+    * optimizer folds the projection into the relation, before anything
+    * is staged. Any other batch (a bulk ingest, a streaming micro-batch)
+    * is one distributed write job, and its row count comes off the
+    * staged part files' footers; the analyzed plan's leaves are tested
+    * first, so such a batch is not optimized twice. Both write the same
+    * rows, parquet schema, footer metadata and codec. The trade at
+    * scale: a huge local relation is written by one driver thread into
+    * one file — but its rows were on the driver already, and shipping
+    * them to one task would write that same file.
     */
   def upsert(df: DataFrame): Long = {
     require(df.columns.contains("id") && df.columns.contains("embedding"),
@@ -92,46 +110,77 @@ final class VectorIndex(
       case (a, f) => GraftBridge.column(if (f.nullable) a else KnownNotNull(a)).as(f.name)
     }
     val version = claimVersion()
+    val batch = checked.select(declared :+ GraftBridge.column(VectorIndex.BatchVersion(version))
+      .as("_version"): _*)
     // stage-then-move: the batch is written to a dot-prefixed dir
     // (invisible to readers — FileInputFormat's hidden-file filter),
     // then its part files rename into the live dir. A failed write or a
     // crash before the move leaves only ignored staging garbage; the
-    // claimed version is burnt (a harmless gap). A crash or a failed
-    // rename MID-loop leaves a TORN batch: some part files of the
-    // claimed version visible, the rest still staged — readers see a
-    // partial upsert until recovery (delete every live part with this
-    // _version, or finish the moves from the surviving .staged dir; both
-    // are listable by the burnt version number). A single-directory-
-    // rename publish would close the window but forces one subdirectory
-    // per version, turning every read into an O(versions) directory
-    // walk — this log keeps reads flat and accepts the torn window as
-    // the documented crash cost.
+    // claimed version is burnt (a harmless gap). A local batch is one
+    // part file, published by one rename. A distributed batch of
+    // several files has a TORN window: a crash or a failed rename
+    // MID-loop leaves some part files of the claimed version visible,
+    // the rest still staged — readers see a partial upsert until
+    // recovery (delete every live part with this _version, or finish
+    // the moves from the surviving .staged dir; both are listable by the
+    // burnt version number). A single-directory-rename publish would
+    // close the window but forces one subdirectory per version, turning
+    // every read into an O(versions) directory walk — this log keeps
+    // reads flat and accepts the torn window as the documented crash
+    // cost.
     val fs     = fileSystem
     val staged = new org.apache.hadoop.fs.Path(s"$path/.staged_v$version")
-    try checked.select(declared :+ GraftBridge.column(VectorIndex.BatchVersion(version))
-        .as("_version"): _*)
-      .write.mode("overwrite").parquet(staged.toString)
-    catch {
-      case e: Exception =>
-        fs.delete(staged, true)
-        val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists {
-          case t: SparkThrowable => t.getCondition == "USER_RAISED_EXCEPTION"
-          case _                 => false
-        }
-        throw if (raised) new IllegalArgumentException(rejected, e) else e
-    }
+    val written =
+      try localRelation(batch).map(writeOnDriver(_, staged)).orElse {
+        batch.write.mode("overwrite").parquet(staged.toString)
+        None
+      }
+      catch {
+        case e: Exception =>
+          fs.delete(staged, true)
+          val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists {
+            case t: SparkThrowable => t.getCondition == "USER_RAISED_EXCEPTION"
+            case _                 => false
+          }
+          throw if (raised) new IllegalArgumentException(rejected, e) else e
+      }
     val parts = fs.listStatus(staged).filter(_.getPath.getName.endsWith(".parquet"))
-    val rows = parts.map { st =>
+    val rows = written.getOrElse(parts.map { st =>
       val footer = ParquetFileReader.open(
         HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
       try footer.getRecordCount finally footer.close()
-    }.sum
+    }.sum)
     parts.foreach { st =>
       require(fs.rename(st.getPath, new org.apache.hadoop.fs.Path(path, st.getPath.getName)),
         s"failed to publish ${st.getPath} into $path")
     }
     fs.delete(staged, true)
     rows
+  }
+
+  /** `batch`'s optimized plan when it is a local relation. The analyzed
+    * plan's leaves are tested first: a batch that reads anything else
+    * cannot fold to one, and is not optimized here.
+    */
+  private def localRelation(batch: DataFrame): Option[LocalRelation] =
+    if (!batch.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else Some(batch.queryExecution.optimizedPlan).collect { case r: LocalRelation => r }
+
+  /** Writes `batch`'s rows as one part file in `dir`, on this thread,
+    * through the writer a distributed parquet write runs in its tasks
+    * (`ParquetFileFormat.prepareWrite` under the session's Hadoop and SQL
+    * settings, then its `OutputWriterFactory`), so the codec, footer
+    * metadata and file name shape are the same. Returns the rows written.
+    */
+  private def writeOnDriver(batch: LocalRelation, dir: org.apache.hadoop.fs.Path): Long = {
+    val job     = Job.getInstance(GraftBridge.hadoopConf(spark))
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, batch.schema)
+    val context = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val file    = new org.apache.hadoop.fs.Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(context)}")
+    val writer  = factory.newInstance(file.toString, batch.schema, context)
+    try batch.data.foreach(writer.write) finally writer.close()
+    batch.data.size.toLong
   }
 
   /** Optimistic commit protocol for the next batch version: a candidate
@@ -270,7 +319,6 @@ final class VectorIndex(
       .orderBy("_version").collect().map(_.getLong(0)).toSeq
 
   private def emptyLike(): DataFrame = {
-    import org.apache.spark.sql.types._
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
@@ -353,7 +401,10 @@ final class VectorIndex(
     * constant subexpressions evaluated here, bound to the ordinals of
     * `frame`'s rows: nothing is optimized or planned. Folding on the
     * driver rejects an operand that cannot be cast to its column's type
-    * (`chunk_index < "abc"`) before any job runs.
+    * (`chunk_index < "abc"`) before any job runs. A cast of a column the
+    * other way round is rejected too, unless it is an up-cast or to a
+    * string: under ANSI `{"source": {"$gt": 1}}` compares
+    * `cast(source as int)`, which would fail row by row inside the task.
     */
   private def bound(frame: DataFrame, filter: Column): Expression = {
     val analyzed =
@@ -361,7 +412,16 @@ final class VectorIndex(
       catch { case e: AnalysisException =>
         throw new IllegalArgumentException(s"invalid filter: ${e.getMessage}", e) }
     Some(ReplaceExpressions(analyzed)).collect {
-      case Filter(c, child) => BindReferences.bindReference(c.transform {
+      case Filter(c, child) =>
+        c.collectFirst {
+          case cast: Cast if !cast.foldable && cast.evalMode == EvalMode.ANSI &&
+              !cast.dataType.isInstanceOf[StringType] &&
+              !Cast.canUpCast(cast.child.dataType, cast.dataType) => cast
+        }.foreach { cast =>
+          throw new IllegalArgumentException(s"invalid filter: $filter casts " +
+            s"${cast.child.sql} to ${cast.dataType.sql}, which can fail row by row")
+        }
+        BindReferences.bindReference(c.transform {
         case e if e.foldable && !e.isInstanceOf[Literal] => Literal.create(e.eval(), e.dataType)
       }, child.output)
     }.filterNot(_.exists(_.isInstanceOf[Unevaluable])).getOrElse(

@@ -240,24 +240,23 @@ object Ingest {
 
   /** The request path: [[upsertDocs]]' pipeline over a request's files,
     * `(path, bytes)` as the landing dir holds them, at the default chunk
-    * size, run on the driver. The bytes are parsed with
-    * `Readers.localDocuments` (the files are not read back), chunked
-    * with `Chunker.split` and embedded in batches here; repeated
+    * size, run on the driver into `index`, the caller's handle (its
+    * dimension is the one checked; no name is resolved). The bytes are
+    * parsed with `Readers.localDocuments` (the files are not read back),
+    * chunked with `Chunker.split` and embedded in batches here; repeated
     * `(source, chunk_index, text)` triples — two identical PDF pages —
     * are dropped before embedding, which is the id dedup without its
-    * shuffle. Two jobs at most: one probe of the log for the request's
-    * ids, then the upsert of one local frame as one part file. Returns
-    * the chunks newly live in the index, the request's ids less those
-    * the log already held.
+    * shuffle. One Spark job at most: the probe of the log for the
+    * request's ids. The rows are a local frame, which `upsert` writes on
+    * the driver as one part file. Returns the chunks newly live in the
+    * index, the request's ids less those the log already held.
     */
   private[graft] def upsertFiles(
       spark: SparkSession,
-      catalog: VectorCatalog,
       files: Seq[(String, Array[Byte])],
-      indexBase: String,
+      index: VectorIndex,
       embedder: Embedder
   ): Long = {
-    val index   = connect(spark, catalog, indexBase, embedder)
     val chunker = new Chunker()
     val chunks = Readers.localDocuments(spark, files).flatMap { case (text, source) =>
       chunker.split(text).zipWithIndex.map { case (chunk, i) => (chunk, source, i) }
@@ -271,7 +270,7 @@ object Ingest {
       // over a local relation the optimizer computes the ids: no job
       val ids   = withIds.select("id").collect().map(_.getString(0)).toSet
       val known = index.liveAmong(ids)
-      index.upsert(withIds.coalesce(1))
+      index.upsert(withIds)
       (ids -- known).size.toLong
     }
   }

@@ -18,6 +18,11 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The Hadoop configuration a write of this session runs under: the
+    * context's, overlaid with the session's SQL settings. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
   /** Unload every cached state-store provider and stop the maintenance
     * thread (they restart lazily on the next streaming query). Each
     * terminated streaming run leaves its providers — with their

@@ -437,7 +437,7 @@ class ApiSpec extends GraftSpec {
     assert(api.upload(Seq("report.txt" -> changed), landing.toString).chunksIndexed == fresh)
   }
 
-  test("upload runs at most two jobs, shuffles nothing and adds one part file, at 200 shuffle partitions") {
+  test("upload runs at most one job, shuffles nothing and adds one part file, at 200 shuffle partitions") {
     val docsDir = Paths.get(TempDirs.scratch("graft-upjobs-docs"))
     Files.writeString(docsDir.resolve("doc1.txt"),
       "The quarterly revenue was $450 million in Q1 2024.")
@@ -461,9 +461,26 @@ class ApiSpec extends GraftSpec {
       try jobsOf("upload") { indexed = api.upload(files, landing).chunksIndexed }
       finally spark.conf.set(key, prior)
     assert(indexed == files.map(f => new Chunker(500, 50).split(f._2).size).sum)
-    assert(jobs <= 2, s"upload ran $jobs jobs, expected at most 2")
+    assert(jobs <= 1, s"upload ran $jobs jobs, expected at most 1")
     assert(shuffle == 0L, s"upload shuffled $shuffle bytes")
     assert(parts == before + 1)
+  }
+
+  test("upload writes through the API's index: an embedder of another dimension is rejected") {
+    val catalog  = new VectorCatalog(spark, TempDirs.scratch("graft-updim-cat"))
+    val index    = VectorIndex.createOrConnect(spark, catalog, IndexMeta("updim-idx", 32))
+    val embedder = new DeterministicEmbedder(16)
+    // an API serves one index with one embedder of its dimension
+    intercept[IllegalArgumentException](new GraftApi(spark, catalog, index, embedder))
+    // the upload path writes into the handle it is given: not into a
+    // fresh updim-idx-16 nobody serves, but through the index's own
+    // dimension check, which refuses the batch and writes nothing
+    val files = Seq("a.txt" -> "Headcount grew to 9,000 employees by December.".getBytes("UTF-8"))
+    intercept[IllegalArgumentException](Ingest.upsertFiles(spark, files, index, embedder))
+    assert(catalog.list().map(_.name) == Seq("updim-idx"))
+    assert(index.stats.totalVectorCount == 0L && index.versions.isEmpty)
+    assert(!new java.io.File(catalog.dataPath("updim-idx")).list()
+      .exists(_.startsWith(".staged_v")))
   }
 
   test("http server: a health round trip does not stall on Nagle's algorithm") {

@@ -55,13 +55,17 @@ class CatalogSpec extends GraftSpec {
     assert(idx.stats.dimension == 3)
 
     // wrong-dimension and null embeddings are rejected, and a rejected
-    // batch leaves the log as it was, with no staging dir behind
+    // batch leaves the log as it was, with no staging dir behind. A local
+    // batch is rejected when its rows are folded, before any job
     val versions = idx.versions
     Seq(
       Seq(("c", Seq(1f, 2f), "t")).toDF("id", "embedding", "text"),
       Seq(("c", Option.empty[Seq[Float]], "t")).toDF("id", "embedding", "text")
     ).foreach { bad =>
-      intercept[IllegalArgumentException](idx.upsert(bad))
+      val (badJobs, _) = jobsOf("rejected upsert") {
+        intercept[IllegalArgumentException](idx.upsert(bad))
+      }
+      assert(badJobs == 0, s"a rejected local batch ran $badJobs jobs, expected 0")
       assert(idx.versions == versions)
       assert(idx.read.count() == 2)
       assert(idx.stats.totalVectorCount == 2)
@@ -258,6 +262,18 @@ class CatalogSpec extends GraftSpec {
       intercept[IllegalArgumentException](idx.knn(q, 2, uncastable))
     }
     assert(uncastableJobs == 0, s"an uncastable filter ran $uncastableJobs jobs, expected 0")
+    // ... and so is a filter that casts a column with a cast that can
+    // fail row by row: under ANSI `id > 1` casts the string column `id`
+    // to a number, which "a" is not
+    val castsColumn = Some(FilterDict.toColumn(Map("id" -> Map("$gt" -> 1))))
+    val (castJobs, _) = jobsOf("column-casting filter") {
+      val e = intercept[IllegalArgumentException](idx.knn(q, 2, castsColumn))
+      assert(e.getMessage.contains("can fail row by row"), e.getMessage)
+    }
+    assert(castJobs == 0, s"a column-casting filter ran $castJobs jobs, expected 0")
+    // an up-cast of a column cannot fail, and still filters
+    val upCast = Some(FilterDict.toColumn(Map("chunk_index" -> Map("$lt" -> 2.5))))
+    assert(idx.knn(q, 2, upCast).select("id").as[String].collect().toSeq == Seq("a", "b"))
     // ... and compiles nothing: a planned filter is whole-stage code with
     // its operand inlined, so each distinct operand would compile anew
     val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
@@ -267,28 +283,76 @@ class CatalogSpec extends GraftSpec {
     assert(compiled.getCount - before == 0L,
       s"five filtered knn calls compiled ${compiled.getCount - before} classes")
 
-    // the upsert of a local frame is its write job alone: the dimension
-    // check rides in the write, the row count comes off the footers
+    // the upsert of a local frame runs no job: its rows are checked as
+    // the optimizer folds them and written on the driver
     val (upsertJobs, _) = jobsOf("upsert") {
       assert(idx.upsert(Seq(("d", Seq(0f, 1f, 1f), 4)).toDF("id", "embedding", "chunk_index")) == 1L)
     }
-    assert(upsertJobs == 1, s"upsert of a local frame ran $upsertJobs jobs, expected 1")
+    assert(upsertJobs == 0, s"upsert of a local frame ran $upsertJobs jobs, expected 0")
   }
 
   test("upsert: a second batch of the same shape compiles no new classes") {
-    val idx = VectorIndex.createOrConnect(spark, cat, IndexMeta("upsert-codegen", 2))
-    // the upload's shape: a local frame, coalesced into one part file
-    def batch(i: Int) = Seq((s"u$i", Seq(1f, i.toFloat), i))
-      .toDF("id", "embedding", "chunk_index").coalesce(1)
-    idx.upsert(batch(0))
-    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    val before   = compiled.getCount
-    assert(idx.upsert(batch(1)) == 1L)
-    assert(compiled.getCount - before == 0L,
-      s"a warm upsert compiled ${compiled.getCount - before} classes")
-    val vs = idx.versions
-    assert(vs.size == 2 && vs == vs.sorted)
-    assert(idx.read.select("id").as[String].collect().toSet == Set("u0", "u1"))
+    // an upload's local frame, written on the driver, and the same rows
+    // behind an exchange, written by a job
+    for ((name, shape) <- Seq[(String, DataFrame => DataFrame)](
+        "upsert-codegen-local" -> identity, "upsert-codegen-dist" -> (_.repartition(1)))) {
+      val idx = VectorIndex.createOrConnect(spark, cat, IndexMeta(name, 2))
+      def batch(i: Int) = shape(Seq((s"u$i", Seq(1f, i.toFloat), i))
+        .toDF("id", "embedding", "chunk_index"))
+      idx.upsert(batch(0))
+      val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val before   = compiled.getCount
+      assert(idx.upsert(batch(1)) == 1L)
+      assert(compiled.getCount - before == 0L,
+        s"$name: a warm upsert compiled ${compiled.getCount - before} classes")
+      val vs = idx.versions
+      assert(vs.size == 2 && vs == vs.sorted)
+      assert(idx.read.select("id").as[String].collect().toSet == Set("u0", "u1"))
+    }
+  }
+
+  test("upsert: a local batch written on the driver is the file a distributed write makes") {
+    val rows = (0 until 50).map(i => (f"id$i%02d", Seq.fill(3)(i * 0.5f), s"text $i",
+      if (i % 7 == 0) None else Some(s"s${i % 3}.txt"), i))
+    val local = rows.toDF("id", "embedding", "text", "source", "chunk_index")
+    /** Each part file's parquet schema, footer key-value metadata and
+      * column codecs. */
+    def footers(idx: VectorIndex): Seq[(String, Map[String, String], Set[String])] =
+      new java.io.File(cat.dataPath(idx.meta.name)).listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+          val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(f.toURI), spark.sparkContext.hadoopConfiguration))
+          try {
+            val meta = footer.getFooter
+            (meta.getFileMetaData.getSchema.toString,
+              meta.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+              meta.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet)
+          } finally footer.close()
+        }
+    val key = "spark.sql.parquet.compression.codec"
+    for (codec <- Seq(None, Some("zstd"))) {
+      val was = spark.conf.getOption(key)
+      codec.foreach(spark.conf.set(key, _))
+      try {
+        val suffix = codec.getOrElse("default")
+        val onDriver = VectorIndex.createOrConnect(spark, cat, IndexMeta(s"driver-$suffix", 3))
+        val byJob    = VectorIndex.createOrConnect(spark, cat, IndexMeta(s"job-$suffix", 3))
+        val (driverJobs, _) = jobsOf("local upsert") { assert(onDriver.upsert(local) == 50L) }
+        val (writeJobs, _)  = jobsOf("distributed upsert") {
+          assert(byJob.upsert(local.repartition(1)) == 50L)
+        }
+        assert(driverJobs == 0 && writeJobs >= 1, s"$driverJobs and $writeJobs jobs")
+        def logged(idx: VectorIndex) =
+          spark.read.parquet(cat.dataPath(idx.meta.name)).drop("_version")
+        assert(logged(onDriver).exceptAll(logged(byJob)).isEmpty &&
+          logged(byJob).exceptAll(logged(onDriver)).isEmpty)
+        val (driverFile, jobFile) = (footers(onDriver), footers(byJob))
+        assert(driverFile.size == 1 && jobFile.size == 1)
+        assert(driverFile == jobFile, s"codec $suffix")
+        codec.foreach(c => assert(driverFile.head._3 == Set(c.toUpperCase)))
+      } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("live snapshot: concurrent knn during another handle's upsert answers old or new top-k") {
@@ -426,7 +490,9 @@ class CatalogSpec extends GraftSpec {
       Map("tag" -> Map("$in" -> Seq("t3", null)))
     ).map(f => Some(FilterDict.toColumn(f))) ++
     // functions the analyzer leaves for the optimizer to replace
-    Seq(Some(col("text").ilike("TEXT 1%")), Some(nvl(col("tag"), lit("none")) === "none"))
+    Seq(Some(col("text").ilike("TEXT 1%")), Some(nvl(col("tag"), lit("none")) === "none")) :+
+    // an int column up-cast to its double operand
+    Some(FilterDict.toColumn(Map("chunk_index" -> Map("$lt" -> 2.5))))
 
   test("fused knn matches the Catalyst top-k: rows, scores, column order and schema") {
     val idx  = topKIndex

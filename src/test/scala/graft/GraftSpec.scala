@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftTestBridge
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,10 +42,15 @@ abstract class GraftSpec extends AnyFunSuite {
     try {
       sc.setJobGroup(group, label)
       body
-      // listener events are async; a job's task ends precede its end
+      // listener events are async: drain what the body's jobs posted (a
+      // job's task ends precede its end). A failed job can post its end
+      // just after its caller returns, so wait for any end still missing.
+      GraftTestBridge.drainListenerBus(sc)
       val deadline = System.nanoTime() + 10000000000L
-      while ((jobs.isEmpty || ended.get() < jobs.size) && System.nanoTime() < deadline)
+      while (ended.get() < jobs.size && System.nanoTime() < deadline) {
         Thread.sleep(20L)
+        GraftTestBridge.drainListenerBus(sc)
+      }
       assert(ended.get() == jobs.size, s"$label: a job never ended on the listener bus")
       (jobs.size, shuffleBytes.get())
     } finally {

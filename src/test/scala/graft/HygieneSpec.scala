@@ -13,6 +13,9 @@ import scala.jdk.CollectionConverters._
   * this spec fails the build when a JDK temp call comes back. Likewise a
   * post-scan fan-out is decided in `graft.util.Scans` alone: an
   * exchange sized by the core count anywhere else is a hand-placed one.
+  * And a parquet file is written on the driver in
+  * `graft.catalog.VectorIndex` alone: any other write goes through
+  * Spark's distributed writer.
   */
 class HygieneSpec extends AnyFunSuite {
 
@@ -29,16 +32,29 @@ class HygieneSpec extends AnyFunSuite {
       s"make scratch dirs with graft.util.TempDirs.scratch: ${offenders.mkString(", ")}")
   }
 
-  test("only graft.util.Scans sizes a fan-out by the core count") {
-    val rule = Paths.get("src/main/scala/graft/util/Scans.scala")
-    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
-      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".scala") && f != rule)
+  /** `src/main` lines outside `rule` that contain any of `words`. */
+  private def mainLinesWith(rule: String, words: String*): Seq[String] = {
+    val owner = Paths.get(rule)
+    Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".scala") && f != owner)
       .flatMap { f =>
         Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("sparkContext.defaultParallelism") => s"$f:${i + 1}"
+          case (line, i) if words.exists(line.contains) => s"$f:${i + 1}"
         }
       }.toSeq
+  }
+
+  test("only graft.util.Scans sizes a fan-out by the core count") {
+    val offenders = mainLinesWith("src/main/scala/graft/util/Scans.scala",
+      "sparkContext.defaultParallelism")
     assert(offenders.isEmpty,
       s"fan out a scan with graft.util.Scans.fanOut: ${offenders.mkString(", ")}")
+  }
+
+  test("only graft.catalog.VectorIndex writes parquet on the driver") {
+    val offenders = mainLinesWith("src/main/scala/graft/catalog/VectorIndex.scala",
+      "ParquetFileFormat", "prepareWrite")
+    assert(offenders.isEmpty,
+      s"write a driver-side batch with VectorIndex.upsert: ${offenders.mkString(", ")}")
   }
 }
